@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`.
@@ -139,17 +137,16 @@ object Bench {
     "graph_random_walks",
     // graph_betweenness_top is declared + oracle/spec-covered but NOT a
     // headline: 32-source Brandes on the dense sf0.1 co-purchase graph
-    // is diameter×|S|-bound by design (24.5 s — GraphProbe is its perf
-    // evidence; a bench slot would just re-measure the probe). Same
-    // rule for graph_node2vec (per-step candidate windows ≈ 3× the
-    // DeepWalk walk cost), pagerank_df, and dijkstra_df (dual-path
-    // twins of non-headline GraphX rows) — GraphProbe times all three.
+    // is diameter×|S|-bound by design (24.5 s — BASELINE.md #64 is its
+    // perf evidence). Same rule for graph_node2vec (per-step candidate
+    // windows ≈ 3× the DeepWalk walk cost, #70), pagerank_df, and
+    // dijkstra_df (dual-path twins of non-headline GraphX rows, #69).
     "asql_hop_projection",
     "asql_hop_chain",
     "text_fertility",
     // round 14: the composed IVF-PQ retrieval (ADC shortlist + exact
     // re-rank), LPA+modularity, and the two new map-only gates; graph_ppr
-    // follows the pagerank_df non-headline rule (GraphProbe times it)
+    // follows the pagerank_df non-headline rule (timed in BASELINE.md #76)
     "sim_ivfpq_topk",
     "graph_lpa_modularity",
     "pipeline_length_buckets",
@@ -157,7 +154,7 @@ object Bench {
     // round 15: the catalog scan (a constant frame — its bench slot
     // proves the spelling never becomes a data scan); the CAPPED
     // node2vec follows the uncapped form's non-headline rule
-    // (GraphProbe times both)
+    // (BASELINE.md #74 and #78 time both)
     "asql_schema_types",
     "pipeline_decontaminate_bloom_sized",
     "sim_ivfpq_residual_topk",
@@ -180,23 +177,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // methods the JVM refuses to JIT (HotSpot's 8000-byte
-      // DontCompileHugeMethods cap) run as interpreted bytecode on
-      // every row at ANY scale — the wide literal-bearing sim/dedup
-      // projections generated such methods and paid ~2 s per execution
-      // (r17 QProbe A/B: sim_ivf exec 2.2 s -> 0.76 s). Falling back to
-      // interpreted Catalyst expressions for those stages is strictly
-      // better; 8000 matches the JIT limit (scale-independent).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
+    val spark = SparkEntry.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/session init shouldn't bill the first query
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -47,14 +47,7 @@ import graft.llmops.{Dedup, Pipeline, TextOps}
 object PipelineE2E {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/sf1probe_r11")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = SparkEntry.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     var acc = List.newBuilder[String]
@@ -340,7 +333,7 @@ object PipelineE2E {
         (r, (System.nanoTime() - w0) / 1e9)
       }
       val evalSet = benchmark.select(col("doc_id"), col("text"))
-      // mBits pinned to 2²⁴ (the RefreshProbe sizing lesson): the
+      // mBits pinned to 2²⁴ (the BASELINE.md #62 sizing lesson): the
       // auto-size targets 12.5% fill ⇒ FP ~2.4e-4/shingle at EVERY
       // benchmark size, which at a small benchmark still FPs a few
       // genuinely fresh arrivals per batch; a 2 MB driver bitmap buys
@@ -367,7 +360,7 @@ object PipelineE2E {
       // index must drop every one — the index holds ALL scrubbed
       // residents' buckets, including later-dropped ones), half
       // genuinely fresh docs (per-id tokens: zero cross-doc shingles,
-      // the RefreshProbe template — survive modulo Bloom FP noise)
+      // the BASELINE.md #62 template — survive modulo Bloom FP noise)
       val dupBase = 900000000L; val freshBase = 950000000L
       // batch sized to the corpus (~1% at the probe scales, floor 50):
       // the claim is batch-bound arrival cost, so the batch must stay

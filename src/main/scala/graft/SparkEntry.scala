@@ -12,6 +12,32 @@ import graft.queries.{ArcadeSqlQueries, DocQueries, GraphQueries, LlmQueries, Q,
   */
 object SparkEntry {
 
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory: every main and the test session start
+    * here and append only their own settings.
+    *
+    * events.parquet carries TIMESTAMP(NANOS), read as long ns and
+    * converted explicitly ([[graft.queries.Qh.events]]) — Spark has no
+    * nanos timestamp. `hugeMethodLimit`: methods the JVM refuses to JIT
+    * (HotSpot's 8000-byte DontCompileHugeMethods cap) run as
+    * interpreted bytecode on every row at ANY scale — the wide
+    * literal-bearing sim/dedup projections generated such methods and
+    * paid ~2 s per execution (BASELINE.md #101: the sim family
+    * 17.0 → 5.0 s). Falling back to interpreted Catalyst expressions
+    * for those stages is strictly better; 8000 matches the JIT limit
+    * (scale-independent). */
+  def builder(cpus: Int = envCpus): SparkSession.Builder = SparkSession.builder()
+    .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.codegen.hugeMethodLimit", "8000")
+
   val all: Seq[Q] =
     Relational.queries ++ GraphQueries.queries ++ LlmQueries.queries ++
       WindowQueries.queries ++ ArcadeSqlQueries.queries ++ DocQueries.queries

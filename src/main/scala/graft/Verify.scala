@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name filter for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long ns and
-      // convert explicitly (Qh.events) — Spark has no nanos timestamp
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // methods the JVM refuses to JIT (HotSpot's 8000-byte
-      // DontCompileHugeMethods cap) run as interpreted bytecode on
-      // every row at ANY scale — the wide literal-bearing sim/dedup
-      // projections generated such methods and paid ~2 s per execution
-      // (r17 QProbe A/B: sim_ivf exec 2.2 s -> 0.76 s). Falling back to
-      // interpreted Catalyst expressions for those stages is strictly
-      // better; 8000 matches the JIT limit (scale-independent).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
+    val spark = SparkEntry.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -23,17 +23,7 @@ import graft.load.{Checksum, GraphLoader}
   */
 object Main {
 
-  def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    // see Bench.scala: stages whose generated method exceeds the JVM
-    // 8000-byte JIT cap run interpreted-bytecode per row; fall back to
-    // interpreted expressions instead (scale-independent)
-    .config("spark.sql.codegen.hugeMethodLimit", "8000")
+  def session(): SparkSession = graft.SparkEntry.builder()
     // FAIR scheduling: the HTTP endpoint assigns one pool per request
     // thread so concurrent queries interleave instead of queueing FIFO
     .config("spark.scheduler.mode", "FAIR")

@@ -36,8 +36,9 @@ import org.apache.spark.sql.functions._
   * monotone in `seq` and arrivals always carry larger `seq` than every
   * resident, and (c) the band index holds ALL resident buckets
   * (including documents the star later dropped), so arrival probes see
-  * exactly what a full-frame intra-run would. [[graft.RefreshProbe]]
-  * hash-asserts this identity end-to-end at the ×10 corpus.
+  * exactly what a full-frame intra-run would. RefreshSpec asserts this
+  * identity verdict-for-verdict; BASELINE.md #62 hash-asserted it at
+  * the ×100 corpus.
   *
   * Declared freshness model (the reference's own: checksum-gated
   * incremental rebuild, `Server.java:98-99,105-119` — stale inputs

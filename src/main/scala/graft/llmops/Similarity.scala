@@ -189,7 +189,7 @@ object Similarity {
     * k·`overfetch` by reconstruction cosine), then the shortlist is
     * re-ranked with EXACT cosine against the uncompressed vectors.
     * Pure PQ ranking at ~16 bits/vector is a coarse signal (recall
-    * measured in `graft.Recall`); the re-rank recovers ranking quality
+    * measured in BASELINE.md #32); the re-rank recovers ranking quality
     * while touching only queries × k × overfetch exact vectors — the
     * shortlist broadcasts onto ONE corpus scan, so the exact stage
     * costs a hash probe per corpus row, never a second full scoring

@@ -79,14 +79,8 @@ object Centrality {
     * family's block layout) pays the build shuffle. 32M rows ≈ 0.5 GB
     * of (u, w) pairs — an order above the measured skip-is-faster band
     * (24M at ×10) and an order below the measured layout-is-vital band
-    * (239M at ×100, BASELINE #73). `GRAFT_BILAYOUT_MIN_ROWS` overrides
-    * for same-session A/B probes only (0 forces the layout everywhere,
-    * a huge value forces the skip) — production callers never set it. */
-  val BiLayoutMinRows: Long =
-    sys.env.get("GRAFT_BILAYOUT_MIN_ROWS").map { v =>
-      v.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_BILAYOUT_MIN_ROWS must be a Long, got '$v'"))
-    }.getOrElse(32L * 1000 * 1000)
+    * (239M at ×100, BASELINE #73). */
+  val BiLayoutMinRows: Long = 32L * 1000 * 1000
 
   /** Multi-source level-synchronous BFS. Returns one frame PER LEVEL
     * of (s, v, sigma = number of distinct shortest s→v paths, exact in

@@ -181,17 +181,14 @@ object Communities {
     * COLLAPSES 20–30× per round on the co-purchase graph, so almost
     * every round is clearly dense or clearly quiet and any gate in
     * that band flips the same rounds. 8 stays as the measured
-    * optimum's centre. `GRAFT_LPA_DENSE_DIV` overrides for
-    * same-session A/B probes only. */
-  val LpaDenseDiv: Long =
-    sys.env.get("GRAFT_LPA_DENSE_DIV").map(_.toLong).getOrElse(8L)
+    * optimum's centre. */
+  val LpaDenseDiv: Long = 8L
 
   /** `biLayout`: a precomputed (checkpointed) bidirectional (src, dst)
     * layout of the same edge set — shared with the centrality family's
     * [[Centrality.biLayout]] by callers serving both (r18); when
     * absent it is built (and size-gated) here. */
   def labelPropagation(edges: DataFrame, iters: Int,
-      denseDiv: Long = LpaDenseDiv,
       biLayout: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, "need at least one round")
     val bi = biLayout.getOrElse {
@@ -233,8 +230,8 @@ object Communities {
     (1 to iters).foreach { t =>
       val prev = labels
       val prevFrontier = frontier
-      // dense while the frontier covers more than 1/denseDiv of the graph
-      val dense = frontierN < 0 || frontierN * denseDiv > nV
+      // dense while the frontier covers more than 1/LpaDenseDiv of the graph
+      val dense = frontierN < 0 || frontierN * LpaDenseDiv > nV
       var touchedRef: Option[DataFrame] = None // released after the round
       val recomputed =
         if (dense) bi

@@ -78,12 +78,7 @@ object Hits {
     // ×10 (6M edges: skip 17.4 s vs layout 16.1 s — the 1.5M-row hub
     // frame no longer broadcasts and every round re-exchanged the edge
     // list). 2M sits between the measured postures.
-    // `GRAFT_HITS_LAYOUT_MIN_EDGES` overrides for same-session probes.
-    val layoutMinEdges = sys.env.get("GRAFT_HITS_LAYOUT_MIN_EDGES")
-      .map { v =>
-        v.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"GRAFT_HITS_LAYOUT_MIN_EDGES must be a Long, got '$v'"))
-      }.getOrElse(2L * 1000 * 1000)
+    val layoutMinEdges = 2L * 1000 * 1000
     val (es, ed) =
       if (ne < layoutMinEdges) (e, e)
       else (

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * re-evaluated it per candidate row, measured 2× worse) followed by a
   * (u, blk)-keyed equi join into the block holding the pick. The block
   * frame is ~(vertices + edges/1024) BOUNDED rows — a mega-hub is
-  * deg/1024 rows of ≤ 8 KB each, never one giant row (the GraphProbe
-  * planted-hub posture), while the per-step build side stays
+  * deg/1024 rows of ≤ 8 KB each, never one giant row (the planted-hub
+  * posture, BASELINE.md #70), while the per-step build side stays
   * vertex-scale, not edge-scale (the plain (u, idx) row form measured
   * 4× slower at ×10 — a 24M-row hash build per step). The walk table
   * stays one row per start for the whole run (the path accumulates

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * m × nCodes × dsub doubles as Literal nodes: at the m=8 × nCodes=256
   * rung those literals made every plan comparison the driver performs
   * (AQE re-optimization, canonicalization) walk ~16k-element arrays,
-  * and the DRIVER side dominated the query's wall (r18 QProbe:
-  * 1.93 s wall vs 0.6 s task time per warm execution). */
+  * and the DRIVER side dominated the query's wall (r18: 1.93 s wall
+  * vs 0.6 s task time per warm execution; VERDICT.md r18 item 1). */
 case class PqDecode(child: Expression, books: Seq[Seq[Seq[Double]]])
     extends UnaryExpression {
 

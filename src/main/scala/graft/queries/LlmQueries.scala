@@ -1384,7 +1384,7 @@ object LlmQueries {
     // ✚ two-stage PQ retrieval (Similarity.pqRerankTopK): codes
     // shortlist top k·8 by reconstruction cosine, exact cosine
     // re-ranks the shortlist — the serving shape that recovers ranking
-    // quality from the 16-bit codes (measured recall: graft.Recall).
+    // quality from the 16-bit codes (measured recall: BASELINE.md #32).
     Q("sim_pq_rerank_topk",
       (s, d) => Similarity.pqRerankTopK(t(s, d, "embeddings"), "vec_id", "embedding",
         4, 16, Seq(0L, 1L, 2L, 3L, 4L), 10)

@@ -37,8 +37,8 @@ object Qh {
     * relation per call — re-listing the directory and re-reading
     * parquet footers for the schema — and every declared query rebuilds
     * its inputs through this helper, so the suite paid that
-    * driver-side catalog cost per query per pass (QProbe r17: 0.3–0.8 s
-    * of pure CONSTRUCTION time on multi-table queries). The cached
+    * driver-side catalog cost per query per pass (BASELINE.md #101:
+    * 0.3–0.8 s of pure CONSTRUCTION time on multi-table queries). The cached
     * value is the RESOLVED HANDLE (logical plan + schema), never data:
     * every execution still scans the parquet files, so nothing is
     * precomputed across runs — this is what a real engine's catalog

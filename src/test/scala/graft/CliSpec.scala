@@ -710,6 +710,8 @@ class CliSpec extends SparkSpec {
         """{"language":"sql","command":"INSERT INTO Part SET id = 3999977, name = 'xyzzy gadget'"}""")._1 == 200)
       val (nc, nb) = asql("SELECT name FROM Part WHERE name CONTAINSTEXT 'xyzzy'")
       assert(nc == 200 && nb.contains("xyzzy gadget"), nb)
+      val (xc, xb) = asql("EXPLAIN SELECT name FROM Part WHERE name CONTAINSTEXT 'xyzzy'")
+      assert(xc == 200 && xb.contains("ft/nodes/Part/name") && xb.contains("LeftSemi"), xb)
       // runtime FULL_TEXT DDL on a fresh property, end to end
       assert(post("command",
         """{"language":"sql","command":"CREATE PROPERTY Part.caption STRING"}""")._1 == 200)
@@ -834,8 +836,14 @@ class CliSpec extends SparkSpec {
       // CHECK … FIX: salvages the lost generations, drops the IN_REGION
       // edges left dangling by the lost Region rows, rebuilds the Part
       // postings — one manifest commit — then reports the healthy state
+      val untouched = genFileStamps(out,
+        "/nodes/Region/", "/edges/IN_REGION/", "/ft/nodes/Part/name/")
       val (c2, b2) = post("command", """{"language":"sql","command":"CHECK DATABASE FIX"}""")
       assert(c2 == 200, b2)
+      // the rewrite is bounded to the damaged labels: every other
+      // generation file survives byte-for-byte (same path, same mtime)
+      assert(genFileStamps(out,
+        "/nodes/Region/", "/edges/IN_REGION/", "/ft/nodes/Part/name/") == untouched)
       assert(b2.contains("\"fix\":\"pruned_generation\""), b2)
       assert(b2.contains("\"fix\":\"dropped_dangling_edges\"") &&
         b2.contains("\"label\":\"IN_REGION\""), b2)
@@ -1024,5 +1032,22 @@ class CliSpec extends SparkSpec {
     intercept[IllegalArgumentException](graft.server.QueryServer.validatePort(70000))
     intercept[IllegalArgumentException](graft.server.QueryServer.validatePort(-1))
     assert(graft.server.QueryServer.validatePort(8080) == 8080)
+  }
+
+  test("one Spark session factory: every main builds through SparkEntry.builder") {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val calls = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex
+        .filter(_._1.contains("SparkSession.builder()"))
+        .map { case (_, i) => s"$p:${i + 1}" })
+      .toList
+    finally walk.close()
+    assert(calls.size == 1 && calls.head.contains("graft/SparkEntry.scala:"),
+      calls.mkString(", "))
+    // specs run on the factory's shipped settings, not a private copy
+    assert(spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 }

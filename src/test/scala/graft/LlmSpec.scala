@@ -2319,6 +2319,13 @@ class LlmSpec extends SparkSpec {
     val plan = cold.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"),
       plan.take(2000))
+    // the 64-bit rung (m=8 × 256 codes) persists and serves the same way
+    val dir64 = java.nio.file.Files.createTempDirectory("ivfpqr64").toString
+    val (cents64, books64) = Similarity.buildIvfPqIndex(
+      emb, "vec_id", "embedding", 8, 8, 256, 256, dir64, residual = true)
+    assert(shape(Similarity.ivfPqIndexTopK(spark, dir64, qids, 2, 10)) ==
+      shape(Similarity.ivfPqResidualTopKWith(
+        emb, "vec_id", "embedding", cents64, books64, 2, qids, 10)))
     // a raw rebuild over the same dir must RETIRE the marker — stale
     // residual decode of raw codes would be silently wrong
     Similarity.buildIvfPqIndex(

@@ -1459,9 +1459,14 @@ class LoadSpec extends SparkSpec {
     // DML append: ONE postings segment joins the list in the SAME
     // manifest (data segment count and ft segment count move together)
     val ftSegs0 = m().ft(("nodes", "Part", "name")).size
+    val gens0 = genFileStamps(out)
     assert(graft.server.Dml.execute(spark, out,
       "INSERT INTO Part SET id = 3999999, name = 'zzuniquetoken gadget'") == 1)
     assert(m().ft(("nodes", "Part", "name")).size == ftSegs0 + 1)
+    // an append only ADDS generations: every existing file is untouched
+    val gens1 = genFileStamps(out)
+    assert(gens0.forall { case (p, t) => gens1.get(p).contains(t) })
+    assert(gens1.size > gens0.size)
     assert(same(post(), recomputed()))
     assert(post().filter(col("tk") === "zzuniquetoken").count() == 1)
 

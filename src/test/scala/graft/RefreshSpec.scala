@@ -125,6 +125,13 @@ class RefreshSpec extends SparkSpec {
       "minor-edit change must re-enter: own predecessor's bands are self-masked")
     val del = deletes.as[Long].collect().toSet
     assert(del === Set(7L, 9L, 10L), s"tombstones = removed ∪ changed, got $del")
+    // arrivals probe the epoch's persisted authorities: the executed
+    // plan never re-reads the resident corpus (a local relation here)
+    val plan = Refresh.process(epoch,
+        newCorpus.withColumn("seq", col("doc_id")).localCheckpoint(true),
+        "doc_id", "seq", "text", "lang")
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("LocalTableScan"), plan.take(2000))
   }
 
   test("exact incrementality: resident ∖ deletes ∪ upserts ≡ full run, verdict-for-verdict") {
