@@ -329,6 +329,16 @@ object Dedup {
       .select(col("cell"), col("d1"), col("d2"), round(col("cos"), 6).as("cos"))
   }
 
+  /** The (id, pos, window-hash) frame every span operator aggregates
+    * over — exposed so a caller serving several span queries at one
+    * (docs, windowTokens) derives (and checkpoints) it once (r18, the
+    * derived-layout discipline). NOT checkpointed here. */
+  def spanWindows(docs: DataFrame, idCol: String, textCol: String,
+      windowTokens: Int): DataFrame =
+    spread(docs).select(col(idCol),
+      posexplode(graft.plans.NGramMd5(TextOps.tokens(col(textCol)), windowTokens, 8)))
+      .withColumnRenamed("col", "h")
+
   /** Duplicate-PASSAGE extraction — dedup at SPAN granularity (the
     * suffix-array substring-dedup result, approximated at fixed window
     * width): find every maximal run of `windowTokens`-token windows
@@ -365,16 +375,6 @@ object Dedup {
     * boilerplate-saturated corpus. Default ∞ reports everything.
     * Returns (id, span_start, span_end, n_windows) with 0-based
     * inclusive token positions. */
-  /** The (id, pos, window-hash) frame every span operator aggregates
-    * over — exposed so a caller serving several span queries at one
-    * (docs, windowTokens) derives (and checkpoints) it once (r18, the
-    * derived-layout discipline). NOT checkpointed here. */
-  def spanWindows(docs: DataFrame, idCol: String, textCol: String,
-      windowTokens: Int): DataFrame =
-    spread(docs).select(col(idCol),
-      posexplode(graft.plans.NGramMd5(TextOps.tokens(col(textCol)), windowTokens, 8)))
-      .withColumnRenamed("col", "h")
-
   def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
       windowTokens: Int, maxDf: Long = Long.MaxValue,
       windows: Option[DataFrame] = None): DataFrame = {

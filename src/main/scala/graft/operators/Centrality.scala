@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * (the per-source-loop shape would pay the full job-launch overhead
   * |S| times). Per level: one edge-sized equi-join (frontier onto the
   * bidirectional edge view), one anti-join against the visited set,
-  * one (source, vertex)-keyed σ-sum (map-side combinable), and ONE
-  * 1-row count for loop control — nothing ever shuffles more than
-  * |S| × edges of the current frontier's incidence. Frontiers
-  * localCheckpoint per level (flat lineage across the fixpoint, and
-  * the backward pass re-reads them).
+  * one (source, vertex)-keyed σ-sum (map-side combinable) — nothing
+  * ever shuffles more than |S| × edges of the current frontier's
+  * incidence. Each level is one [[Rounds.checkpoint]] job (flat
+  * lineage; the backward pass re-reads the levels) whose observed row
+  * count is the loop control.
   *
   * Exactness/sampling: with `sources` = all vertices the results are
   * EXACT (spec-asserted against an in-test sequential Brandes); with a
@@ -38,16 +38,18 @@ import org.apache.spark.sql.functions._
   */
 object Centrality {
 
-  /** Bidirectional view (u → w both ways) of a canonical edge list —
-    * PRE-PARTITIONED on the traversal key `u` before the checkpoint
-    * (localCheckpoint preserves outputPartitioning through LogicalRDD),
-    * so every per-level frontier⋈edges join reuses this layout and
-    * shuffles only the frontier side. Without it the planner re-sorted
-    * and re-exchanged the full edge list EVERY level: invisible at ×10
+  /** Bidirectional view (u → w both ways) of a canonical edge list,
+    * laid out on the traversal key `u` by [[Rounds.probed]], so that
+    * every per-level frontier⋈edges join can reuse this layout and
+    * shuffle only the frontier side (see [[Rounds.probed]] for when
+    * the planner sees it). Without it the planner re-sorted and
+    * re-exchanged the full edge list EVERY level: invisible at ×10
     * (24M rows, 8.8 s packed closeness) and catastrophic at ×100
     * (239M rows — 933 s, 4× the row-form; the ×100 probe caught it).
     * One extra shuffle at build, amortized across all levels of every
-    * caller (closeness, packed waves, betweenness forward+backward).
+    * caller (closeness, packed waves, betweenness forward+backward,
+    * LPA rounds). Shared by callers that serve several of those
+    * queries from one checkpointed source frame (r18).
     *
     * SIZE-CONDITIONAL (r15, VERDICT r14 watch #2): below
     * [[BiLayoutMinRows]] bidirectional rows the build shuffle buys
@@ -57,25 +59,18 @@ object Centrality {
     * frames checkpoint in input layout (the r13 shape). The ×10 probe
     * band (24M bi rows, 8.8 s packed closeness WITHOUT the layout) sits
     * under the threshold; the ×100 band (239M rows, where the missing
-    * layout cost 933 s) sits far above. One cheap `edges.count()`
-    * decides — every caller hands a checkpointed edge frame. */
-  private def biView(edges: DataFrame): DataFrame = {
-    // the canonical (a < b) contract means a SET of edges — the r13
-    // defensive distinct re-exchanged the whole edge list per call for
-    // inputs that are distinct by construction (cooccurrenceEdges ends
-    // in distinct; every spec fixture is a distinct list). Duplicated
-    // input is a caller bug the contract already forbids (r17).
+    * layout cost 933 s) sits far above. The canonical (a < b) contract
+    * means a SET of edges: duplicated input is a caller bug the
+    * contract already forbids (r17), so there is no defensive
+    * distinct. */
+  private[graft] def biLayout(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-    val bi = e.select(col("a").as("u"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("u"), col("a").as("w")))
-    val laid =
-      if (edges.count() * 2 < BiLayoutMinRows) bi
-      else bi.repartition(col("u"))
-        .sortWithinPartitions(col("u")) // SMJ streams it sort-free too
-    laid.localCheckpoint(true)
+    Rounds.probed(e.select(col("a").as("u"), col("b").as("w"))
+      .unionAll(e.select(col("b").as("u"), col("a").as("w"))),
+      "u", BiLayoutMinRows)
   }
 
-  /** Bidirectional-row count above which [[biView]] (and the walk
+  /** Bidirectional-row count above which [[biLayout]] (and the walk
     * family's block layout) pays the build shuffle. 32M rows ≈ 0.5 GB
     * of (u, w) pairs — an order above the measured skip-is-faster band
     * (24M at ×10) and an order below the measured layout-is-vital band
@@ -111,17 +106,12 @@ object Centrality {
     var d = 0
     var more = true
     while (more && d < maxDepth) {
-      // loop control PIGGYBACKS on the checkpoint job via observe()
-      // (r17, guide §1.2): the isEmpty probe was one extra driver
-      // round-trip per level
-      val obs = new org.apache.spark.sql.Observation()
-      val nxt = frontier.join(bi, frontier("v") === bi("u"))
+      val (nxt, m) = Rounds.checkpoint(frontier.join(bi, frontier("v") === bi("u"))
         .select(col("s"), col("w").as("v"), col("sigma"))
         .join(visited, Seq("s", "v"), "left_anti")
-        .groupBy(col("s"), col("v")).agg(sum(col("sigma")).as("sigma"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      more = obs.get("rows").asInstanceOf[Long] > 0L
+        .groupBy(col("s"), col("v")).agg(sum(col("sigma")).as("sigma")),
+        count(lit(1)))
+      more = m.getLong(0) > 0L
       if (more) {
         visited = visited.unionAll(nxt.select(col("s"), col("v")))
           .localCheckpoint(true)
@@ -150,7 +140,7 @@ object Centrality {
     * recursive CTE in DuckDB (`graph_closeness`). */
   def closeness(edges: DataFrame, sources: Seq[Long],
       maxDepth: Int = 40): DataFrame = {
-    val levels = forward(biView(edges), sources, maxDepth)
+    val levels = forward(biLayout(edges), sources, maxDepth)
     val dist = levels.zipWithIndex.map { case (f, d) =>
       f.select(col("s"), lit(d.toLong).as("d"))
     }.reduce(_ unionAll _)
@@ -168,29 +158,6 @@ object Centrality {
         col("harmonic"))
   }
 
-  /** SOURCE-PACKED closeness — the scale path of [[closeness]] (MS-BFS,
-    * Then et al., "The More the Merrier: Efficient Multi-Source Graph
-    * Traversal", VLDB 2014): up to 64 sources ride ONE Long bitmask
-    * per vertex, so each BFS level is one edge-sized join + a
-    * vertex-keyed `bit_or` — the edge list is traversed ONCE per level
-    * regardless of |S|, where the row-per-(source, vertex) shape
-    * ([[forward]]) carries |S| × the touched vertices through every
-    * join. σ path-counting cannot pack (counts, not bits), which is
-    * why betweenness keeps the unpacked pass and closeness gets this
-    * one. More than 64 sources run in ⌈|S|/64⌉ independent packed
-    * waves. Per level the only non-join work is a 64-row per-source
-    * count aggregate (bits explode AFTER the join, never through it)
-    * and the 1-row loop control. Output ≡ [[closeness]] row-for-row
-    * (spec-asserted; the declared `graph_closeness` runs THIS path
-    * against the recursive-CTE oracle). */
-  /** The shared packed-wave driver ([[closenessPacked]] and
-    * [[closenessAll]] differ ONLY in what they take from each level):
-    * seed ≤ 64 sources as one-bit masks, expand level-synchronously
-    * (per level: one edge join + a vertex-keyed `bit_or` + the anti
-    * semantics folded into `arr & ~seen` + ONE 1-row loop control),
-    * and hand each level's fresh-frontier frame (v, frontier) plus its
-    * depth to `payload`. Returns the payload frames, possibly empty
-    * (a wave of all-isolated sources never expands). */
   /** The packed wave's per-level FRESH-FRONTIER frames (v, frontier ≠
     * 0), depth = index + 1 — the shared BFS state both payload shapes
     * ([[closenessPacked]]'s 64-row bit counts and [[closenessAll]]'s
@@ -198,8 +165,10 @@ object Centrality {
     * serving both queries over one source runs the level-synchronous
     * expansion ONCE (each level is an eager checkpoint job — the BFS
     * is the whole build cost of a closeness query) and passes the
-    * levels back through the `shared` parameter. Each frame is a lazy
-    * filter over its level's checkpointed state. */
+    * levels back through the `shared` parameter, which is called with
+    * the wave and `maxDepth` (both shape the levels, so both belong in
+    * the caller's cache key). Each frame is a lazy filter over its
+    * level's checkpointed state. */
   private[graft] def packedFreshLevels(bi: DataFrame, wave: Seq[Long],
       maxDepth: Int): Vector[DataFrame] = {
     val spark = bi.sparkSession
@@ -218,23 +187,18 @@ object Centrality {
         .join(bi, state("v") === bi("u"))
         .groupBy(col("w").as("v"))
         .agg(expr("bit_or(frontier)").as("arr"))
-      // fresh-frontier loop control PIGGYBACKS on the checkpoint job
-      // via observe() (r17): the isEmpty probe was one extra driver
-      // round-trip per level
-      val obs = new org.apache.spark.sql.Observation()
-      val st2 = state.join(msgs, Seq("v"), "full_outer")
-        .select(col("v"),
-          coalesce(col("seen"), lit(0L)).as("s0"),
-          coalesce(col("arr"), lit(0L)).as("a0"))
-        .select(col("v"),
-          (col("s0").bitwiseOR(col("a0"))).as("seen"),
-          (col("a0").bitwiseAND(bitwise_not(col("s0")))).as("frontier"))
-        .observe(obs,
-          count(when(col("frontier") =!= 0L, lit(1))).as("fresh"))
-        .localCheckpoint(true)
+      val (st2, m) = Rounds.checkpoint(
+        state.join(msgs, Seq("v"), "full_outer")
+          .select(col("v"),
+            coalesce(col("seen"), lit(0L)).as("s0"),
+            coalesce(col("arr"), lit(0L)).as("a0"))
+          .select(col("v"),
+            (col("s0").bitwiseOR(col("a0"))).as("seen"),
+            (col("a0").bitwiseAND(bitwise_not(col("s0")))).as("frontier")),
+        count(when(col("frontier") =!= 0L, lit(1))))
       d += 1
       val fresh = st2.filter(col("frontier") =!= 0L)
-      more = obs.get("fresh").asInstanceOf[Long] > 0L
+      more = m.getLong(0) > 0L
       if (more) {
         levels += fresh
         state = st2
@@ -243,10 +207,6 @@ object Centrality {
     levels.result()
   }
 
-  /** [[biView]] as a reusable layout for callers that serve several
-    * centrality queries from one checkpointed source frame (r18). */
-  private[graft] def biLayout(edges: DataFrame): DataFrame = biView(edges)
-
   /** Set-bit positions of the frontier word (the SQL lambda form: the
     * Scala shiftleft() pins numBits to a literal). */
   private val FrontierBits =
@@ -254,15 +214,31 @@ object Centrality {
       "CASE WHEN (frontier & shiftleft(1L, i)) != 0 THEN i END), " +
       "x -> x IS NOT NULL)"
 
+  /** SOURCE-PACKED closeness — the scale path of [[closeness]] (MS-BFS,
+    * Then et al., "The More the Merrier: Efficient Multi-Source Graph
+    * Traversal", VLDB 2014): up to 64 sources ride ONE Long bitmask
+    * per vertex, so each BFS level is one edge-sized join + a
+    * vertex-keyed `bit_or` — the edge list is traversed ONCE per level
+    * regardless of |S|, where the row-per-(source, vertex) shape
+    * ([[forward]]) carries |S| × the touched vertices through every
+    * join. σ path-counting cannot pack (counts, not bits), which is
+    * why betweenness keeps the unpacked pass and closeness gets this
+    * one. More than 64 sources run in ⌈|S|/64⌉ independent packed
+    * waves. Per level the only non-join work is a 64-row per-source
+    * count aggregate (bits explode AFTER the join, never through it);
+    * the loop control rides each level's checkpoint. Output ≡
+    * [[closeness]] row-for-row (spec-asserted; the declared
+    * `graph_closeness` runs THIS path against the recursive-CTE
+    * oracle). */
   def closenessPacked(edges: DataFrame, sources: Seq[Long],
       maxDepth: Int = 40,
-      shared: Option[Seq[Long] => Vector[DataFrame]] = None): DataFrame = {
+      shared: Option[(Seq[Long], Int) => Vector[DataFrame]] = None): DataFrame = {
     require(sources.nonEmpty, "need at least one source")
-    lazy val bi = biView(edges)
+    lazy val bi = biLayout(edges)
     val spark = edges.sparkSession
     import spark.implicits._
     val waves = sources.distinct.sorted.grouped(64).map { wave =>
-      val built = shared.map(_(wave))
+      val built = shared.map(_(wave, maxDepth))
         .getOrElse(packedFreshLevels(bi, wave, maxDepth))
         .zipWithIndex.map { case (fresh, i) =>
         val d = i + 1
@@ -306,13 +282,13 @@ object Centrality {
     * by the REACHED vertex instead of the source. */
   def closenessAll(edges: DataFrame, pivots: Seq[Long],
       maxDepth: Int = 40,
-      shared: Option[Seq[Long] => Vector[DataFrame]] = None): DataFrame = {
+      shared: Option[(Seq[Long], Int) => Vector[DataFrame]] = None): DataFrame = {
     require(pivots.nonEmpty, "need at least one pivot")
-    lazy val bi = biView(edges)
+    lazy val bi = biLayout(edges)
     val spark = edges.sparkSession
     import spark.implicits._
     val waves = pivots.distinct.sorted.grouped(64).map { wave =>
-      val built = shared.map(_(wave))
+      val built = shared.map(_(wave, maxDepth))
         .getOrElse(packedFreshLevels(bi, wave, maxDepth))
         .zipWithIndex.map { case (fresh, i) =>
         fresh.select(col("v"),
@@ -351,7 +327,7 @@ object Centrality {
     * when the caller already knows |V| (saves one distinct-count job). */
   def betweenness(edges: DataFrame, sources: Seq[Long],
       nVertices: Option[Long] = None, maxDepth: Int = 40): DataFrame = {
-    val bi = biView(edges)
+    val bi = biLayout(edges)
     val levels = forward(bi, sources, maxDepth)
     val maxD = levels.length - 1
     val nVert = nVertices.getOrElse(

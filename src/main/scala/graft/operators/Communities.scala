@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * bidirectional edge list) + one (vertex, label)-keyed
   * map-side-combinable count + one vertex-keyed argmax — nothing
   * shuffles more than the directed edge set; labels checkpoint per
-  * round to keep lineage flat. Returns (n, community). */
+  * round ([[Rounds.checkpoint]]) to keep lineage flat. Returns
+  * (n, community). */
 object Communities {
 
   /** DataFrame-NATIVE connected components via alternating
@@ -34,8 +35,8 @@ object Communities {
     * two vertex-keyed aggregates and a projection, AQE-splittable like
     * any join. Each round strictly shrinks the forest height;
     * convergence is checked by an edge-count fixpoint on the star
-    * edges (1-row count per round — the k-core loop-control
-    * discipline).
+    * edges (the count rides each round's [[Rounds.checkpoint]]; a
+    * containment probe runs only once two counts agree).
     *
     *  - large-star: every neighbor u > min-of-neighborhood m(v) links
     *    to m(v) — applied from BOTH endpoints' perspectives via the
@@ -49,11 +50,12 @@ object Communities {
   def connectedComponentsDf(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     // star edges as (parent, child) pairs, child > parent invariant
     // after each small-star; init from the canonical list
-    var star = edges.select(
+    val start = Rounds.checkpoint(edges.select(
         least(col("a"), col("b")).as("p"), greatest(col("a"), col("b")).as("c"))
-      .filter(col("p") =!= col("c")).distinct().localCheckpoint(true)
+      .filter(col("p") =!= col("c")).distinct(), count(lit(1)))
+    var star = start._1
     var prev = -1L
-    var curCount = star.count()
+    var curCount = start._2.getLong(0)
     var it = 0
     var same = false
     while (it < maxIters && !same) {
@@ -76,16 +78,16 @@ object Communities {
       val bi2 = ls.select(col("p").as("v"), col("c").as("u"))
         .unionAll(ls.select(col("c").as("v"), col("p").as("u")))
       val mins2 = bi2.groupBy(col("v")).agg(min(col("u")).as("m"))
-      val ss = bi2.filter(col("u") <= col("v"))
+      val ssRows = bi2.filter(col("u") <= col("v"))
         .join(mins2, Seq("v"))
         .select(least(col("m"), col("u")).as("p"),
           when(col("u") === col("m"), col("v")).otherwise(col("u")).as("c"))
         .unionAll(bi2.filter(col("u") <= col("v")).join(mins2, Seq("v"))
           .select(col("m").as("p"), col("v").as("c")))
-        .filter(col("p") =!= col("c")).distinct()
-        .localCheckpoint(true)
+      val (ss, m) = Rounds.checkpoint(
+        ssRows.filter(col("p") =!= col("c")).distinct(), count(lit(1)))
       prev = curCount
-      curCount = ss.count() // 1-row loop control
+      curCount = m.getLong(0)
       // fixpoint: the star set stabilizes when every child points at
       // its component minimum — detected as two consecutive identical
       // edge sets (count equality + containment probe)
@@ -129,12 +131,11 @@ object Communities {
     val e = edges.select(col("a"), col("b"))
     val la = assignment.select(col("n").as("a"), col("community").as("ca"))
     val lb = assignment.select(col("n").as("b"), col("community").as("cb"))
-    // |E| piggybacks on the checkpoint job via observe() (r17) — the
-    // separate count was one extra driver round-trip
-    val mObs = new org.apache.spark.sql.Observation()
-    val joined = e.join(la, Seq("a")).join(lb, Seq("b"))
-      .observe(mObs, count(lit(1)).as("m")).localCheckpoint(true)
-    val m = mObs.get("m").asInstanceOf[Long]
+    // |E| rides the checkpoint job (r17) — a separate count was one
+    // extra driver round-trip
+    val (joined, mRow) = Rounds.checkpoint(
+      e.join(la, Seq("a")).join(lb, Seq("b")), count(lit(1)))
+    val m = mRow.getLong(0)
     // the scaladoc's exactness bound, ENFORCED (ADVICE r14 #3): past
     // m ≈ 1.5e9 the 4·m·e_c term silently overflows Long and returns a
     // wrong Q — m is already in hand, so failing loudly is free
@@ -156,149 +157,86 @@ object Communities {
           .cast("double") / lit(4.0 * m * m), 6).as("modularity"))
   }
 
-  /** FRONTIER-SPARSE rounds (r16, VERDICT r15 order #7): synchronous
-    * LPA recomputes a vertex only when its neighbor-label multiset can
-    * have moved — i.e. when at least one neighbor changed label LAST
-    * round. A vertex with no changed neighbor provably keeps its label
-    * (its round-t argmax input is byte-identical to round t−1's), so
-    * skipping it is EXACT, not approximate — the unrolled-round oracle
-    * (`graph_lpa_modularity`) stays hash-green by construction. The
-    * heaviest ×100 posture row (BASELINE #76: 1366 s) re-counted every
-    * vertex's neighborhood each round; as the frontier collapses, the
-    * per-round (vertex, label) count shrinks from edge-sized to
-    * active-edge-sized (the dijkstraDf frontier-pruning precedent).
-    * Rounds where the frontier is still a large fraction of the graph
-    * run the DENSE form (the sparse plumbing's two semi-joins and the
-    * carry-forward merge only pay for themselves once most of the
-    * graph is quiet) — the gate moves COST only, never results. */
   /** Dense/sparse crossover divisor: run the dense form while the
     * frontier exceeds 1/divisor of the graph. Bracketed by a
     * same-session A/B at sf0.1 AND ×10 over divisors 1/2/8/32 (r17,
     * BASELINE #94): flipping to sparse too EARLY — while the frontier
     * is still a large graph fraction (divisor ≤ 2) — costs 10–25%
-    * (the semi-join + carry-forward plumbing on an edge-scale
-    * frontier), while divisors 8–32 measure flat because the frontier
-    * COLLAPSES 20–30× per round on the co-purchase graph, so almost
-    * every round is clearly dense or clearly quiet and any gate in
-    * that band flips the same rounds. 8 stays as the measured
-    * optimum's centre. */
+    * (the semi-join plumbing on an edge-scale frontier), while
+    * divisors 8–32 measure flat because the frontier COLLAPSES 20–30×
+    * per round on the co-purchase graph, so almost every round is
+    * clearly dense or clearly quiet and any gate in that band flips
+    * the same rounds. 8 stays as the measured optimum's centre. */
   val LpaDenseDiv: Long = 8L
 
-  /** `biLayout`: a precomputed (checkpointed) bidirectional (src, dst)
-    * layout of the same edge set — shared with the centrality family's
-    * [[Centrality.biLayout]] by callers serving both (r18); when
-    * absent it is built (and size-gated) here. */
+  /** Synchronous label propagation for `iters` rounds over the
+    * bidirectional (u, w) layout [[Centrality.biLayout]] of `edges`;
+    * `biLayout` passes that layout in when the caller already holds it
+    * (r18 — the centrality family shares it), otherwise it is built
+    * here. Returns (n, community).
+    *
+    * Each round but a dense last one is one [[Rounds.checkpoint]]: the
+    * new labels join the old ones for a changed flag, and the frontier
+    * count is observed on the same job (r18). A join-free form
+    * measured slower: carrying the old label through the count as a
+    * weight-0 self row cost 7–10% of the LPA wall time in a
+    * same-session A/B (sf0.01 and sf0.1, 4 cores); the vertex-sized
+    * join it replaces is a broadcast.
+    *
+    * FRONTIER-SPARSE rounds (r16, VERDICT r15 order #7): a vertex with
+    * no neighbor that changed label last round provably keeps its label
+    * (its argmax input is byte-identical to last round's), so once the
+    * frontier is under 1/[[LpaDenseDiv]] of the vertices only N(frontier)
+    * is recomputed and the other vertices carry their label forward —
+    * EXACT, not approximate. As the frontier collapses, the per-round
+    * (vertex, label) count shrinks from edge-sized to active-edge-sized
+    * (the heaviest ×100 posture row, BASELINE #76: 1366 s, re-counted
+    * every vertex's neighborhood each round). The gate moves COST only,
+    * never results. */
   def labelPropagation(edges: DataFrame, iters: Int,
       biLayout: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, "need at least one round")
-    val bi = biLayout.getOrElse {
-      // e feeds ONLY the bi build below (read twice by the union, cheap
-      // projections); materialize it only when the caller's frame isn't
-      // already a checkpointed LogicalRDD (the co-purchase cache's is) —
-      // the unconditional checkpoint paid a full edge-copy job per
-      // query. Bound ONCE so the layout gate below counts the
-      // MATERIALIZED frame (ADVICE r17: gating on the raw caller frame
-      // recomputed the full upstream derivation a second time just for
-      // the count)
-      val em = Triangles.materialized(edges)
-      val e = em.select(col("a"), col("b"))
-      // probed once per round on src — pre-partitioned + pre-sorted (the
-      // Centrality.biView layout doctrine) so each round's label join
-      // moves only the vertex-sized label frame, never the edge list.
-      // SIZE-GATED like biView (r17): below BiLayoutMinRows the build
-      // shuffle+sort buys nothing — the label frame is broadcast-sized
-      // and AQE joins it against the checkpointed bi scan in place, so
-      // the up-front exchange of the whole bi frame was pure cost at
-      // sf0.1 (the closeness_all 3.8→6.8 s measurement, same shape)
-      val bi0 = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-      (if (em.count() * 2 < Centrality.BiLayoutMinRows) bi0
-       else bi0.repartition(col("src")).sortWithinPartitions(col("src")))
-        .localCheckpoint(true)
-    }
-    // |V| piggybacks on the labels checkpoint (observe(), r17) — the
-    // separate count was one extra driver round-trip
-    val nObs = new org.apache.spark.sql.Observation()
-    var labels = bi.select(col("src").as("n")).distinct()
-      .select(col("n"), col("n").as("community"))
-      .observe(nObs, count(lit(1)).as("nv"))
-      .localCheckpoint(true)
-    val nV = nObs.get("nv").asInstanceOf[Long]
-    // vertices whose label changed last round; -1 = round 1 (all)
-    var frontier: Option[DataFrame] = None
-    var frontierN = -1L
+    // materialized first, so the layout's size gate counts the
+    // checkpoint rather than re-deriving the caller's frame (ADVICE r17)
+    val bi = biLayout.getOrElse(
+      Centrality.biLayout(Triangles.materialized(edges)))
+    val (labels0, nvRow) = Rounds.checkpoint(
+      bi.select(col("u").as("n")).distinct()
+        .select(col("n"), col("n").as("community")),
+      count(lit(1)))
+    val nV = nvRow.getLong(0)
+    var labels = labels0
+    var frontier: DataFrame = null // vertices whose label changed last round
+    var frontierN = -1L // -1 = round 1 (all)
     (1 to iters).foreach { t =>
       val prev = labels
-      val prevFrontier = frontier
-      // dense while the frontier covers more than 1/LpaDenseDiv of the graph
       val dense = frontierN < 0 || frontierN * LpaDenseDiv > nV
-      var touchedRef: Option[DataFrame] = None // released after the round
-      val recomputed =
-        if (dense) bi
-          .join(prev.withColumnRenamed("n", "src"), Seq("src"))
-          .groupBy(col("dst").as("n"), col("community").as("lbl"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy(col("n"))
-          .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("__m"))
-          .select(col("n"), (-col("__m.neg")).as("community"))
-        else {
-          // N(frontier): the only vertices whose argmax input moved —
-          // the semi probe rides bi's src layout (no edge shuffle)
-          // lazy: consumed by exactly one semi probe in this round's
-          // plan — an eager copy bought nothing (r17)
-          val touched = bi
-            .join(prevFrontier.get.withColumnRenamed("n", "src"),
-              Seq("src"), "left_semi")
-            .select(col("dst").as("n")).distinct()
-          touchedRef = Some(touched)
-          bi.join(prev.withColumnRenamed("n", "src"), Seq("src"))
-            .join(touched.withColumnRenamed("n", "dst"), Seq("dst"), "left_semi")
-            .groupBy(col("dst").as("n"), col("community").as("lbl"))
-            .agg(count(lit(1)).as("cnt"))
-            .groupBy(col("n"))
-            .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("__m"))
-            .select(col("n"), (-col("__m.neg")).as("community"))
-        }
-      if (t < iters) { // the last round needs no next-round frontier
-        // the changed flag RIDES the labels checkpoint (observe, r18):
-        // the r17 shape recomputed a prev⋈labels join lazily and paid
-        // one separate count job per round for the frontier size — the
-        // same join evaluated once inside the checkpoint job carries a
-        // `__chg` column instead, the frontier count comes back as an
-        // observed metric, and the frontier SET is a filter over the
-        // checkpoint (no prev dependency). One driver round-trip per
-        // round instead of two; label values are untouched.
-        val cObs = new org.apache.spark.sql.Observation()
-        val lab2 =
-          (if (dense) recomputed // all vertices; prev covers the same set
-             .join(prev.withColumnRenamed("community", "__old"), Seq("n"))
-             .select(col("n"), col("community"),
-               (col("community") =!= col("__old")).as("__chg"))
-           else prev // untouched vertices carry their label forward
-             .join(recomputed.withColumnRenamed("community", "__new"), Seq("n"), "left")
-             .select(col("n"),
-               coalesce(col("__new"), col("community")).as("community"),
-               (col("__new").isNotNull && col("__new") =!= col("community"))
-                 .as("__chg")))
-            .observe(cObs, count(when(col("__chg"), lit(1))).as("nchg"))
-            .localCheckpoint(true)
-        labels = lab2.select(col("n"), col("community"))
-        frontierN = cObs.get("nchg").asInstanceOf[Long]
-        frontier = Some(lab2.filter(col("__chg")).select(col("n")))
-      } else {
-        labels =
-          (if (dense) recomputed
-           else prev // untouched vertices carry their label forward
-             .join(recomputed.withColumnRenamed("community", "__new"), Seq("n"), "left")
-             .select(col("n"),
-               coalesce(col("__new"), col("community")).as("community")))
-            .localCheckpoint(true)
+      val msgs = bi.join(prev.withColumnRenamed("n", "u"), Seq("u"))
+      val recomputed = (if (dense) msgs else msgs.join( // into N(frontier)
+          bi.join(frontier.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
+            .select(col("w")).distinct(),
+          Seq("w"), "left_semi"))
+        .groupBy(col("w").as("n"), col("community").as("lbl"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy(col("n"))
+        .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("__m"))
+        .select(col("n"), (-col("__m.neg")).as("__new"))
+      if (dense && t == iters) // every vertex recomputed; no next round
+        labels = recomputed.select(col("n"), col("__new").as("community"))
+          .localCheckpoint(true)
+      else {
+        val (lab, m) = Rounds.checkpoint(
+          (if (dense) recomputed.join(prev, Seq("n")) // covers every vertex
+           else prev.join(recomputed, Seq("n"), "left")) // untouched keep theirs
+            .select(col("n"),
+              coalesce(col("__new"), col("community")).as("community"),
+              (col("__new").isNotNull && col("__new") =!= col("community"))
+                .as("__chg")),
+          count(when(col("__chg"), lit(1))))
+        labels = lab.select(col("n"), col("community"))
+        frontier = lab.filter(col("__chg")).select(col("n"))
+        frontierN = m.getLong(0)
       }
-      prev.unpersist()
-      prevFrontier.foreach(_.unpersist())
-      touchedRef.foreach(_.unpersist()) // one vertex-scale RDD per
-      // sparse round would otherwise pin executor storage for the
-      // session (r16 review) — labels is checkpointed, so this is safe
     }
     labels
   }

@@ -19,12 +19,11 @@ import org.apache.spark.sql.functions._
   * Scale: every iteration is one vertex-keyed degree aggregate
   * (map-side combinable) + two edge-sized LEFT SEMI probes — nothing
   * ever shuffles more than the current edge set, and the set only
-  * shrinks. The per-iteration driver traffic is ONE count (loop
-  * control, 1 row — the config-sized discipline). Edge sets are
-  * localCheckpoint'ed per round so lineage stays flat across the
-  * fixpoint loop. Round count is bounded by the peel depth (the
-  * degeneracy ordering's longest cascade), the classic distributed
-  * k-core bound.
+  * shrinks. Each round is one [[Rounds.checkpoint]] job (flat lineage
+  * across the fixpoint loop) whose observed edge count is the loop
+  * control, so the loop pays no separate driver round-trip. Round
+  * count is bounded by the peel depth (the degeneracy ordering's
+  * longest cascade), the classic distributed k-core bound.
   */
 object KCore {
 
@@ -61,26 +60,26 @@ object KCore {
     * values are capped, so a vertex owns ≤ maxK histogram rows — a
     * hub's million neighbors become ≤ maxK combinable partials, never
     * a collect_list), one window over those ≤ maxK-row partitions for
-    * the descending cumulative count, and ONE 1-row sum for
-    * convergence (estimates are monotone, so the total is unchanged
-    * iff every estimate is). Returns (n, core ≥ 1); isolated input
-    * vertices never appear (an edge list carries none). Equality with
-    * the sequential peel ([[corenessPeel]]) is spec-asserted. */
+    * the descending cumulative count; the convergence sum rides the
+    * round's checkpoint (estimates are monotone, so the total is
+    * unchanged iff every estimate is). Returns (n, core ≥ 1); isolated
+    * input vertices never appear (an edge list carries none). Equality
+    * with the sequential peel ([[corenessPeel]]) is spec-asserted. */
   def coreness(edges: DataFrame, maxK: Int = 64): DataFrame = {
     require(maxK >= 1, "maxK must be at least 1")
     // probed twice per round; laid out on the FIRST join's key (the
-    // Centrality.biView doctrine — the second join must exchange the
-    // joined stream by b regardless, since each row carries ca)
-    val e = edges.select(col("a"), col("b")).distinct()
-      .repartition(col("a")).sortWithinPartitions(col("a"))
-      .localCheckpoint(true)
-    var est = degrees(e)
-      .select(col("n"), least(col("deg"), lit(maxK.toLong)).cast("int").as("core"))
-      .localCheckpoint(true)
-    def totalOf(df: DataFrame): Long = // null-safe: empty graph sums null
-      df.agg(coalesce(sum(col("core")), lit(0L))).head.getLong(0)
+    // second join must exchange the joined stream by b regardless,
+    // since each row carries ca)
+    val e = Rounds.probed(edges.select(col("a"), col("b")).distinct(), "a")
+    // the estimate total rides each checkpoint (null-safe: an empty
+    // graph sums null)
+    val total = coalesce(sum(col("core")), lit(0L))
+    val start = Rounds.checkpoint(degrees(e)
+      .select(col("n"), least(col("deg"), lit(maxK.toLong)).cast("int").as("core")),
+      total)
+    var est = start._1
     var prevSum = -1L
-    var curSum = totalOf(est)
+    var curSum = start._2.getLong(0)
     while (curSum != prevSum) {
       val vals = e.join(est.select(col("n").as("a"), col("core").as("ca")), Seq("a"))
         .join(est.select(col("n").as("b"), col("core").as("cb")), Seq("b"))
@@ -92,11 +91,11 @@ object KCore {
       val h = hist.withColumn("cum", sum(col("c")).over(w))
         .select(col("n"), least(col("v").cast("long"), col("cum")).as("hv"))
         .groupBy(col("n")).agg(max(col("hv")).cast("int").as("h"))
-      est = est.join(h, Seq("n"))
-        .select(col("n"), least(col("core"), col("h")).as("core"))
-        .localCheckpoint(true)
+      val next = Rounds.checkpoint(est.join(h, Seq("n"))
+        .select(col("n"), least(col("core"), col("h")).as("core")), total)
+      est = next._1
       prevSum = curSum
-      curSum = totalOf(est) // 1-row loop control
+      curSum = next._2.getLong(0)
     }
     est.filter(col("core") >= 1)
   }
@@ -145,12 +144,12 @@ object KCore {
     var cur = e.count()
     while (cur != prev && cur > 0) {
       val keep = degrees(e).filter(col("deg") >= k).select(col("n"))
-      val ne = e
+      val (ne, m) = Rounds.checkpoint(e
         .join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(true)
+        .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi"),
+        count(lit(1)))
       prev = cur
-      cur = ne.count() // 1-row loop control — the only driver traffic
+      cur = m.getLong(0)
       e = ne
     }
     if (cur == 0) None else Some(e)

@@ -28,33 +28,33 @@ import org.apache.spark.sql.functions._
   * hold resetProb-driven mass like GraphX's). */
 object PageRank {
 
+  /** The (src, dst, w = 1/outDeg(src)) edge layout both rank loops
+    * probe every round — GraphX's mapTriplets(1.0 / srcDeg), with
+    * parallel edges each carrying the weight — laid out on `src` for
+    * the per-round rank join ([[Rounds.probed]]). Edges are SCOPED to `v` on both endpoints (ADVICE r14 #1,
+    * #2): the sparse iteration coalesces an absent source to the
+    * closed-form default, which is only correct for sources IN v — an
+    * open-world src ∉ v would be credited rank 1.0 in round 1 and a
+    * dst ∉ v would accumulate and re-propagate mass, diverging from the
+    * dense form and the v-scoped oracle. outDeg stays UNscoped
+    * (computed from all edges, like the oracle's dg CTE): an edge
+    * leaving v still thins its source's per-edge share; the mass it
+    * carries just never lands. On a closed graph both joins are
+    * no-ops. */
+  private def weightedEdges(v: DataFrame, edges: DataFrame): DataFrame = {
+    val deg = edges.groupBy(col("src"))
+      .agg((lit(1.0) / count(lit(1))).as("w"))
+    Rounds.probed(edges.select(col("src"), col("dst"))
+      .join(v.select(col("id").as("src")), Seq("src"), "left_semi")
+      .join(v.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .join(deg, Seq("src")), "src")
+  }
+
   def pageRankDf(vertices: DataFrame, edges: DataFrame, iters: Int,
       resetProb: Double = 0.15): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     val v = vertices.select(col("id")).localCheckpoint(true)
-    // 1/outDeg once, carried ON the edge row — GraphX's
-    // mapTriplets(1.0 / srcDeg); parallel edges each carry the weight
-    val deg = edges.groupBy(col("src"))
-      .agg((lit(1.0) / count(lit(1))).as("w"))
-    // probed once per iteration — pre-partitioned AND pre-sorted on the
-    // join key so each round's rank join reuses this layout and moves
-    // only the rank frame (the biView doctrine: without it the planner
-    // re-exchanged/re-sorted the edge list every iteration).
-    // Edges are SCOPED to v on both endpoints (ADVICE r14 #1): the
-    // sparse iteration coalesces an absent source to the closed-form
-    // default, which is only correct for sources IN v — an open-world
-    // src ∉ v would be credited rank 1.0 in round 1 and a dst ∉ v
-    // would accumulate and re-propagate mass, diverging from the dense
-    // form and the v-scoped oracle. outDeg stays UNscoped (computed
-    // from all edges, like the oracle's dg CTE): an edge leaving v
-    // still thins its source's per-edge share; the mass it carries
-    // just never lands. On a closed graph both joins are no-ops.
-    val ew = edges.select(col("src"), col("dst"))
-      .join(v.select(col("id").as("src")), Seq("src"), "left_semi")
-      .join(v.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .join(deg, Seq("src"))
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .localCheckpoint(true)
+    val ew = weightedEdges(v, edges)
     // SPARSE iteration (the shape that closed the 3× gap to GraphX at
     // sf0.1): a vertex with no in-edges sits at the CLOSED-FORM value
     // every round — 1.0 before round 1, resetProb + 0.85·0 = resetProb
@@ -121,29 +121,21 @@ object PageRank {
         "duplicate seed id(s) — seeds must be distinct")
     val spark = vertices.sparkSession
     import spark.implicits._
-    val v = vertices.select(col("id")).localCheckpoint(true)
-    val nV = v.count().toDouble
     // seeds MUST be vertices (ADVICE r14 #2): a seed ∉ v would still
     // dilute every real seed's |V|/|S| mass and inject teleport mass
     // that propagates through the graph, then silently vanish from the
-    // final v-left-join — diverging from the v-scoped oracle. One
-    // config-sized isin count; loud on violation.
-    val nSeedsInV = v.filter(col("id").isin(seeds: _*)).count()
+    // final v-left-join — diverging from the v-scoped oracle. |V| and
+    // the seed-membership count ride the vertex checkpoint; loud on
+    // violation.
+    val (v, counts) = Rounds.checkpoint(vertices.select(col("id")),
+      count(lit(1)), count(when(col("id").isin(seeds: _*), lit(1))))
+    val nV = counts.getLong(0).toDouble
+    val nSeedsInV = counts.getLong(1)
     require(nSeedsInV == seeds.distinct.length,
       s"personalizedPageRankDf: ${seeds.distinct.length - nSeedsInV} of " +
         s"${seeds.length} seeds are not in the vertex frame")
     val seedMass = nV / seeds.length // per-seed teleport mass
-    val deg = edges.groupBy(col("src"))
-      .agg((lit(1.0) / count(lit(1))).as("w"))
-    // endpoint-scoped like pageRankDf (ADVICE r14 #2): rank can only
-    // ever hold v ids (seeds ⊆ v, dst scoped), so mass never rides an
-    // edge out of v and back; outDeg stays unscoped (the oracle's dg)
-    val ew = edges.select(col("src"), col("dst"))
-      .join(v.select(col("id").as("src")), Seq("src"), "left_semi")
-      .join(v.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .join(deg, Seq("src"))
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .localCheckpoint(true) // the pageRankDf layout doctrine
+    val ew = weightedEdges(v, edges)
     // personalization is SPARSE by nature: rank is nonzero only on
     // seeds and vertices reached from them, so the frame carries
     // exactly those — the edge probe is an INNER join (absent source

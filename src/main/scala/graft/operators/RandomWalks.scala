@@ -55,18 +55,15 @@ object RandomWalks {
 
   /** (adjacency rows (u, idx, w) sorted-rank-indexed, degree frame
     * (u, deg)) for the bidirectional view of a canonical edge list —
-    * the node2vec candidate form. */
-  /** The (adj, deg) pair as a REUSABLE layout: several walk queries
-    * over one shared source frame each re-paid the window + checkpoint
-    * build (r18) — a caller serving the family derives it once (the
-    * co-purchase-layout discipline) and passes it back through the
-    * `layout` parameter of [[randomWalks]]/[[node2vecWalks]]. */
-  def adjacencyLayout(edges: DataFrame): (DataFrame, DataFrame) =
-    adjacency(edges)
-
-  private def adjacency(edges: DataFrame): (DataFrame, DataFrame) = {
+    * the node2vec candidate form. A REUSABLE layout: several walk
+    * queries over one shared source frame each re-paid the window +
+    * checkpoint build (r18) — a caller serving the family derives it
+    * once (the co-purchase-layout discipline) and passes it back
+    * through the `layout` parameter of [[randomWalks]] /
+    * [[node2vecWalks]]. */
+  def adjacencyLayout(edges: DataFrame): (DataFrame, DataFrame) = {
     // canonical (a < b) contract = a distinct edge SET (see
-    // Centrality.biView r17 note): the defensive distinct re-exchanged
+    // Centrality.biLayout r17 note): the defensive distinct re-exchanged
     // the whole edge list per walk query for nothing
     val e = edges.select(col("a"), col("b"))
     val bi = e.select(col("a").as("u"), col("b").as("w"))
@@ -84,7 +81,7 @@ object RandomWalks {
   def randomWalks(edges: DataFrame, salt: String, length: Int,
       layout: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     require(length >= 1, "walks need at least one step")
-    val (adj, deg) = layout.getOrElse(adjacency(edges))
+    val (adj, deg) = layout.getOrElse(adjacencyLayout(edges))
     // The WHOLE step shape is SIZE-CONDITIONAL (r16, VERDICT r15 weak
     // #1 — the r15 gate only skipped the block frame's repartition, and
     // the unconditional blocked BUILD (a groupBy(u, blk) collect_list
@@ -136,19 +133,14 @@ object RandomWalks {
       // degree, and keeps the single block holding it. The salted hash
       // re-evaluates once per BLOCK row (≈ once per walk), not per
       // neighbor — the formulation the r13 residual-predicate
-      // measurement rejected evaluated it deg(cur) times. blocks
-      // pre-partitions on u before the checkpoint so every step's join
-      // reuses that layout and shuffles only the walk side — at ×100
-      // the layout is what keeps each step from re-exchanging the
-      // 100M-row block frame.
-      val blocks = adj
+      // measurement rejected evaluated it deg(cur) times. blocks is
+      // laid out on u for every step's join ([[Rounds.probed]]).
+      val blocks = Rounds.probed(adj
         .withColumn("blk", expr(s"CAST((idx - 1) DIV $BlockSize AS INT)"))
         .groupBy(col("u"), col("blk"))
         .agg(expr("transform(sort_array(collect_list(struct(idx, w))), x -> x.w)")
           .as("nbrs"))
-        .join(deg, Seq("u"))
-        .repartition(col("u")).sortWithinPartitions(col("u"))
-        .localCheckpoint(true) // probed once per step
+        .join(deg, Seq("u")), "u")
       (1 to length).foreach { t =>
         val h = graft.llmops.TextOps.md5Hash32(concat_ws("|",
           lit(salt), col("start").cast("string"), lit(t.toString),
@@ -220,7 +212,7 @@ object RandomWalks {
     require(wReturn > 0 && wIn > 0 && wOut > 0, "weights must be positive")
     require(maxDeg >= 1, "maxDeg must be at least 1")
     val capped = maxDeg != Int.MaxValue
-    val (adj, deg) = layout.getOrElse(adjacency(edges))
+    val (adj, deg) = layout.getOrElse(adjacencyLayout(edges))
     // edge-marker probe side, sorted on ITS join key pair — adj's
     // checkpoint layout (hash u) already co-locates it; the sort keeps
     // every per-step SMJ from re-sorting the edge-sized frame

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   *     frontier discipline: settled regions of the graph are never
   *     re-joined), so each round is one frontier-incidence-sized equi
   *     join + one vertex-keyed `min(struct(dist, hops))` aggregate +
-  *     one vertex-sized merge join + the 1-row loop control;
-  *   - distance frames localCheckpoint per round (flat lineage);
+  *     one vertex-sized merge join;
+  *   - the improved set is one [[Rounds.checkpoint]] per round (flat
+  *     lineage) whose observed row count is the loop control; the edge
+  *     list is laid out on `src` once ([[Rounds.probed]]);
   *   - tie-break IDENTICAL to the GraphX bridge: smaller dist, then
   *     fewer hops (`min(struct(dist, hops))` — the struct order IS the
   *     better() order), so the two paths are spec-asserted equal.
@@ -35,11 +37,8 @@ object ShortestPath {
       maxRounds: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"),
-        col("w").cast("double").as("w"))
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .localCheckpoint(true) // probed once per round (biView layout
-      // doctrine: each relax join moves only the frontier side)
+    val e = Rounds.probed(edges.select(col("src"), col("dst"),
+      col("w").cast("double").as("w")), "src")
     require(e.filter(col("w") < 0).isEmpty,
       "dijkstraDf requires non-negative edge weights")
     var dist = Seq((source, 0.0, 0)).toDF("id", "dist", "hops")
@@ -55,14 +54,13 @@ object ShortestPath {
         .groupBy(col("id"))
         .agg(min(struct(col("dist"), col("hops"))).as("m"))
         .select(col("id"), col("m.dist").as("dist"), col("m.hops").as("hops"))
-      val improved = cand.join(
+      val (improved, m) = Rounds.checkpoint(cand.join(
           dist.select(col("id"), struct(col("dist"), col("hops")).as("__old")),
           Seq("id"), "left")
         .filter(col("__old").isNull ||
           struct(col("dist"), col("hops")) < col("__old"))
-        .select(col("id"), col("dist"), col("hops"))
-        .localCheckpoint(true)
-      more = !improved.isEmpty // 1-row loop control
+        .select(col("id"), col("dist"), col("hops")), count(lit(1)))
+      more = m.getLong(0) > 0L
       if (more) {
         dist = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
           .unionByName(improved)

@@ -38,7 +38,14 @@ case class PqDecode(child: Expression, books: Seq[Seq[Seq[Double]]])
     var off = 0
     var mi = 0
     while (mi < m) {
-      val c = bookArr(mi)(input.getInt(mi)) // in-range by construction
+      val code = input.getInt(mi)
+      val book = bookArr(mi)
+      // a corrupt or mismatched stored code fails with a descriptive
+      // error, not a raw ArrayIndexOutOfBoundsException
+      require(code >= 0 && code < book.length,
+        s"PqDecode: subspace $mi code $code is outside its book of " +
+          s"${book.length} codewords")
+      val c = book(code)
       System.arraycopy(c, 0, out, off, c.length)
       off += c.length
       mi += 1

@@ -111,23 +111,26 @@ object GraphQueries {
     val (ids, _) = coPurchaseSrcsN(s, d)
     ids.take(k)
   }
-  /** Packed-BFS fresh-frontier levels for one ≤64-source wave over the
-    * co-purchase bi layout — the expansion is the whole build cost of
-    * a closeness query, and `graph_closeness` / `graph_closeness_all`
-    * run it over the SAME wave (both payloads are lazy projections of
-    * these checkpointed levels). */
   /** Bidirectional (u, w) layout of the co-purchase graph — shared by
-    * the packed-BFS waves and (column-renamed) the LPA rounds. */
+    * the packed-BFS waves and the LPA rounds. */
   private def coPurchaseBi(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     FrameCache.frame("bi-layout", d, sourceFp(d))(
       graft.operators.Centrality.biLayout(coPurchase(s, d)))
 
+  /** Packed-BFS fresh-frontier levels for one ≤64-source wave over the
+    * co-purchase bi layout — the expansion is the whole build cost of
+    * a closeness query, and `graph_closeness` / `graph_closeness_all`
+    * run it over the SAME wave (both payloads are lazy projections of
+    * these checkpointed levels). Keyed by the wave AND the depth cap,
+    * which both shape the levels. */
   private def coPurchaseWaveLevels(s: org.apache.spark.sql.SparkSession,
-      d: String)(wave: Seq[Long]): Vector[org.apache.spark.sql.DataFrame] =
-    FrameCache.frames("bfs-wave:" + wave.mkString(","), d, sourceFp(d)) {
+      d: String)(wave: Seq[Long],
+      maxDepth: Int): Vector[org.apache.spark.sql.DataFrame] =
+    FrameCache.frames(s"bfs-wave:$maxDepth:" + wave.mkString(","), d,
+        sourceFp(d)) {
       graft.operators.Centrality.packedFreshLevels(
-        coPurchaseBi(s, d), wave, 40)
+        coPurchaseBi(s, d), wave, maxDepth)
     }.toVector
 
   private def coPurchaseSrcsN(s: org.apache.spark.sql.SparkSession,
@@ -787,8 +790,7 @@ object GraphQueries {
         val edges = coPurchase(s, d)
         graft.operators.Communities.modularity(edges,
           graft.operators.Communities.labelPropagation(edges, 3,
-            biLayout = Some(coPurchaseBi(s, d)
-              .select(col("u").as("src"), col("w").as("dst")))))
+            biLayout = Some(coPurchaseBi(s, d))))
       },
       Some {
         val rounds = (1 to 3).map { i =>

@@ -82,10 +82,11 @@ object Qh {
     * keyed (kind, source dir, source fingerprint) — never query
     * results; every query still computes its declared aggregate from
     * the layout. A regenerated source re-keys (IndexKeys fingerprint
-    * doctrine) and the superseded generation's checkpoint blocks are
-    * released on insert; dead-SparkContext entries evict on access
+    * doctrine) and every superseded-generation entry of that dir, of
+    * any kind, is dropped on insert with its checkpoint blocks
+    * released; dead-SparkContext entries evict on access
     * (a checkpointed frame is bound to its context). */
-  private[queries] object FrameCache {
+  private[graft] object FrameCache {
     private val cache =
       scala.collection.mutable.Map[(String, String, String), Seq[DataFrame]]()
     private val vals =
@@ -111,14 +112,24 @@ object Qh {
         case Some(dfs) => dfs
         case None =>
           val dfs = build
-          cache.filterInPlace { case ((k2, d2, f2), old) =>
-            val keep = k2 != kind || d2 != dir || f2 == fp
-            if (!keep) release(old)
-            keep
-          }
+          supersede(dir, fp)
           cache(key) = dfs
           dfs
       }
+    }
+
+    /** A new fingerprint for `dir` means its source was regenerated:
+      * every entry derived from an older generation, of ANY kind, is
+      * dropped and its checkpoint blocks released — a kind that is not
+      * requested again (every `bfs-wave` key is its own kind) would
+      * otherwise stay pinned for the session. */
+    private def supersede(dir: String, fp: String): Unit = {
+      cache.filterInPlace { case ((_, d2, f2), old) =>
+        val keep = d2 != dir || f2 == fp
+        if (!keep) release(old)
+        keep
+      }
+      vals.filterInPlace { case ((_, d2, f2), _) => d2 != dir || f2 == fp }
     }
 
     def frame(kind: String, dir: String, fp: String)(
@@ -129,7 +140,12 @@ object Qh {
       * fingerprint-keyed like the frames, context-independent. */
     def value[T](kind: String, dir: String, fp: String)(build: => T): T =
       synchronized {
-        vals.getOrElseUpdate((kind, dir, fp), build).asInstanceOf[T]
+        vals.getOrElse((kind, dir, fp), {
+          val v = build
+          supersede(dir, fp)
+          vals((kind, dir, fp)) = v
+          v
+        }).asInstanceOf[T]
       }
   }
 

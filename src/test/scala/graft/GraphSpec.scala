@@ -941,4 +941,79 @@ class GraphSpec extends SparkSpec {
     assert(none.count() == 0L &&
       none.columns.toSeq == Seq("kind", "n", "score"))
   }
+
+  test("one round core: probe layouts and observed checkpoints live in operators/Rounds") {
+    import scala.jdk.CollectionConverters._
+    val list = java.nio.file.Files.list(
+      java.nio.file.Paths.get("src/main/scala/graft/operators"))
+    val code = try list.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Rounds.scala")
+      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala
+        .map(_.split("//")(0).trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/**"))
+        .map(l => p.getFileName.toString -> l))
+      .toList
+    finally list.close()
+    val found = code.filter { case (_, l) =>
+      Seq("Observation(", "repartition(", "sortWithinPartitions(").exists(l.contains)
+    }
+    // the two sorts that are not probe layouts: the walk adjacency is
+    // already partitioned by u by its window, and the node2vec edge
+    // marker is sorted on its (prev, candidate) key pair
+    val exempt = Set(
+      "RandomWalks.scala" -> """.sortWithinPartitions(col("u"))""",
+      "RandomWalks.scala" -> """.sortWithinPartitions(col("__mu"), col("__mw"))""")
+    assert(found.toSet == exempt, found.mkString("\n"))
+  }
+
+  test("Rounds.probed: same rows on both sides of the threshold, hash-partitioned on the key above it") {
+    import spark.implicits._
+    import graft.operators.Rounds
+    val df = spark.range(0, 200).select(($"id" % 17).as("k"), $"id".as("v"))
+    def rows(x: org.apache.spark.sql.DataFrame) =
+      x.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // the physical layout of the checkpoint: every key in ONE partition
+    // and each partition sorted on the key (the planner is not told —
+    // under AQE the checkpoint reports UnknownPartitioning)
+    def laidOut(x: org.apache.spark.sql.DataFrame): Boolean = {
+      val parts = x.rdd.mapPartitionsWithIndex((i, it) =>
+        Iterator(i -> it.map(_.getLong(0)).toVector)).collect()
+      parts.forall { case (_, ks) => ks == ks.sorted } &&
+        parts.flatMap { case (i, ks) => ks.distinct.map(_ -> i) }
+          .groupBy(_._1).values.forall(_.length == 1)
+    }
+    val below = Rounds.probed(df, "k", minRows = 201) // 200 rows < 201
+    val at = Rounds.probed(df, "k", minRows = 200)
+    val always = Rounds.probed(df, "k")
+    val told = Rounds.probed(df, "k", minRows = 201, rows = Some(201L))
+    for (x <- Seq(below, at, always, told)) assert(rows(x) == rows(df))
+    assert(!laidOut(below))
+    assert(laidOut(at) && laidOut(always) && laidOut(told))
+    // below the threshold a checkpoint is already in its input layout
+    val cp = df.localCheckpoint(true)
+    assert(Rounds.probed(cp, "k", minRows = 1000) eq cp)
+  }
+
+  test("FrameCache: a regenerated source releases the superseded checkpoint of every kind") {
+    import graft.queries.Qh.FrameCache
+    import org.apache.spark.sql.execution.LogicalRDD
+    val dir = "frame-cache-spec"
+    def cp(n: Int) = spark.range(n).toDF("x").localCheckpoint(true)
+    def pinned(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+        .forall(spark.sparkContext.getPersistentRDDs.contains)
+    val a = FrameCache.frame("kind-a", dir, "fp1")(cp(10))
+    val waves = FrameCache.frames("bfs-wave:40:1,2", dir, "fp1")(Seq(cp(5), cp(6)))
+    val other = FrameCache.frame("kind-a", dir + "-other", "fp1")(cp(7))
+    assert(FrameCache.value("srcs", dir, "fp1")(1) == 1)
+    assert((a +: other +: waves).forall(pinned))
+    // same fingerprint: reused, never rebuilt
+    assert(FrameCache.frame("kind-a", dir, "fp1")(fail("rebuilt")) eq a)
+    // a new fingerprint for the dir, under a kind no old entry has
+    val fresh = FrameCache.frame("kind-b", dir, "fp2")(cp(3))
+    assert(pinned(fresh) && pinned(other))
+    assert(!pinned(a) && !waves.exists(pinned))
+    assert(FrameCache.value("srcs", dir, "fp2")(2) == 2)
+  }
 }

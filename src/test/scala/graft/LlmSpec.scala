@@ -2369,6 +2369,14 @@ class LlmSpec extends SparkSpec {
       Similarity.ivfPqIndexTopK(spark, dir, qids, 2, 10).collect()
     }
     assert(rootMsg(e2).contains("no geom/build"), rootMsg(e2).take(400))
+    // an out-of-range stored code names the subspace, the code and the
+    // book size instead of surfacing as a raw array-index exception
+    val badCodes = Seq(Tuple1(Seq(0, 0, books(2).length, 0))).toDF("codes")
+    val e3 = intercept[Exception] {
+      badCodes.select(Similarity.pqReconstruct($"codes", books)).collect()
+    }
+    assert(rootMsg(e3).contains(s"subspace 2 code ${books(2).length} is " +
+      s"outside its book of ${books(2).length} codewords"), rootMsg(e3).take(400))
   }
 
   test("lengthBuckets: power-of-two ladder, truncation at the cap, exact padding") {
