@@ -89,6 +89,14 @@ object PlanAudit {
     Check("range_join_events", "band join is an equi-join",
       "BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin"),
     Check("pipeline_decontaminate", "decontamination is one left-semi probe", "LeftSemi"),
+    // the declared twins of the HTTP read shapes (hop1_count,
+    // hop1_expand, match2): each hop is an oriented edge frame joined
+    // by hash join, the degree frame partial-aggregates before it joins
+    Check("asql_degree", "degree frame is a partial aggregate", "HashAggregate"),
+    Check("asql_degree", "degree frame joins by hash join", "BroadcastHashJoin|ShuffledHashJoin"),
+    Check("asql_expand_hop", "expand hop is a hash join", "BroadcastHashJoin|ShuffledHashJoin"),
+    Check("asql_match_hop", "MATCH hop is a hash join", "BroadcastHashJoin|ShuffledHashJoin"),
+    Check("asql_match_hop", "no cartesian product anywhere", "!CartesianProduct"),
     Check("asql_optional_match", "optional MATCH step is a left outer join", "LeftOuter"),
     Check("asql_match_multi", "shared-alias pattern join is a hash join",
       "BroadcastHashJoin|ShuffledHashJoin"),

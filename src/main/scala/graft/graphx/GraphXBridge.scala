@@ -3,7 +3,6 @@ package graft.graphx
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.graphx.lib.ShortestPaths
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.query.PropertyGraph
 
@@ -11,11 +10,12 @@ import graft.query.PropertyGraph
   * spark_approach: "GraphX for batch graph analytics" — analytics only;
   * bulk relational hops stay DataFrame joins, SURVEY §7).
   *
-  * The reference exposes `shortestPath`/`dijkstra`/TRAVERSE through
-  * ArcadeDB SQL (SURVEY §2.B.3 [dep]); unbounded/iterative forms cannot
-  * be one Catalyst plan, so they run as Pregel jobs here. Vertex
-  * attributes are kept to the minimum the algorithm needs (never whole
-  * property rows) so the shuffled state stays small at scale.
+  * The reference exposes `shortestPath`/`dijkstra` through ArcadeDB
+  * SQL (SURVEY §2.B.3 [dep]); they run as Pregel jobs here, over edge
+  * frames oriented by [[PropertyGraph.oriented]]. TRAVERSE is not a
+  * GraphX job: it runs on the DataFrame BFS, [[PropertyGraph.traverse]].
+  * Vertex attributes are kept to the minimum the algorithm needs (never
+  * whole property rows) so the shuffled state stays small at scale.
   */
 object GraphXBridge {
 
@@ -30,28 +30,10 @@ object GraphXBridge {
     out
   }
 
-  /** Oriented edge frame for a traversal `direction`: `out` follows
-    * edges as stored, `in` reverses them, `both` unions both
-    * orientations (the dialect's shortestPath/dijkstra direction
-    * argument). */
-  private def oriented(g: PropertyGraph, edgeLabels: Seq[String],
-      direction: String): DataFrame = {
-    val es = if (edgeLabels.isEmpty) g.edges
-             else g.edges.filter(col("label").isin(edgeLabels: _*))
-    direction.toLowerCase match {
-      case "out" => es.select(col("src"), col("dst"))
-      case "in" => es.select(col("dst").as("src"), col("src").as("dst"))
-      case "both" => es.select(col("src"), col("dst"))
-        .unionByName(es.select(col("dst").as("src"), col("src").as("dst")))
-      case other => throw new IllegalArgumentException(
-        s"unsupported direction '$other' (expected OUT, IN, or BOTH)")
-    }
-  }
-
   /** Project a PropertyGraph down to a GraphX topology (ids only). */
   def toGraphX(g: PropertyGraph, edgeLabels: Seq[String] = Nil,
       direction: String = "out"): Graph[Unit, Unit] = {
-    val es = oriented(g, edgeLabels, direction).rdd
+    val es = g.oriented(edgeLabels, direction).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), ()))
     val vs = g.nodes.select("id").rdd.map(r => (r.getLong(0), ()))
     Graph(vs, es, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
@@ -63,16 +45,8 @@ object GraphXBridge {
     * (id, component) with component = min vertex id, GraphX's canonical
     * representative. */
   def connectedComponents(spark: SparkSession, g: PropertyGraph,
-      edgeLabels: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val es = g.edges.filter(col("label").isin(edgeLabels: _*))
-      .select("src", "dst").rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val base = Graph.fromEdges(es, (), StorageLevel.MEMORY_AND_DISK,
-      StorageLevel.MEMORY_AND_DISK)
-    val cc = base.connectedComponents()
-    finish(cc.vertices.map { case (id, comp) => (id, comp) }.toDF("id", "component"),
-      base, cc)
-  }
+      edgeLabels: Seq[String]): DataFrame =
+    componentsOfPairs(spark, g.oriented(edgeLabels, "out"))
 
   /** Connected components over an arbitrary (src, dst) pair frame —
     * the dedup-cluster resolver: near-dup PAIRS become groups, each
@@ -122,18 +96,8 @@ object GraphXBridge {
       weight: org.apache.spark.sql.Column, source: VertexId,
       direction: String = "out"): DataFrame = {
     import spark.implicits._
-    val base = if (edgeLabels.isEmpty) g.edges
-               else g.edges.filter(col("label").isin(edgeLabels: _*))
-    val withW = base.select(col("src"), col("dst"), weight.cast("double").as("w"))
-    val orientedW = direction.toLowerCase match {
-      case "out" => withW
-      case "in" => withW.select(col("dst").as("src"), col("src").as("dst"), col("w"))
-      case "both" => withW.unionByName(
-        withW.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      case other => throw new IllegalArgumentException(
-        s"unsupported direction '$other' (expected OUT, IN, or BOTH)")
-    }
-    val es = orientedW.rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val es = g.oriented(edgeLabels, direction, weight.cast("double").as("w"))
+      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
     val inf = (Double.PositiveInfinity, Int.MaxValue)
     def better(a: (Double, Int), b: (Double, Int)): (Double, Int) =
       if (a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)) a else b

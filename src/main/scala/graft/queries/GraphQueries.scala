@@ -550,7 +550,7 @@ object GraphQueries {
     Q("traverse_varlen",
       (s, d) => {
         val g = graph(s, d)
-        g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", 2)
+        g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", Some(2))
           .groupBy(col("start_id"), col("depth")).agg(count(lit(1)).as("cnt"))
           .select(col("start_id").as("region_key"), col("depth"), col("cnt"))
       },
@@ -569,8 +569,8 @@ object GraphQueries {
     Q("traverse_while",
       (s, d) => {
         val g = graph(s, d)
-        g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", 2,
-          whileNode = col("label") =!= "Nation" || col("name") < "N")
+        g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", Some(2),
+          whileNode = Some(col("label") =!= "Nation" || col("name") < "N"))
           .groupBy(col("start_id"), col("depth")).agg(count(lit(1)).as("cnt"))
           .select(col("start_id").as("region_key"), col("depth"), col("cnt"))
       },
@@ -621,8 +621,7 @@ object GraphQueries {
     Q("traverse_unbounded",
       (s, d) => {
         val g = graph(s, d)
-        g.traverseUnbounded(g.nodesOf("Customer"),
-            Seq("PLACED", "CONTAINS", "SUPPLIED_BY"), "out")
+        g.traverse(g.nodesOf("Customer"), Seq("PLACED", "CONTAINS", "SUPPLIED_BY"), "out")
           .groupBy(col("depth"))
           .agg(count(lit(1)).as("cnt"), countDistinct(col("node_id")).as("n_nodes"))
       },
@@ -647,9 +646,8 @@ object GraphQueries {
     Q("traverse_unbounded_while",
       (s, d) => {
         val g = graph(s, d)
-        g.traverseUnbounded(g.nodesOf("Customer"),
-            Seq("PLACED", "CONTAINS", "SUPPLIED_BY"), "out",
-            whileNode = Some(col("label") =!= "Order" || col("status") =!= "F"))
+        g.traverse(g.nodesOf("Customer"), Seq("PLACED", "CONTAINS", "SUPPLIED_BY"), "out",
+          whileNode = Some(col("label") =!= "Order" || col("status") =!= "F"))
           .groupBy(col("depth"))
           .agg(count(lit(1)).as("cnt"), countDistinct(col("node_id")).as("n_nodes"))
       },

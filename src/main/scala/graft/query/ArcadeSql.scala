@@ -41,11 +41,11 @@ import graft.model.GraphSchema
   *    `.format(fmt)`, `date(str[, fmt])`, `sysdate()`,
   *    `.first()/.last()/.sort()`
   *  - `TRAVERSE out|in|both('L', …) FROM (<select>) [MAXDEPTH n]
-  *    [WHILE p] [STRATEGY BREADTH_FIRST|DEPTH_FIRST]` — `$depth`
-  *    bounds inside WHILE are folded into the depth bound; the rest of
-  *    the guard becomes the node predicate of
-  *    [[PropertyGraph.traverse]]. No depth bound at all compiles to
-  *    the fixpoint [[PropertyGraph.traverseUnbounded]]. Result rows
+  *    [WHILE p] [STRATEGY BREADTH_FIRST|DEPTH_FIRST]` — one call of
+  *    the breadth-first loop [[PropertyGraph.traverse]]: `$depth`
+  *    bounds inside WHILE are folded into the depth bound, the rest of
+  *    the guard becomes its node predicate, and no depth bound at all
+  *    runs it to the fixpoint. Result rows
   *    are the visited records at their minimal visit depth, global
   *    across all roots like the dialect's visited-once semantics; both
   *    strategies yield this same SET (strategy orders a sequential
@@ -938,11 +938,6 @@ object ArcadeSql {
       case m: MatchStmt => compileMatch(g, gs, m)
     }
 
-  /** A hop's edge set: the named labels, or every edge when the hop
-    * was written label-less (`out()`/`in()`/`both()`). */
-  private def edgesFor(g: PropertyGraph, labels: Seq[String]): DataFrame =
-    if (labels.isEmpty) g.edges else g.edges.filter(col("label").isin(labels: _*))
-
   /** The record frame a FROM target denotes: id/label + the label's
     * declared properties (nodes), or src/dst/label + properties (edges).
     * Dialect parity: `SELECT FROM Customer` returns Customer's schema,
@@ -1570,15 +1565,8 @@ object ArcadeSql {
       case LabelSource(l) => gs.labels.exists(ls => ls.label == l && ls.kind == "edge")
       case _ => false
     }
-    def hopPairs(h: HopExpr): DataFrame = {
-      val es = edgesFor(g, h.labels)
-      h.dir match {
-        case "out" => es.select(col("src").as("id"), col("dst").as("nbr"))
-        case "in" => es.select(col("dst").as("id"), col("src").as("nbr"))
-        case "both" => es.select(col("src").as("id"), col("dst").as("nbr"))
-          .unionByName(es.select(col("dst").as("id"), col("src").as("nbr")))
-      }
-    }
+    def hopPairs(h: HopExpr): DataFrame =
+      g.oriented(h.labels, h.dir).select(col("src").as("id"), col("dst").as("nbr"))
     // a chain composes one (id, nbr) frame per link — each link an
     // edge-sized equi join, so an n-hop chain is n-1 joins over edge
     // frames, never a per-row traversal
@@ -1823,13 +1811,8 @@ object ArcadeSql {
       val base = sourceFrame(g, gs, sel.from)
       sel.where.map(w => base.filter(ce(w, n => base(n)))).getOrElse(base)
     }
-    val es = edgesFor(g, h.labels)
-    val pairs = h.dir match {
-      case "out" => es.select(col("src").as("__from"), col("dst").as("__to"))
-      case "in" => es.select(col("dst").as("__from"), col("src").as("__to"))
-      case "both" => es.select(col("src").as("__from"), col("dst").as("__to"))
-        .unionByName(es.select(col("dst").as("__from"), col("src").as("__to")))
-    }
+    val pairs = g.oriented(h.labels, h.dir)
+      .select(col("src").as("__from"), col("dst").as("__to"))
     val hopTo = start.select(col("id").as("__from")).join(pairs, "__from")
       .select(col("__to").as("id"))
     // neighbor records keep the full node schema of their labels; the
@@ -1861,10 +1844,7 @@ object ArcadeSql {
     case Bin("and", l, r) =>
       val (d1, p1) = splitWhile(l)
       val (d2, p2) = splitWhile(r)
-      val depth = (d1, d2) match {
-        case (Some(a), Some(b)) => Some(math.min(a, b))
-        case _ => d1.orElse(d2)
-      }
+      val depth = (d1 ++ d2).reduceOption(math.min)
       val pred = (p1, p2) match {
         case (Some(a), Some(b)) => Some(Bin("and", a, b))
         case _ => p1.orElse(p2)
@@ -1891,47 +1871,38 @@ object ArcadeSql {
     found
   }
 
+  /** The BFS a TRAVERSE or a variable-length MATCH step runs: the WHILE
+    * guard's `$depth` bound folds into the explicit depth bound (the
+    * smaller wins), the rest of the guard becomes the node predicate of
+    * [[PropertyGraph.traverse]]; no bound at all runs to the fixpoint. */
+  private def bfs(g: PropertyGraph, starts: DataFrame, labels: Seq[String], dir: String,
+      maxDepth: Option[Int], whileE: Option[Expr], withPath: Boolean = false): DataFrame = {
+    val (whileDepth, whilePred) = whileE.map(splitWhile).getOrElse((None, None))
+    g.traverse(starts, labels, dir, (maxDepth ++ whileDepth).reduceOption(math.min),
+      whilePred.map(p => ce(p, n => g.nodes(n))), withPath)
+  }
+
   private def compileTraverse(g: PropertyGraph, gs: GraphSchema, tr: Traverse,
       withPath: Boolean = false): DataFrame = {
     val dirs = tr.hops.map(_.dir).distinct
     if (dirs.size != 1)
       fail("TRAVERSE with mixed out()/in() directions is unsupported — use both()")
     // a label-less hop means every edge label
-    val labels =
-      if (tr.hops.exists(_.labels.isEmpty)) gs.edgeLabels
-      else tr.hops.flatMap(_.labels)
+    val labels = if (tr.hops.exists(_.labels.isEmpty)) Nil else tr.hops.flatMap(_.labels)
     val starts = sourceFrame(g, gs, tr.from)
     if (!starts.columns.contains("id")) fail("TRAVERSE roots must be vertex records")
-
-    val (whileDepth, whilePred) = tr.whileE.map(splitWhile).getOrElse((None, None))
-    val maxDepth = (tr.maxDepth, whileDepth) match {
-      case (Some(a), Some(b)) => Some(math.min(a, b))
-      case (a, b) => a.orElse(b)
-    }
-    val guard = whilePred.map(p => ce(p, n => g.nodes(n)))
-
-    if (withPath) {
-      // lineage projection ($path): the path-carrying BFS; global
-      // semantics stay "each record once, minimal depth across roots",
-      // the canonical path = min (depth, id array) — one struct-min
-      // aggregate, deterministic and oracle-reproducible
-      val visited = g.traversePaths(starts, labels, dirs.head, maxDepth, guard)
-      val firstVisit = visited.groupBy(col("node_id").as("id"))
+    val visited = bfs(g, starts, labels, dirs.head, tr.maxDepth, tr.whileE, withPath)
+    // dialect semantics: each record is visited once (global visited
+    // set), reported at its breadth-first minimal depth across roots;
+    // with lineage ($path) the canonical path = min (depth, id array)
+    // — one struct-min aggregate, deterministic and oracle-reproducible
+    val firstVisit =
+      if (withPath) visited.groupBy(col("node_id").as("id"))
         .agg(min(struct(col("depth"), col("path"))).as("b"))
         .select(col("id"), col("b.depth").as("$depth"), col("b.path").as("$path"),
           // $parent = the canonical path's predecessor (null at the root)
           when(size(col("b.path")) > 1, element_at(col("b.path"), -2)).as("$parent"))
-      return g.nodes.join(firstVisit, Seq("id"), "inner")
-    }
-    val visited = maxDepth match {
-      case Some(d) => g.traverse(starts, labels, dirs.head, d,
-        guard.getOrElse(lit(true)))
-      case None => g.traverseUnbounded(starts, labels, dirs.head, guard)
-    }
-    // dialect semantics: each record is visited once (global visited
-    // set), reported at its breadth-first minimal depth across roots
-    val firstVisit = visited.groupBy(col("node_id").as("id"))
-      .agg(min(col("depth")).as("$depth"))
+      else visited.groupBy(col("node_id").as("id")).agg(min(col("depth")).as("$depth"))
     g.nodes.join(firstVisit, Seq("id"), "inner")
   }
 
@@ -1959,18 +1930,8 @@ object ArcadeSql {
           // traversal reaches, depth 0 (the binding itself) included
           // (OrientDB-lineage while-step rule). `$depth < n` folds into
           // the depth bound exactly like TRAVERSE's WHILE.
-          val (wd, wp) = st.node.whileE.map(splitWhile).getOrElse((None, None))
-          val bound = (st.node.maxDepth, wd) match {
-            case (Some(a), Some(b)) => Some(math.min(a, b))
-            case (a, b) => a.orElse(b)
-          }
-          val guard = wp.map(p => ce(p, n => g.nodes(n)))
           val starts = t.bound.select(col(s"${t.cur}_id").as("id")).distinct()
-          val visited = bound match {
-            case Some(d) => g.traverse(starts, st.labels, st.dir, d,
-              guard.getOrElse(lit(true)))
-            case None => g.traverseUnbounded(starts, st.labels, st.dir, guard)
-          }
+          val visited = bfs(g, starts, st.labels, st.dir, st.node.maxDepth, st.node.whileE)
           val target = st.node.typ
             .map(ty => g.nodes.filter(col("label") === ty)).getOrElse(g.nodes)
           val tgt = target.select(
@@ -1988,19 +1949,7 @@ object ArcadeSql {
           val f = st.node.where.map(w => ce(w, n => col(s"${as}_$n")))
           t = t.hopOptional(st.dir, st.labels.head, st.node.typ, as, f)
         } else {
-          t = st.node.typ match {
-            case Some(typ) => st.dir match {
-              case "out" => t.out(st.labels.head, typ, as)
-              case "in" => t.in(st.labels.head, typ, as)
-              case "both" => t.both(st.labels.head, typ, as)
-            }
-            case None => st.dir match {
-              case "out" => t.outAny(st.labels.head, as)
-              case "in" => t.inAny(st.labels.head, as)
-              case "both" => t.bothAny(st.labels.head, as)
-            }
-          }
-          t = bindFilter(t, as, st.node.where)
+          t = bindFilter(t.hop(st.dir, st.labels.head, st.node.typ, as), as, st.node.where)
         }
       }
       (t.result, aliases.toSet)

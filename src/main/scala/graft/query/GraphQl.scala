@@ -666,12 +666,7 @@ object GraphQl {
           val as = s"${binding}_h$hopIdx"
           val tHop = f.cond.map(tc =>
             t.filter(col(s"${binding}_label") === tc)).getOrElse(t)
-          val hopped = dir match {
-            case "out" => tHop.outAny(edgeLabel, as)
-            case "in" => tHop.inAny(edgeLabel, as)
-            case "both" => tHop.bothAny(edgeLabel, as)
-          }
-          val filtered = applyArgs(hopped, as, f.args)
+          val filtered = applyArgs(tHop.hop(dir, edgeLabel, None, as), as, f.args)
           val (t2, nested) = compileSelections(filtered, as,
             s"$prefix${f.alias}_", f.selections, depth + 1)
           // restore the outer binding so sibling fields hop from it

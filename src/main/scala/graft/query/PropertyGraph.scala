@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Rounds
 
 /** The graph-query surface of the engine (SURVEY §2.B.3): ArcadeDB's
   * traversal operators (`out/in/both/outE/inE/…`, `MATCH` patterns,
@@ -42,76 +43,74 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
   def inDegree(edgeLabel: String): DataFrame =
     edgesOf(edgeLabel).groupBy(col("dst").as("id")).agg(count(lit(1)).as("degree"))
 
-  /** TRAVERSE … WHILE (SURVEY §2.B.3 variable-length path): bounded
-    * breadth-first expansion as an iterative driver loop of joins, one
-    * join per depth, with distinct-on-(start,node) dedup (the explicit
-    * visited set — SURVEY §7 risk note). `direction` ∈ {"out","in",
-    * "both"}; `whileNode` is the ArcadeDB `while:` guard — a predicate
-    * over the node row that must hold for the traversal to CONTINUE
-    * THROUGH a node (guarded nodes are still reported, but not
-    * expanded; the start frontier is always expanded). Lineage is cut
-    * with `localCheckpoint` every few iterations. For unbounded forms
-    * use the GraphX Pregel paths (shortestPathsTo runs to fixpoint).
-    *
-    * Returns (start_id, node_id, depth) with depth = first (minimal)
-    * depth at which node_id is reached from start_id; depth 0 = start.
-    */
-  def traverse(startNodes: DataFrame, edgeLabels: Seq[String], direction: String,
-      maxDepth: Int, whileNode: Column = lit(true)): DataFrame = {
-    val hop = hopRelation(edgeLabels, direction)
-    // nodes passing the while-guard (joined to decide expansion)
-    val expandable = nodes.filter(whileNode).select(col("id").as("node_id"))
-    var frontier = startNodes.select(col("id").as("start_id"), col("id").as("node_id"),
-      lit(0).as("depth"))
-    var visited = frontier
-    var d = 0
-    while (d < maxDepth) {
-      d += 1
-      val expanding =
-        if (d == 1) frontier // the start frontier always expands
-        else frontier.join(expandable, Seq("node_id"), "left_semi")
-      // distinct BEFORE tagging the (constant) depth: the dedup and the
-      // anti-join then share the (start_id, node_id) partitioning, so
-      // Catalyst reuses one exchange instead of re-shuffling the full
-      // frontier twice per depth
-      val next = expanding.join(hop, expanding("node_id") === hop("from"))
-        .select(col("start_id"), col("to").as("node_id"))
-        .distinct()
-      // keep only first-reach depth (minimal-depth semantics)
-      frontier = next.join(visited.select("start_id", "node_id"),
-        Seq("start_id", "node_id"), "left_anti")
-        .select(col("start_id"), col("node_id"), lit(d).as("depth"))
-      if (d % 3 == 0) frontier = frontier.localCheckpoint()
-      visited = visited.unionByName(frontier)
+  /** The edges of `labels` (every edge when `labels` is empty) as an
+    * oriented `(src, dst, carry…)` frame for a traversal `direction`:
+    * `out` keeps the stored orientation, `in` swaps the endpoints,
+    * `both` unions the two orientations (case-insensitive). `carry`
+    * columns are evaluated over the stored edge row, so they keep the
+    * edge's own orientation. Every hop, TRAVERSE, hop projection and
+    * GraphX topology orients its edges here. */
+  def oriented(labels: Seq[String], direction: String, carry: Column*): DataFrame = {
+    val es = if (labels.isEmpty) edges else edges.filter(col("label").isin(labels: _*))
+    def side(from: String, to: String): DataFrame =
+      es.select(col(from).as("src") +: col(to).as("dst") +: carry: _*)
+    direction.toLowerCase match {
+      case "out" => side("src", "dst")
+      case "in" => side("dst", "src")
+      case "both" => side("src", "dst").unionByName(side("dst", "src"))
+      case other => throw new IllegalArgumentException(
+        s"unsupported direction '$other' (expected OUT, IN, or BOTH)")
     }
-    visited
   }
 
-  /** TRAVERSE with LINEAGE (`$path`, SURVEY §2.B.3): the same
-    * breadth-first loop as [[traverse]]/[[traverseUnbounded]], carrying
-    * the id array of ONE canonical root-to-node path. Canonical =
-    * minimal depth, ties to the lexicographically smallest id array —
-    * deterministic and engine-independent, so a SQL oracle reproduces
-    * it. The induction that makes one array per frontier row enough:
-    * every minimal-depth-d path to a node runs through a parent whose
-    * own minimal depth is exactly d−1 (a shallower parent would give
-    * the node a shallower path), and all candidate arrays share length
-    * d, so `min(parent.path) ++ node` IS the global minimum — computed
-    * as ONE map-side-combinable min aggregate per (start, node), never
-    * an enumeration of paths. Paths never revisit a node: the frontier
-    * anti-joins the visited set, exactly like the path-free loops, so
-    * cycles terminate (GraphSpec). `maxDepth` None runs to fixpoint.
-    * Returns (start_id, node_id, depth, path) with path(0) = start_id
-    * and path(depth) = node_id. */
-  def traversePaths(startNodes: DataFrame, edgeLabels: Seq[String],
-      direction: String, maxDepth: Option[Int],
-      whileNode: Option[Column] = None): DataFrame = {
-    val hop = hopRelation(edgeLabels, direction).localCheckpoint(true)
+  /** TRAVERSE (SURVEY §2.B.3 variable-length path): breadth-first
+    * expansion as a driver loop of joins, one join per depth, with the
+    * (start, node) pairs already visited anti-joined out of each new
+    * frontier (the explicit visited set, SURVEY §7 risk note), so every
+    * node is reported once per start at its minimal depth and cyclic
+    * graphs terminate. The loop stops at `maxDepth`, or at the fixpoint
+    * when the frontier drains (`maxDepth` None needs no bound at all).
+    * `whileNode` is the ArcadeDB `while:` guard, a predicate over the
+    * node row that must hold for the traversal to CONTINUE THROUGH a
+    * node: guarded nodes are still reported, but not expanded; the
+    * start frontier is always expanded.
+    *
+    * Each depth is two jobs, both [[Rounds.checkpoint]]s whose row
+    * count rides the materializing job: the deduplicated reach, whose
+    * zero count stops the loop before the visited anti-join shuffles
+    * the (by then largest) visited relation one useless time, then the
+    * new frontier. The visited union is re-checkpointed every 8 depths
+    * to keep its lineage flat (on a cluster, substitute a reliable
+    * checkpoint).
+    *
+    * Returns (start_id, node_id, depth) with depth 0 = the start. With
+    * `withPath` a fourth column `path` carries the id array of ONE
+    * canonical start-to-node path: minimal depth, ties to the
+    * lexicographically smallest array, so a SQL oracle reproduces it.
+    * One array per (start, node) is enough by induction: every
+    * minimal-depth-d path runs through a parent of minimal depth d−1
+    * (a shallower parent would give the node a shallower path), and
+    * all candidate arrays share length d, so `min(parent.path) ++ node`
+    * IS the global minimum — one map-side-combinable min aggregate per
+    * (start, node), never an enumeration of paths. path(0) = start_id,
+    * path(depth) = node_id.
+    */
+  def traverse(starts: DataFrame, labels: Seq[String], direction: String,
+      maxDepth: Option[Int] = None, whileNode: Option[Column] = None,
+      withPath: Boolean = false): DataFrame = {
+    // parallel edges collapse up front: reachability only needs edge
+    // EXISTENCE, and deduping once here (SUPPLIED_BY carries one row
+    // per lineitem, ~3× per distinct endpoint pair) shrinks every
+    // frontier join by the same factor, at every depth
+    val hop = oriented(labels, direction).distinct().localCheckpoint(true)
+    // the guard relation exists only when a guard does: the unguarded
+    // loop pays no frontier × nodes semi-join per depth
     val expandable = whileNode.map(p =>
       nodes.filter(p).select(col("id").as("node_id")).localCheckpoint(true))
-    var frontier = startNodes.select(col("id").as("start_id"),
-        col("id").as("node_id"), lit(0).as("depth"), array(col("id")).as("path"))
-      .localCheckpoint(true)
+    def tagged(df: DataFrame, depth: Int): DataFrame = df.select(Seq(col("start_id"),
+      col("node_id"), lit(depth).as("depth")) ++ (if (withPath) Seq(col("path")) else Nil): _*)
+    var frontier = tagged(starts.select(col("id").as("start_id"), col("id").as("node_id"),
+      array(col("id")).as("path")), 0).localCheckpoint(true)
     var visited = frontier
     var d = 0
     var drained = false
@@ -119,98 +118,23 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
       d += 1
       val expanding = expandable match {
         case Some(exp) if d > 1 => frontier.join(exp, Seq("node_id"), "left_semi")
-        case _ => frontier // no guard, or the start frontier (always expands)
+        case _ => frontier
       }
-      // candidate arrays fold through a partial-aggregated min on the
-      // (start, node) key — the dedup the path-free loop does with
-      // distinct(), with the canonical-path pick riding the same shuffle
-      val reached = expanding.join(hop, expanding("node_id") === hop("from"))
-        .select(col("start_id"), col("to").as("node_id"),
-          concat(col("path"), array(col("to"))).as("path"))
-        .groupBy(col("start_id"), col("node_id"))
-        .agg(min(col("path")).as("path"))
-        .localCheckpoint(true)
-      if (reached.isEmpty) drained = true
+      val step = expanding.join(hop, expanding("node_id") === hop("src"))
+      // one row per (start, node): distinct, or with paths the
+      // canonical pick as a partial-aggregated min on the same key
+      val (reached, reachedRows) = Rounds.checkpoint(
+        if (withPath) step.groupBy(col("start_id"), col("dst").as("node_id"))
+          .agg(min(concat(col("path"), array(col("dst")))).as("path"))
+        else step.select(col("start_id"), col("dst").as("node_id")).distinct(),
+        count(lit(1)))
+      if (reachedRows.getLong(0) == 0L) drained = true
       else {
-        frontier = reached.join(visited.select("start_id", "node_id"),
-          Seq("start_id", "node_id"), "left_anti")
-          .select(col("start_id"), col("node_id"), lit(d).as("depth"), col("path"))
-          .localCheckpoint(true)
-        drained = frontier.isEmpty
-        visited = visited.unionByName(frontier)
-        if (d % 8 == 0) visited = visited.localCheckpoint(true)
-      }
-    }
-    visited
-  }
-
-  /** The (from, to) relation a traversal expands over. Parallel edges
-    * are collapsed up front: BFS reachability only needs edge
-    * EXISTENCE, and deduping once here (e.g. SUPPLIED_BY carries one
-    * row per lineitem, ~3× per distinct endpoint pair) shrinks every
-    * downstream frontier join by the same factor — the multiplication
-    * would otherwise be paid again at every depth. */
-  private def hopRelation(edgeLabels: Seq[String], direction: String): DataFrame = {
-    val es = edges.filter(col("label").isin(edgeLabels: _*))
-    val hop = direction match {
-      case "out" => es.select(col("src").as("from"), col("dst").as("to"))
-      case "in" => es.select(col("dst").as("from"), col("src").as("to"))
-      case "both" => es.select(col("src").as("from"), col("dst").as("to"))
-        .unionByName(es.select(col("dst").as("from"), col("src").as("to")))
-    }
-    hop.distinct()
-  }
-
-  /** Unbounded `TRAVERSE … [WHILE <pred>]` (SURVEY §2.B.3): breadth-first
-    * expansion run to FIXPOINT — the loop ends when the frontier is
-    * empty, no depth bound required. Termination is guaranteed on any
-    * graph, cyclic or not, because the frontier is left-anti-joined
-    * against the visited set each step: (start, node) pairs are visited
-    * at most once and the node set is finite, so the visited relation
-    * grows strictly until the frontier drains. Each iteration is
-    * materialized via `localCheckpoint` (lineage would otherwise grow
-    * unboundedly — on a cluster, substitute a reliable `checkpoint`);
-    * the per-step emptiness probe is a count over the just-materialized
-    * blocks, not a recompute. Semantics match [[traverse]]: guarded
-    * nodes are reported but not expanded; the start frontier always
-    * expands; depth = minimal reach depth.
-    */
-  def traverseUnbounded(startNodes: DataFrame, edgeLabels: Seq[String],
-      direction: String, whileNode: Option[Column] = None): DataFrame = {
-    val hop = hopRelation(edgeLabels, direction).localCheckpoint(true) // reused every depth
-    // guard relation built only when a guard exists — the unguarded form
-    // must not pay a frontier×nodes semi-join per depth
-    val expandable = whileNode.map(p =>
-      nodes.filter(p).select(col("id").as("node_id")).localCheckpoint(true))
-    var frontier = startNodes.select(col("id").as("start_id"), col("id").as("node_id"),
-      lit(0).as("depth")).localCheckpoint(true)
-    var visited = frontier
-    var d = 0
-    var drained = false
-    while (!drained) {
-      d += 1
-      val expanding = expandable match {
-        case Some(exp) if d > 1 => frontier.join(exp, Seq("node_id"), "left_semi")
-        case _ => frontier // no guard, or the start frontier (always expands)
-      }
-      // reached is materialized BEFORE the visited anti-join: at the
-      // draining depth the expansion comes up empty, and short-
-      // circuiting here avoids shuffling the (by now largest) visited
-      // relation one last useless time — AQE launches both join stages
-      // concurrently, so the empty left side alone would not save it.
-      // distinct excludes the constant depth tag so the dedup and the
-      // anti-join share one (start_id, node_id) exchange.
-      val reached = expanding.join(hop, expanding("node_id") === hop("from"))
-        .select(col("start_id"), col("to").as("node_id"))
-        .distinct()
-        .localCheckpoint(true)
-      if (reached.isEmpty) drained = true
-      else {
-        frontier = reached.join(visited.select("start_id", "node_id"),
-          Seq("start_id", "node_id"), "left_anti")
-          .select(col("start_id"), col("node_id"), lit(d).as("depth"))
-          .localCheckpoint(true)
-        drained = frontier.isEmpty
+        val (next, nextRows) = Rounds.checkpoint(tagged(reached.join(
+          visited.select("start_id", "node_id"), Seq("start_id", "node_id"), "left_anti"), d),
+          count(lit(1)))
+        frontier = next
+        drained = nextRows.getLong(0) == 0L
         visited = visited.unionByName(frontier)
         if (d % 8 == 0) visited = visited.localCheckpoint(true)
       }
@@ -226,53 +150,32 @@ final case class Traversal(g: PropertyGraph, bound: DataFrame, cur: String) {
   private def prefixed(df: DataFrame, as: String): DataFrame =
     df.select(df.columns.map(c => col(c).as(s"${as}_$c")).toIndexedSeq: _*)
 
-  /** Follow edges with `edgeLabel` out of the current binding into nodes
-    * labeled `nodeLabel`, bound as `as`. `out('L'){as: b}`. */
+  /** The prefixed edge columns a hop binds, `<as>_e_<column>`, kept in
+    * the edge's stored orientation whatever the hop direction. */
+  private def edgeColumns(as: String): Seq[Column] =
+    g.edges.columns.toSeq.map(c => col(c).as(s"${as}_e_$c"))
+
+  /** Follow `edgeLabel` edges in direction `dir` (`out`/`in`/`both`)
+    * from the current binding into nodes labeled `nodeLabel`, bound as
+    * `as`: `out('L'){type: T, as: b}`. `nodeLabel` None joins the
+    * target without a label filter (the GraphQL surface and untyped
+    * MATCH steps: an edge label determines its endpoints by
+    * construction, so the join shape is the same with one filter
+    * fewer). Two equi-joins: binding ⋈ oriented edges ⋈ target nodes. */
+  def hop(dir: String, edgeLabel: String, nodeLabel: Option[String], as: String): Traversal = {
+    val e = g.oriented(Seq(edgeLabel), dir, edgeColumns(as): _*)
+    val n = prefixed(nodeLabel.map(g.nodesOf).getOrElse(g.nodes), as)
+    val joinedE = bound.join(e, bound(s"${cur}_id") === e("src"))
+    Traversal(g, joinedE.join(n, joinedE("dst") === n(s"${as}_id")).drop("src", "dst"), as)
+  }
+
+  /** `out('L')`, `in('L')`, `both('L')` into nodes labeled `nodeLabel`. */
   def out(edgeLabel: String, nodeLabel: String, as: String): Traversal =
-    hop(edgeLabel, nodeLabel, as, reverse = false)
-
-  /** `in('L')`: follow edges arriving at the current binding. */
+    hop("out", edgeLabel, Some(nodeLabel), as)
   def in(edgeLabel: String, nodeLabel: String, as: String): Traversal =
-    hop(edgeLabel, nodeLabel, as, reverse = true)
-
-  /** `both('L')`: union of out and in. */
-  def both(edgeLabel: String, nodeLabel: String, as: String): Traversal = {
-    val o = hop(edgeLabel, nodeLabel, as, reverse = false)
-    val i = hop(edgeLabel, nodeLabel, as, reverse = true)
-    copy(bound = o.bound.unionByName(i.bound), cur = as)
-  }
-
-  private def hop(edgeLabel: String, nodeLabel: String, as: String,
-      reverse: Boolean): Traversal = {
-    val (fromCol, toCol) = if (reverse) ("dst", "src") else ("src", "dst")
-    val e = g.edgesOf(edgeLabel)
-    val eSel = prefixed(e, s"${as}_e")
-    val joinedE = bound.join(eSel,
-      bound(s"${cur}_id") === eSel(s"${as}_e_$fromCol"))
-    val n = prefixed(g.nodesOf(nodeLabel), as)
-    val joined = joinedE.join(n, joinedE(s"${as}_e_$toCol") === n(s"${as}_id"))
-    Traversal(g, joined, as)
-  }
-
-  /** Label-untyped hops (the GraphQL surface: an edge label determines
-    * its endpoints by construction, so the target node set is joined
-    * without a label filter — same join shape, one filter fewer). */
-  def outAny(edgeLabel: String, as: String): Traversal = hopAny(edgeLabel, as, reverse = false)
-  def inAny(edgeLabel: String, as: String): Traversal = hopAny(edgeLabel, as, reverse = true)
-  def bothAny(edgeLabel: String, as: String): Traversal = {
-    val o = hopAny(edgeLabel, as, reverse = false)
-    val i = hopAny(edgeLabel, as, reverse = true)
-    copy(bound = o.bound.unionByName(i.bound), cur = as)
-  }
-
-  private def hopAny(edgeLabel: String, as: String, reverse: Boolean): Traversal = {
-    val (fromCol, toCol) = if (reverse) ("dst", "src") else ("src", "dst")
-    val eSel = prefixed(g.edgesOf(edgeLabel), s"${as}_e")
-    val joinedE = bound.join(eSel,
-      bound(s"${cur}_id") === eSel(s"${as}_e_$fromCol"))
-    val n = prefixed(g.nodes, as)
-    Traversal(g, joinedE.join(n, joinedE(s"${as}_e_$toCol") === n(s"${as}_id")), as)
-  }
+    hop("in", edgeLabel, Some(nodeLabel), as)
+  def both(edgeLabel: String, nodeLabel: String, as: String): Traversal =
+    hop("both", edgeLabel, Some(nodeLabel), as)
 
   /** `outE('L')`: stop at the edge level (SURVEY §2.B.3 edge-level hop);
     * edge columns prefixed `<as>_`. */
@@ -305,22 +208,11 @@ final case class Traversal(g: PropertyGraph, bound: DataFrame, cur: String) {
     * key), so the plan stays broadcast/shuffle-joinable at scale. */
   def hopOptional(dir: String, edgeLabel: String, nodeLabel: Option[String],
       as: String, nodeFilter: Option[Column]): Traversal = {
-    def side(reverse: Boolean): DataFrame = {
-      val (fromCol, toCol) = if (reverse) ("dst", "src") else ("src", "dst")
-      val eSel = prefixed(g.edgesOf(edgeLabel), s"${as}_e")
-      val n = prefixed(nodeLabel.map(g.nodesOf).getOrElse(g.nodes), as)
-      eSel.join(n, eSel(s"${as}_e_$toCol") === n(s"${as}_id"))
-        .withColumn(s"__${as}_from", col(s"${as}_e_$fromCol"))
-    }
-    val hopF0 = dir match {
-      case "out" => side(false)
-      case "in" => side(true)
-      case "both" => side(false).unionByName(side(true))
-      case other => throw new IllegalArgumentException(s"bad hop direction: $other")
-    }
-    val hopF = nodeFilter.map(hopF0.filter).getOrElse(hopF0)
-    val joined = bound.join(hopF, bound(s"${cur}_id") === hopF(s"__${as}_from"), "left")
-      .drop(s"__${as}_from")
+    val e = g.oriented(Seq(edgeLabel), dir, edgeColumns(as): _*)
+    val n = prefixed(nodeLabel.map(g.nodesOf).getOrElse(g.nodes), as)
+    val side = e.join(n, e("dst") === n(s"${as}_id")).drop("dst")
+    val hopF = nodeFilter.map(side.filter).getOrElse(side)
+    val joined = bound.join(hopF, bound(s"${cur}_id") === hopF("src"), "left").drop("src")
     Traversal(g, joined, as)
   }
 

@@ -129,7 +129,7 @@ class ArcadeSqlSpec extends SparkSpec {
   test("TRAVERSE bounded/unbounded agree with PropertyGraph.traverse") {
     val bounded = run(
       "SELECT FROM (TRAVERSE in('IN_REGION', 'IN_NATION') FROM (SELECT FROM Region) MAXDEPTH 2)")
-    val twin = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", 2)
+    val twin = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", Some(2))
     assert(bounded.count() == twin.select("node_id").distinct().count())
     // unbounded (fixpoint) on the same acyclic hierarchy reaches the
     // same records
@@ -159,8 +159,8 @@ class ArcadeSqlSpec extends SparkSpec {
   test("TRAVERSE WHILE folds $depth bounds and keeps node guards") {
     val guarded = run("""SELECT FROM (TRAVERSE in('IN_REGION', 'IN_NATION')
       FROM (SELECT FROM Region) WHILE $depth < 2 AND name <> 'NATION_3')""")
-    val twin = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", 2,
-      whileNode = col("name") =!= "NATION_3")
+    val twin = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", Some(2),
+      whileNode = Some(col("name") =!= "NATION_3"))
     assert(guarded.count() == twin.select("node_id").distinct().count())
   }
 

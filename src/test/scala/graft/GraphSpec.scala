@@ -41,7 +41,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("traverse: minimal-depth BFS with dedup (region in*1..2)") {
-    val t = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", 2)
+    val t = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", Some(2))
     val d1 = t.filter(col("depth") === 1).count()
     val d2 = t.filter(col("depth") === 2).count()
     assert(d1 == 25) // nations
@@ -182,7 +182,7 @@ class GraphSpec extends SparkSpec {
     val e = Seq((1L, 2L, "E"), (2L, 3L, "E"), (3L, 1L, "E"), (3L, 4L, "E"))
       .toDF("src", "dst", "label")
     val pg = PropertyGraph(n, e)
-    val t = pg.traverseUnbounded(n.filter(col("id") === 1), Seq("E"), "out")
+    val t = pg.traverse(n.filter(col("id") === 1), Seq("E"), "out")
       .collect().map(r => (r.getLong(1), r.getInt(2))).toMap
     // 1→2→3→{1 (already visited), 4}: the cycle back to 1 must not loop
     assert(t == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
@@ -193,44 +193,79 @@ class GraphSpec extends SparkSpec {
     val n = Seq((1L, "N"), (2L, "N"), (3L, "N"), (4L, "N")).toDF("id", "label")
     val e = Seq((1L, 2L, "E"), (2L, 3L, "E"), (3L, 4L, "E")).toDF("src", "dst", "label")
     val pg = PropertyGraph(n, e)
-    val t = pg.traverseUnbounded(n.filter(col("id") === 1), Seq("E"), "out",
+    val t = pg.traverse(n.filter(col("id") === 1), Seq("E"), "out",
       whileNode = Some(col("id") =!= 3))
       .collect().map(r => (r.getLong(1), r.getInt(2))).toMap
     // node 3 is reported but not expanded; 4 stays unreached
     assert(t == Map(1L -> 0, 2L -> 1, 3L -> 2))
+    // an unknown direction is refused with the shared message, not a MatchError
+    val bad = intercept[IllegalArgumentException](
+      pg.traverse(n.filter(col("id") === 1), Seq("E"), "sideways"))
+    assert(bad.getMessage == "unsupported direction 'sideways' (expected OUT, IN, or BOTH)")
   }
 
   test("traverseUnbounded matches driver-side BFS on random graphs (cycles included)") {
     import spark.implicits._
     val rnd = new scala.util.Random(42) // fixed seed: deterministic cases
-    (1 to 6).foreach { caseNo =>
-      val nNodes = 2 + rnd.nextInt(7)
-      val nEdges = 1 + rnd.nextInt(14)
+    (1 to 12).foreach { caseNo =>
+      // cases 7-12 are denser: they reach depth 3 and beyond, tie at
+      // equal depth (so the canonical path pick matters) and stop at
+      // guarded nodes
+      val nNodes = if (caseNo <= 6) 2 + rnd.nextInt(7) else 4 + rnd.nextInt(5)
+      val nEdges = if (caseNo <= 6) 1 + rnd.nextInt(14) else 2 * nNodes + rnd.nextInt(2 * nNodes)
       // duplicates and self-loops allowed on purpose
       val edges = Seq.fill(nEdges)(
         (1L + rnd.nextInt(nNodes), 1L + rnd.nextInt(nNodes))).distinct
-      // reference: plain driver-side BFS from node 1
-      val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val dist = scala.collection.mutable.Map(1L -> 0)
-      var frontier = List(1L)
-      while (frontier.nonEmpty) {
-        val next = frontier.flatMap(n => adj.getOrElse(n, Nil))
-          .filterNot(dist.contains).distinct
-        next.foreach(n => dist(n) = dist(frontier.head) + 1)
-        frontier = next
+      // reference: plain driver-side BFS from node 1, keeping per node
+      // its minimal depth and the lexicographically smallest path of
+      // that depth; nodes with id % 3 == 0 stop expansion under the guard
+      def reference(dir: String, maxDepth: Option[Int],
+          guarded: Boolean): Map[Long, (Int, Seq[Long])] = {
+        val oriented = dir match {
+          case "out" => edges
+          case "in" => edges.map(_.swap)
+          case "both" => edges ++ edges.map(_.swap)
+        }
+        val adj = oriented.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        val best = scala.collection.mutable.Map(1L -> ((0, Seq(1L))))
+        var frontier = Seq(1L)
+        var d = 0
+        while (frontier.nonEmpty && maxDepth.forall(d < _)) {
+          d += 1
+          val expanding = if (d == 1 || !guarded) frontier else frontier.filter(_ % 3 != 0)
+          val next = (for (n <- expanding; m <- adj.getOrElse(n, Nil) if !best.contains(m))
+              yield m -> (best(n)._2 :+ m))
+            .groupBy(_._1).view
+            .mapValues(_.map(_._2).min(Ordering.Implicits.seqOrdering[Seq, Long])).toMap
+          next.foreach { case (m, p) => best(m) = (d, p) }
+          frontier = next.keys.toSeq
+        }
+        best.toMap
       }
       val nDf = (1L to nNodes).map(id => (id, "N")).toDF("id", "label")
       val eDf = edges.map { case (a, b) => (a, b, "E") }.toDF("src", "dst", "label")
-      val got = query.PropertyGraph(nDf, eDf)
-        .traverseUnbounded(nDf.filter(col("id") === 1), Seq("E"), "out")
-        .collect().map(r => r.getLong(1) -> r.getInt(2)).toMap
-      assert(got == dist.toMap, s"case $caseNo edges=$edges")
+      val pg = query.PropertyGraph(nDf, eDf)
+      for (dir <- Seq("out", "in", "both"); maxDepth <- Seq(None, Some(1), Some(2));
+           guarded <- Seq(false, true); withPath <- Seq(false, true)) {
+        val want = reference(dir, maxDepth, guarded)
+        val rows = pg.traverse(nDf.filter(col("id") === 1), Seq("E"), dir, maxDepth,
+            if (guarded) Some(col("id") % 3 =!= 0) else None, withPath).collect()
+        val input = s"case $caseNo edges=$edges dir=$dir maxDepth=$maxDepth " +
+          s"guarded=$guarded withPath=$withPath"
+        assert(rows.map(r => r.getLong(1) -> r.getInt(2)).toMap ==
+          want.view.mapValues(_._1).toMap && rows.length == want.size, input)
+        if (withPath) rows.foreach { r =>
+          val (node, depth, path) = (r.getLong(1), r.getInt(2), r.getSeq[Long](3))
+          assert(path.head == 1L && path.last == node && path.length == depth + 1, input)
+          assert(path == want(node)._2, input)
+        }
+      }
     }
   }
 
   test("traverseUnbounded reaches the bounded fixpoint on the acyclic hierarchy") {
-    val bounded = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", 2)
-    val unbounded = g.traverseUnbounded(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in")
+    val bounded = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in", Some(2))
+    val unbounded = g.traverse(g.nodesOf("Region"), Seq("IN_REGION", "IN_NATION"), "in")
     assert(unbounded.count() == bounded.count())
     assert(unbounded.exceptAll(bounded).count() == 0)
   }
@@ -370,7 +405,7 @@ class GraphSpec extends SparkSpec {
     val e = Seq((1L, 2L, "E"), (1L, 3L, "E"), (2L, 4L, "E"), (3L, 4L, "E"))
       .toDF("src", "dst", "label")
     val pg = PropertyGraph(n, e)
-    val paths = pg.traversePaths(n.filter(col("id") === 1), Seq("E"), "out", None)
+    val paths = pg.traverse(n.filter(col("id") === 1), Seq("E"), "out", withPath = true)
       .collect().map(r => r.getLong(1) -> ((r.getInt(2), r.getSeq[Long](3)))).toMap
     assert(paths == Map(
       1L -> ((0, Seq(1L))), 2L -> ((1, Seq(1L, 2L))), 3L -> ((1, Seq(1L, 3L))),
@@ -380,14 +415,14 @@ class GraphSpec extends SparkSpec {
     val e2 = Seq((1L, 2L, "E"), (2L, 5L, "E"), (1L, 5L, "E")).toDF("src", "dst", "label")
     val n2 = Seq((1L, "N"), (2L, "N"), (5L, "N")).toDF("id", "label")
     val p2 = PropertyGraph(n2, e2)
-      .traversePaths(n2.filter(col("id") === 1), Seq("E"), "out", None)
+      .traverse(n2.filter(col("id") === 1), Seq("E"), "out", withPath = true)
       .collect().map(r => r.getLong(1) -> r.getSeq[Long](3)).toMap
     assert(p2(5L) == Seq(1L, 5L))
     // cycle 1→2→3→1: fixpoint terminates, no path revisits a node
     val ec = Seq((1L, 2L, "E"), (2L, 3L, "E"), (3L, 1L, "E"), (3L, 4L, "E"))
       .toDF("src", "dst", "label")
     val pc = PropertyGraph(n, ec)
-      .traversePaths(n.filter(col("id") === 1), Seq("E"), "out", None)
+      .traverse(n.filter(col("id") === 1), Seq("E"), "out", withPath = true)
       .collect().map(r => (r.getLong(1), r.getInt(2), r.getSeq[Long](3)))
     assert(pc.length == 4) // 1,2,3,4 — each exactly once
     pc.foreach { case (node, depth, path) =>
@@ -398,8 +433,8 @@ class GraphSpec extends SparkSpec {
     // reported, not expanded
     val eg = Seq((1L, 2L, "E"), (2L, 3L, "E"), (3L, 4L, "E")).toDF("src", "dst", "label")
     val pg2 = PropertyGraph(n, eg)
-    val guarded = pg2.traversePaths(n.filter(col("id") === 1), Seq("E"), "out",
-        Some(5), Some(col("id") =!= 3))
+    val guarded = pg2.traverse(n.filter(col("id") === 1), Seq("E"), "out",
+        Some(5), Some(col("id") =!= 3), withPath = true)
       .collect().map(r => r.getLong(1)).toSet
     assert(guarded == Set(1L, 2L, 3L))
   }
@@ -965,6 +1000,29 @@ class GraphSpec extends SparkSpec {
       "RandomWalks.scala" -> """.sortWithinPartitions(col("u"))""",
       "RandomWalks.scala" -> """.sortWithinPartitions(col("__mu"), col("__mw"))""")
     assert(found.toSet == exempt, found.mkString("\n"))
+  }
+
+  test("one traversal core: edge orientation and the BFS loop live in query/PropertyGraph") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String): List[(String, Seq[String])] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        .map(p => p.getFileName.toString ->
+          java.nio.file.Files.readAllLines(p).asScala.toSeq)
+      finally walk.close()
+    }
+    // the out/in/both → (src, dst) orientation is one match, in oriented()
+    val orientations = Seq("src/main/scala/graft/query", "src/main/scala/graft/graphx")
+      .flatMap(sources)
+      .map { case (f, ls) => f -> ls.count(_.contains("case \"both\" =>")) }
+      .filter(_._2 > 0)
+    assert(orientations == Seq("PropertyGraph.scala" -> 1), orientations.mkString("\n"))
+    // the three BFS loops and the label-free hop twins are merged away
+    val gone = sources("src/main").flatMap { case (f, ls) =>
+      ls.filter(l => Seq("traverseUnbounded", "traversePaths", "hopAny").exists(l.contains))
+        .map(l => s"$f: $l")
+    }
+    assert(gone.isEmpty, gone.mkString("\n"))
   }
 
   test("Rounds.probed: same rows on both sides of the threshold, hash-partitioned on the key above it") {
