@@ -1391,10 +1391,12 @@ object GraphLoader {
 
   /** Store-backed [[graft.query.PropertyGraph]]: entity unions widened
     * to the declared schema, plus the full-text provider resolving a
-    * (label, property) to its persisted postings frame — resolved
-    * against ONE manifest read, so the graph and its indexes are one
-    * consistent snapshot (a query never joins new postings against old
-    * rows). */
+    * (label, property) to its persisted postings frame and the observed
+    * edge endpoints that bound hop targets — resolved against ONE
+    * manifest read, so the graph, its indexes and its endpoint
+    * metadata are one consistent snapshot (a query never joins new
+    * postings against old rows, nor hops into a label set older than
+    * the edges it reads). */
   def openGraph(spark: SparkSession, outDir: String): graft.query.PropertyGraph =
     openGraphAt(spark, outDir, Store.readManifest(outDir))
 
@@ -1427,7 +1429,7 @@ object GraphLoader {
     val ft = gs.indexes.filter(ix => ix.fulltext && ix.target == "node" && ix.isBuildable)
       .flatMap(ix => Store.readFt(spark, outDir, "nodes", ix.label, ix.property, m)
         .map(df => (ix.label, ix.property) -> df)).toMap
-    graft.query.PropertyGraph(nodes, edges, (l, p) => ft.get((l, p)))
+    graft.query.PropertyGraph(nodes, edges, (l, p) => ft.get((l, p)), m.edgeEndpoints.get)
   }
 
   /** Project `df` onto `target`: shared columns cast to the store

@@ -59,8 +59,14 @@ object Store {
     * them by name. `edgeEndpoints`: per edge label, the OBSERVED set
     * of (src node labels, dst node labels) — maintained at bulk load
     * and on edge append as a monotone over-approximation (edge deletes
-    * never shrink it); consumed by the vertex-DELETE integrity probe
-    * to scan only edge labels that can reference the deleted label.
+    * never shrink it), always in the same commit as the edges it
+    * describes; consumed by the vertex-DELETE integrity probe to scan
+    * only edge labels that can reference the deleted label, by GraphQL
+    * introspection to type hop fields, and by every read that hops
+    * without a target type ([[graft.query.PropertyGraph.reach]]) to
+    * scan only the vertex labels the hop can land on. Reads therefore
+    * depend on the superset invariant: a stored edge whose endpoint
+    * label is missing here would silently drop out of hop results.
     * `ft`: full-text postings generations ([[FullText]]) keyed by
     * (entity, label, property) — the index lives under the SAME
     * manifest as the rows it serves, so a data commit and its postings

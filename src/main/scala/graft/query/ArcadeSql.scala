@@ -1602,7 +1602,7 @@ object ArcadeSql {
       // dialect's flatten rule); one values frame per distinct
       // (chain, prop), joined like a degree frame
       val vals = chainPairs(hops)
-        .join(g.nodes.select(col("id").as("__hop_nid"),
+        .join(g.reach(hops.last.labels, hops.last.dir).select(col("id").as("__hop_nid"),
           col(field.name).as("__hop_v")), col("nbr") === col("__hop_nid"))
         .filter(col("__hop_v").isNotNull)
         .groupBy(col("id"))
@@ -1817,7 +1817,7 @@ object ArcadeSql {
       .select(col("__to").as("id"))
     // neighbor records keep the full node schema of their labels; the
     // store's union schema is projected per-row by label downstream
-    expandModifiers(sel, g.nodes.join(hopTo, Seq("id"), "inner"))
+    expandModifiers(sel, g.reach(h.labels, h.dir).join(hopTo, Seq("id"), "inner"))
   }
 
   /** `SELECT expand(outV()|inV()) FROM <EdgeLabel> [WHERE p]` — the
@@ -1831,7 +1831,11 @@ object ArcadeSql {
         fail(s"expand(${if (end == "src") "outV" else "inV"}()) needs an edge source")
       sel.where.map(w => base.filter(ce(w, n => base(n)))).getOrElse(base)
     }
-    expandModifiers(sel, g.nodes.join(start.select(col(end).as("id")), Seq("id"), "inner"))
+    // an edge label's `dst` endpoints are what an out-hop over it
+    // reaches, its `src` endpoints what an in-hop reaches
+    val labels = sel.from match { case LabelSource(l) => Seq(l); case _ => Nil }
+    val landing = g.reach(labels, if (end == "dst") "out" else "in")
+    expandModifiers(sel, landing.join(start.select(col(end).as("id")), Seq("id"), "inner"))
   }
 
   // ---- TRAVERSE ----

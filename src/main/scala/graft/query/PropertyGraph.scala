@@ -22,7 +22,14 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
       * index for it ([[graft.load.FullText]]). The query compiler
       * routes eligible CONTAINSTEXT predicates through it; the default
       * (no store attached) serves every predicate from the scan. */
-    ftIndex: (String, String) => Option[DataFrame] = (_, _) => None) {
+    ftIndex: (String, String) => Option[DataFrame] = (_, _) => None,
+    /** Observed endpoint vertex labels per edge label, `(src labels,
+      * dst labels)`, from the store manifest ([[graft.load.Store]]'s
+      * `edgeEndpoints`): a superset of the labels every stored edge of
+      * that label connects. [[reach]] bounds hop targets with it; the
+      * default (no store attached) knows no endpoints, so every hop
+      * target is the all-label union. */
+    edgeEndpoints: String => Option[(Set[String], Set[String])] = _ => None) {
 
   def nodesOf(label: String): DataFrame = nodes.filter(col("label") === label)
   def edgesOf(label: String): DataFrame = edges.filter(col("label") === label)
@@ -43,24 +50,43 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
   def inDegree(edgeLabel: String): DataFrame =
     edgesOf(edgeLabel).groupBy(col("dst").as("id")).agg(count(lit(1)).as("degree"))
 
+  /** The nodes a single hop over `labels` in `direction` can land on:
+    * the nodes of the edge labels' observed `dst` labels for `out`,
+    * `src` labels for `in`, both for `both`. Every node when `labels`
+    * is empty or any of them has no endpoint metadata. The label
+    * filter folds into the store's per-label union, so a hop target
+    * scans only the labels it can reach. */
+  def reach(labels: Seq[String], direction: String): DataFrame = {
+    val landing = walks(direction).map(_._2)
+    val known = labels.map(edgeEndpoints)
+    if (labels.isEmpty || known.contains(None)) nodes
+    else nodes.filter(col("label").isin(known.flatten.flatMap { case (srcs, dsts) =>
+      landing.flatMap(end => if (end == "dst") dsts else srcs)
+    }.distinct.sorted: _*))
+  }
+
+  /** The stored `(from, to)` edge columns a traversal `direction`
+    * walks (case-insensitive): `out` keeps the stored orientation,
+    * `in` swaps the endpoints, `both` walks the two orientations. */
+  private def walks(direction: String): Seq[(String, String)] = direction.toLowerCase match {
+    case "out" => Seq(("src", "dst"))
+    case "in" => Seq(("dst", "src"))
+    case "both" => Seq(("src", "dst"), ("dst", "src"))
+    case other => throw new IllegalArgumentException(
+      s"unsupported direction '$other' (expected OUT, IN, or BOTH)")
+  }
+
   /** The edges of `labels` (every edge when `labels` is empty) as an
-    * oriented `(src, dst, carry…)` frame for a traversal `direction`:
-    * `out` keeps the stored orientation, `in` swaps the endpoints,
-    * `both` unions the two orientations (case-insensitive). `carry`
-    * columns are evaluated over the stored edge row, so they keep the
-    * edge's own orientation. Every hop, TRAVERSE, hop projection and
-    * GraphX topology orients its edges here. */
+    * oriented `(src, dst, carry…)` frame for a traversal `direction`
+    * ([[walks]]; `both` unions the two orientations). `carry` columns
+    * are evaluated over the stored edge row, so they keep the edge's
+    * own orientation. Every hop, TRAVERSE, hop projection and GraphX
+    * topology orients its edges here. */
   def oriented(labels: Seq[String], direction: String, carry: Column*): DataFrame = {
     val es = if (labels.isEmpty) edges else edges.filter(col("label").isin(labels: _*))
-    def side(from: String, to: String): DataFrame =
+    walks(direction).map { case (from, to) =>
       es.select(col(from).as("src") +: col(to).as("dst") +: carry: _*)
-    direction.toLowerCase match {
-      case "out" => side("src", "dst")
-      case "in" => side("dst", "src")
-      case "both" => side("src", "dst").unionByName(side("dst", "src"))
-      case other => throw new IllegalArgumentException(
-        s"unsupported direction '$other' (expected OUT, IN, or BOTH)")
-    }
+    }.reduce(_.unionByName(_))
   }
 
   /** TRAVERSE (SURVEY §2.B.3 variable-length path): breadth-first
@@ -155,16 +181,24 @@ final case class Traversal(g: PropertyGraph, bound: DataFrame, cur: String) {
   private def edgeColumns(as: String): Seq[Column] =
     g.edges.columns.toSeq.map(c => col(c).as(s"${as}_e_$c"))
 
+  /** The target nodes of a hop: labeled `nodeLabel`, or else the
+    * nodes the edge label can reach ([[PropertyGraph.reach]]). */
+  private def target(dir: String, edgeLabel: String, nodeLabel: Option[String],
+      as: String): DataFrame =
+    prefixed(nodeLabel.map(g.nodesOf).getOrElse(g.reach(Seq(edgeLabel), dir)), as)
+
   /** Follow `edgeLabel` edges in direction `dir` (`out`/`in`/`both`)
     * from the current binding into nodes labeled `nodeLabel`, bound as
-    * `as`: `out('L'){type: T, as: b}`. `nodeLabel` None joins the
-    * target without a label filter (the GraphQL surface and untyped
-    * MATCH steps: an edge label determines its endpoints by
-    * construction, so the join shape is the same with one filter
-    * fewer). Two equi-joins: binding ⋈ oriented edges ⋈ target nodes. */
+    * `as`: `out('L'){type: T, as: b}`. `nodeLabel` None (the GraphQL
+    * surface and untyped MATCH steps) joins the target filtered to the
+    * edge label's observed endpoint labels ([[PropertyGraph.reach]]),
+    * or unfiltered when the graph carries no endpoint metadata: an
+    * edge label determines its endpoints by construction, so the
+    * filter only prunes scans, never rows. Two equi-joins: binding ⋈
+    * oriented edges ⋈ target nodes. */
   def hop(dir: String, edgeLabel: String, nodeLabel: Option[String], as: String): Traversal = {
     val e = g.oriented(Seq(edgeLabel), dir, edgeColumns(as): _*)
-    val n = prefixed(nodeLabel.map(g.nodesOf).getOrElse(g.nodes), as)
+    val n = target(dir, edgeLabel, nodeLabel, as)
     val joinedE = bound.join(e, bound(s"${cur}_id") === e("src"))
     Traversal(g, joinedE.join(n, joinedE("dst") === n(s"${as}_id")).drop("src", "dst"), as)
   }
@@ -209,7 +243,7 @@ final case class Traversal(g: PropertyGraph, bound: DataFrame, cur: String) {
   def hopOptional(dir: String, edgeLabel: String, nodeLabel: Option[String],
       as: String, nodeFilter: Option[Column]): Traversal = {
     val e = g.oriented(Seq(edgeLabel), dir, edgeColumns(as): _*)
-    val n = prefixed(nodeLabel.map(g.nodesOf).getOrElse(g.nodes), as)
+    val n = target(dir, edgeLabel, nodeLabel, as)
     val side = e.join(n, e("dst") === n(s"${as}_id")).drop("dst")
     val hopF = nodeFilter.map(side.filter).getOrElse(side)
     val joined = bound.join(hopF, bound(s"${cur}_id") === hopF("src"), "left").drop("src")

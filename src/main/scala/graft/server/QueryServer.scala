@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.model.GraphSchema
@@ -20,9 +21,16 @@ import graft.query.{ArcadeSql, GraphQl, PropertyGraph}
   * The server is a thin driver-side shell: ALL query execution stays
   * distributed (the only driver materialization is the response page,
   * bounded by `limit` — default 1000, like the reference's serverside
-  * result cap). Uses the JDK's built-in HttpServer: no new dependency,
-  * and the endpoint is driver-singleton anyway (result paging, not
-  * dataplane, exactly like the reference's embedded HTTP server).
+  * result cap). The page is part of the query's own plan: rows are
+  * serialized to JSON strings by a projection under the limit, so a
+  * read is one collect-limit job (a top-k under ORDER BY), and every
+  * request's jobs carry the job group `graft-http-N`. Served graphs
+  * opened from a store carry its observed edge endpoints, so a hop
+  * scans only the vertex labels it can land on
+  * ([[graft.query.PropertyGraph.reach]]). Uses the JDK's built-in
+  * HttpServer: no new dependency, and the endpoint is driver-singleton
+  * anyway (result paging, not dataplane, exactly like the reference's
+  * embedded HTTP server).
   *
   * Response shape mirrors the reference: `{"result": [ {row}, … ]}` on
   * 200, `{"error": msg}` on 4xx/5xx.
@@ -308,12 +316,12 @@ object QueryServer {
       // handshake answers straight from the schema registry as a
       // spec-shaped `{"data": …}` response (what stock clients parse)
       // — no DataFrame, no paging. Hop relations type concretely via
-      // the manifest's observed edge endpoints when a store is bound.
+      // the served graph's observed edge endpoints (the snapshot's own
+      // manifest: in a session, the staged one), when it has them.
       if (language == "graphql" && GraphQl.isIntrospection(command)) {
-        val eps = store.map(ctx =>
-          graft.load.Store.readManifest(ctx.dir).edgeEndpoints)
-          .getOrElse(Map.empty[String, (Set[String], Set[String])])
-        return GraphQl.introspect(snap.gschema, command, eps.get(_))
+        val eps: String => Option[(Set[String], Set[String])] =
+          snap.graph.map(_.edgeEndpoints).getOrElse(_ => None)
+        return GraphQl.introspect(snap.gschema, command, eps)
       }
       val df: DataFrame = language match {
         // reference parity: "sql" is ArcadeDB SQL. Dialect-anchored
@@ -340,11 +348,18 @@ object QueryServer {
         }
         return s"""{"result":[{"plan":"$esc"}]}"""
       }
-      // toJSON keeps row serialization distributed (executor-side
-      // Jackson codegen); only the bounded page is collected
+      // the page is built inside the plan: rows serialize to JSON on
+      // the executors (to_json over the whole row, the generator and
+      // options Dataset.toJSON uses, so null fields are still omitted)
+      // and the limit sits ABOVE that projection, so Spark plans one
+      // CollectLimit job, and ORDER BY … LIMIT stays a top-k
+      // (TakeOrderedAndProject). `df.limit(n).toJSON` put a typed
+      // MapPartitions above the limit, which planned a GlobalLimit
+      // behind a single-partition shuffle: one more job per read.
       def page(): String =
         if (profile) profiled()
-        else df.limit(limit).toJSON.collect().mkString("{\"result\":[", ",", "]}")
+        else df.select(to_json(struct(col("*")))).limit(limit).collect()
+          .map(_.getString(0)).mkString("{\"result\":[", ",", "]}")
       // PROFILE body: execute to completion DISTRIBUTED (toRdd + count —
       // no driver collect; the metrics must cover the real
       // cardinalities, so the page limit does not apply), then walk the
@@ -377,29 +392,27 @@ object QueryServer {
         }
         s"""{"result":[{"rows":$rows,"profile":${node(df.queryExecution.executedPlan)}}]}"""
       }
-      queryTimeoutSec match {
-        case None => page()
-        case Some(budget) =>
-          // query budget: the request's Spark jobs run under their own
-          // job group (interrupt-on-cancel); a scheduler cancels the
-          // group when the budget lapses, freeing the pool thread AND
-          // the executor cores — a runaway query can't pin the server
-          val gid = s"graft-http-${reqCounter.incrementAndGet()}"
-          spark.sparkContext.setJobGroup(gid, s"http query ($budget s budget)",
-            interruptOnCancel = true)
-          val killer = scheduler.schedule(new Runnable {
-            def run(): Unit = spark.sparkContext.cancelJobGroup(gid)
-          }, budget.toLong, java.util.concurrent.TimeUnit.SECONDS)
-          try page()
-          catch {
-            case e: Throwable
-                if String.valueOf(e.getMessage).contains("cancelled") ||
-                  e.isInstanceOf[InterruptedException] =>
-              throw new QueryTimeout(budget)
-          } finally {
-            killer.cancel(false)
-            spark.sparkContext.clearJobGroup()
-          }
+      // every request's Spark jobs run under their own job group, so a
+      // job listener or an event log can attribute them. With a query
+      // budget the group is interrupt-on-cancel and a scheduler cancels
+      // it when the budget lapses, freeing the pool thread AND the
+      // executor cores — a runaway query can't pin the server
+      val gid = s"graft-http-${reqCounter.incrementAndGet()}"
+      spark.sparkContext.setJobGroup(gid,
+        "http query" + queryTimeoutSec.fold("")(b => s" ($b s budget)"),
+        interruptOnCancel = queryTimeoutSec.nonEmpty)
+      val killer = queryTimeoutSec.map(budget => scheduler.schedule(new Runnable {
+        def run(): Unit = spark.sparkContext.cancelJobGroup(gid)
+      }, budget.toLong, java.util.concurrent.TimeUnit.SECONDS))
+      try page()
+      catch {
+        case e: Throwable if queryTimeoutSec.nonEmpty &&
+            (String.valueOf(e.getMessage).contains("cancelled") ||
+              e.isInstanceOf[InterruptedException]) =>
+          throw new QueryTimeout(queryTimeoutSec.get)
+      } finally {
+        killer.foreach(_.cancel(false))
+        spark.sparkContext.clearJobGroup()
       }
     }
 

@@ -116,6 +116,45 @@ class CliSpec extends SparkSpec {
       assert(c3 == 200)
       assert((org.json4s.jackson.JsonMethods.parse(b3) \ "result").children.size == 1000)
 
+      // page parity: the served rows equal `df.limit(n).toJSON` of the
+      // same compiled frame, parsed as JSON — null fields omitted,
+      // arrays and doubles rendered alike, ORDER BY … LIMIT order kept
+      val gs = graft.model.GraphSchema.fromJson(
+        Files.readString(java.nio.file.Paths.get(s"$out/schema.json")))
+      def served(language: String, cmd: String, limit: Option[Int]): Seq[String] = {
+        val lim = limit.fold("")(n => s""","limit":$n""")
+        val (c, b) = post(s"""{"language":"$language","command":${q(cmd)}$lim}""")
+        assert(c == 200, b)
+        (org.json4s.jackson.JsonMethods.parse(b) \ "result").children
+          .map(r => org.json4s.jackson.JsonMethods.compact(r))
+      }
+      def paged(df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] =
+        df.limit(n).toJSON.collect().toSeq.map(j =>
+          org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.parse(j)))
+      def parity(language: String, cmd: String, limit: Option[Int] = None,
+          ordered: Boolean = true): Seq[String] = {
+        val df = if (language == "graphql") graft.query.GraphQl.compile(g, cmd)
+          else graft.query.ArcadeSql.compile(g, gs, cmd)
+        val (got, want) = (served(language, cmd, limit),
+          paged(df, limit.getOrElse(graft.server.QueryServer.DefaultLimit)))
+        assert(want.nonEmpty, cmd)
+        if (ordered) assert(got == want, cmd) else assert(got.sorted == want.sorted, cmd)
+        got
+      }
+      val k = g.edgesOf("PLACED").agg(org.apache.spark.sql.functions.min("src")).head.getLong(0)
+      // an expand over the union schema: an Order row's Customer-only
+      // columns are null, so they are absent, not "acctbal":null
+      val expanded = parity("sql", s"SELECT expand(out('PLACED')) FROM Customer WHERE id = $k",
+        ordered = false)
+      assert(expanded.forall(r => r.contains("\"totalprice\"") && !r.contains("acctbal")), expanded)
+      assert(parity("sql", "SELECT id, tags FROM Part ORDER BY id LIMIT 5")
+        .forall(_.contains("\"tags\":[")))
+      parity("sql", "SELECT id, acctbal FROM Customer ORDER BY acctbal DESC, id LIMIT 10")
+      parity("sql", "SELECT id, name FROM Customer ORDER BY id SKIP 5 LIMIT 5")
+      assert(parity("sql", "SELECT id, totalprice FROM Order ORDER BY totalprice DESC, id LIMIT 50",
+        limit = Some(7)).size == 7)
+      parity("graphql", """{ Customer(orderBy: "name desc", limit: 5) { name acctbal } }""")
+
       // schema browsing: the served registry as JSON (Studio parity)
       val sconn = new java.net.URL(s"http://127.0.0.1:${srv.port}/api/v1/schema")
         .openConnection().asInstanceOf[java.net.HttpURLConnection]
@@ -237,6 +276,143 @@ class CliSpec extends SparkSpec {
       assert(post(s"""{"language":"graphql","command":${q(
         """mutation { deleteCustomer(where: {id: 1}) }""")}}""")._1 == 400)
     } finally srv.stop()
+  }
+
+  test("hop targets scan only their edge label's endpoint labels; a served point read is one Spark job") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.min
+    import graft.query.{ArcadeSql, GraphQl, PropertyGraph}
+    val out = Files.createTempDirectory("graftreach").toString
+    Main.create(spark, sfDir, out)
+    val g = Main.serve(spark, out, None)
+    val gs = graft.model.GraphSchema.fromJson(
+      Files.readString(java.nio.file.Paths.get(s"$out/schema.json")))
+    // the same store graph without endpoint metadata: every hop target
+    // is the all-label union, whose rows every pruned hop must return
+    val bare = g.copy(edgeEndpoints = _ => None)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val cust = g.edgesOf("PLACED").agg(min("src")).head.getLong(0)
+    val dialect = Seq(
+      s"SELECT expand(out('PLACED')) FROM Customer WHERE id = $cust",
+      "SELECT expand(in('PLACED')) FROM Order WHERE id < 10000200",
+      "SELECT expand(both('IN_NATION')) FROM Nation WHERE id = 107",
+      "SELECT expand(in('IN_NATION')) FROM Nation",
+      s"SELECT expand(inV()) FROM PLACED WHERE src = $cust",
+      "SELECT expand(outV()) FROM IN_NATION",
+      "SELECT id, out('PLACED').status AS st FROM Customer",
+      "SELECT id, in('IN_NATION').name AS who FROM Nation",
+      "SELECT id, both('IN_NATION').name AS who FROM Nation",
+      "MATCH {type: Customer, as: c}.out('PLACED'){as: o} RETURN c.id AS cid, o.id AS oid",
+      "MATCH {type: Nation, as: n}.in('IN_NATION'){as: x} RETURN n.id AS nid, x.id AS xid, x.label AS xl",
+      "MATCH {type: Nation, as: n}.both('IN_NATION'){as: x} RETURN n.id AS nid, x.id AS xid",
+      "MATCH {type: Nation, as: n}.in('IN_NATION'){as: x, optional: true, where: (label = 'Supplier')} " +
+        "RETURN n.id AS nid, x.id AS xid",
+      "MATCH {type: Supplier, as: s}.in('IN_NATION'){as: x, optional: true} RETURN s.id AS sid, x.id AS xid")
+    dialect.foreach { cmd =>
+      val want = rows(ArcadeSql.compile(bare, gs, cmd))
+      assert(want.nonEmpty, cmd)
+      assert(rows(ArcadeSql.compile(g, gs, cmd)) == want, cmd)
+    }
+    Seq(s"{ Customer(id: $cust) { name out_PLACED { id status } } }",
+        "{ Nation { name in_IN_NATION { id label } } }",
+        "{ Nation(id: 107) { name both_IN_NATION { id label } } }").foreach { doc =>
+      val want = rows(GraphQl.compile(bare, doc))
+      assert(want.nonEmpty, doc)
+      assert(rows(GraphQl.compile(g, doc)) == want, doc)
+    }
+
+    // plan guard: the expand scans its start label and PLACED's one
+    // observed dst label, not the six-label node union
+    def nodeLabelsScanned(df: DataFrame): Set[String] = {
+      val genDir = "/nodes/([^/]+)/gen-".r
+      df.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location.rootPaths.map(_.toString)
+      }.flatten.flatMap(p => genDir.findFirstMatchIn(p).map(_.group(1))).toSet
+    }
+    val expand = s"SELECT expand(out('PLACED')) FROM Customer WHERE id = $cust"
+    assert(nodeLabelsScanned(ArcadeSql.compile(g, gs, expand)) == Set("Customer", "Order"))
+    assert(nodeLabelsScanned(ArcadeSql.compile(bare, gs, expand)) == gs.nodeLabels.toSet)
+
+    val srv = graft.server.QueryServer.start(spark, 0, Some(g),
+      Some(graft.server.QueryServer.StoreContext(out, () => Main.serve(spark, out, None))))
+    val httpJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val flushes = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(gid) if gid.startsWith("graft-http-") => httpJobs.add(gid); ()
+          case _ => flushes.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def fire(route: String, body: String, session: Option[String] = None): (Int, String) = {
+        val conn = new java.net.URL(s"http://127.0.0.1:${srv.port}/api/v1/$route/graft")
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST"); conn.setDoOutput(true)
+        session.foreach(conn.setRequestProperty("arcadedb-session-id", _))
+        conn.getOutputStream.write(body.getBytes("UTF-8"))
+        val code = conn.getResponseCode
+        val is = if (code < 400) conn.getInputStream else conn.getErrorStream
+        (code, new String(is.readAllBytes(), "UTF-8"))
+      }
+      def q(s: String): String = "\"" + s.replace("\"", "\\\"") + "\""
+      def read(language: String, cmd: String, session: Option[String] = None): String = {
+        val (c, b) = fire("query", s"""{"language":"$language","command":${q(cmd)}}""", session)
+        assert(c == 200, b)
+        b
+      }
+      // the listener bus is asynchronous: one ungrouped job after the
+      // request flushes it (FIFO), so every request job has landed
+      def jobsOf(f: => Unit): Seq[String] = {
+        httpJobs.clear(); val before = flushes.get()
+        f
+        spark.sparkContext.parallelize(1 to 2, 1).count()
+        val deadline = System.currentTimeMillis() + 30000
+        while (flushes.get() == before && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        scala.jdk.CollectionConverters.CollectionHasAsScala(httpJobs).asScala.toSeq
+      }
+      val point = s"SELECT name, acctbal FROM Customer WHERE id = $cust"
+      read("sql", point) // warm-up: the first read pays compile caches
+      val pointJobs = jobsOf(assert(read("sql", point).contains("Customer#")))
+      assert(pointJobs.size == 1 && pointJobs.head.startsWith("graft-http-"), pointJobs)
+
+      // an edge append linking a label pair the manifest had not seen
+      // (IN_NATION from a Customer to a Region): the session reads it
+      // before commit, the next snapshot after it
+      val hop = s"SELECT expand(out('IN_NATION')) FROM Customer WHERE id = $cust"
+      def labels(body: String): Set[String] = (org.json4s.jackson.JsonMethods.parse(body) \ "result")
+        .children.map(_ \ "label").collect { case org.json4s.JString(l) => l }.toSet
+      def hopType(body: String): org.json4s.JValue =
+        ((org.json4s.jackson.JsonMethods.parse(body) \ "data" \ "__type" \ "fields").children
+          .find(f => f \ "name" == org.json4s.JString("out_IN_NATION")).get \ "type" \ "ofType" \ "name")
+      val intro = """{ __type(name: "Customer") { fields { name type { kind name ofType { kind name } } } } }"""
+      assert(labels(read("sql", hop)) == Set("Nation"))
+      assert(hopType(read("graphql", intro)) == org.json4s.JString("Nation"))
+      val (cb, bb) = fire("begin", "{}")
+      assert(cb == 200, bb)
+      val sid = (org.json4s.jackson.JsonMethods.parse(bb) \ "result").children.head \ "sessionId" match {
+        case org.json4s.JString(s) => s
+        case other => fail(s"no sessionId: $other")
+      }
+      val (ce, be) = fire("command",
+        s"""{"language":"sql","command":"CREATE EDGE IN_NATION FROM $cust TO 2"}""", Some(sid))
+      assert(ce == 200, be)
+      assert(labels(read("sql", hop, Some(sid))) == Set("Nation", "Region"))
+      // in-session introspection types the hop from the STAGED manifest
+      assert(hopType(read("graphql", intro, Some(sid))) == org.json4s.JString("_Vertex"))
+      assert(labels(read("sql", hop)) == Set("Nation"))
+      val (cc, bc) = fire("commit", "{}", Some(sid))
+      assert(cc == 200, bc)
+      assert(labels(read("sql", hop)) == Set("Nation", "Region"))
+      assert(read("graphql", s"{ Customer(id: $cust) { out_IN_NATION { label } } }")
+        .contains("Region"))
+      assert(hopType(read("graphql", intro)) == org.json4s.JString("_Vertex"))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      srv.stop()
+    }
   }
 
   test("HTTP auth: query and command routes require the token; probes stay open") {
