@@ -404,10 +404,11 @@ object PipelineE2E {
       require(identityOk, "incremental verdicts diverge from the full pass")
       // the arrivals COMMIT: one DML append — the manifest seq moves
       val (_, appendSec) = wall {
-        graft.load.GraphLoader.appendNodes(spark, storeDir, arrivals
-          .select(col("id"), lit("Doc").as("label"), col("text"),
-            col("lang"), lit("__arrival").as("source"),
-            length(col("text")).cast("long").as("nchars")))
+        graft.load.GraphLoader.commit(spark, storeDir)(
+          graft.load.GraphLoader.appendNodes(spark, _, arrivals
+            .select(col("id"), lit("Doc").as("label"), col("text"),
+              col("lang"), lit("__arrival").as("source"),
+              length(col("text")).cast("long").as("nchars"))))
       }
       // epoch ROLL: the moved seq rebuilds the authorities from the
       // current rows; an unchanged manifest then opens without work

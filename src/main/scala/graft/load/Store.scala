@@ -24,7 +24,12 @@ import scala.jdk.CollectionConverters._
   * ordered SEGMENT list: an append commits one new segment, a rewrite
   * (UPDATE / DELETE / compaction) writes a fresh segment replacing the
   * list — every mutation, append included, is one atomic replace of
-  * `manifest.json`. This replaces the
+  * `manifest.json`. Record writes reach the manifest through ONE path:
+  * the sinks stage into a [[StoreTxn]] and only its `commit` swaps the
+  * file ([[GraphLoader.commit]] wraps lock, begin, sweep and
+  * auto-compaction around it), so a single command and a multi-statement
+  * batch publish identically; schema DDL, bulk load and IMPORT are the
+  * barrier writers that swap it themselves. This replaces the
   * round-5 rename-swap protocol, whose directory rename invalidated
   * every in-flight scan and therefore forced the server to serialize
   * all reads behind a writer lock (VERDICT r5 "what's wrong" #3): with

@@ -58,18 +58,17 @@ object GraphQueries {
   // several declared queries, and each had re-derived it per query per
   // bench pass; nothing here holds a query RESULT — every query still
   // computes its declared aggregate from the layout.
-  private def sourceFp(d: String): String =
-    graft.load.IndexKeys.fingerprint(s"$d/lineitem.parquet")
+  private def lineitem(d: String): String = s"$d/lineitem.parquet"
   private def coPurchase(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame("copurchase", d, sourceFp(d))(
+    FrameCache.frame("copurchase", lineitem(d))(
       coPurchasePersisted(s, d).localCheckpoint(true))
 
   /** Triangle-closure layout (u, v, ws) of the co-purchase graph —
     * shared by the four triangle-family queries. */
   private def coPurchaseClosures(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame("tri-closures", d, sourceFp(d))(
+    FrameCache.frame("tri-closures", lineitem(d))(
       graft.operators.Triangles.closedEdges(coPurchase(s, d))
         .localCheckpoint(true))
 
@@ -77,7 +76,7 @@ object GraphQueries {
     * shared by the walks / node2vec / node2vec_capped queries. */
   private def coPurchaseWalkLayout(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val dfs = FrameCache.frames("walk-adj", d, sourceFp(d)) {
+    val dfs = FrameCache.frames("walk-adj", lineitem(d)) {
       val (adj, deg) =
         graft.operators.RandomWalks.adjacencyLayout(coPurchase(s, d))
       Seq(adj, deg)
@@ -89,7 +88,7 @@ object GraphQueries {
     * input, same cap as the co-purchase derivation. */
   private def cappedMembership(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame("capped-mm-50", d, sourceFp(d))(
+    FrameCache.frame("capped-mm-50", lineitem(d))(
       graft.operators.Triangles.cappedMembershipOf(
         t(s, d, "lineitem"), "l_orderkey", "l_partkey", 50)
         .localCheckpoint(true))
@@ -97,7 +96,7 @@ object GraphQueries {
   /** Distinct order→part bipartite edge list — the HITS input. */
   private def bipartiteOrderPart(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame("hits-bipartite", d, sourceFp(d))(
+    FrameCache.frame("hits-bipartite", lineitem(d))(
       t(s, d, "lineitem").select(
         col("l_orderkey").as("s"), col("l_partkey").as("d"))
         .distinct().localCheckpoint(true))
@@ -115,7 +114,7 @@ object GraphQueries {
     * the packed-BFS waves and the LPA rounds. */
   private def coPurchaseBi(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame("bi-layout", d, sourceFp(d))(
+    FrameCache.frame("bi-layout", lineitem(d))(
       graft.operators.Centrality.biLayout(coPurchase(s, d)))
 
   /** Packed-BFS fresh-frontier levels for one ≤64-source wave over the
@@ -127,15 +126,14 @@ object GraphQueries {
   private def coPurchaseWaveLevels(s: org.apache.spark.sql.SparkSession,
       d: String)(wave: Seq[Long],
       maxDepth: Int): Vector[org.apache.spark.sql.DataFrame] =
-    FrameCache.frames(s"bfs-wave:$maxDepth:" + wave.mkString(","), d,
-        sourceFp(d)) {
+    FrameCache.frames(s"bfs-wave:$maxDepth:" + wave.mkString(","), lineitem(d)) {
       graft.operators.Centrality.packedFreshLevels(
         coPurchaseBi(s, d), wave, maxDepth)
     }.toVector
 
   private def coPurchaseSrcsN(s: org.apache.spark.sql.SparkSession,
       d: String): (Seq[Long], Long) =
-    FrameCache.value[(Seq[Long], Long)]("srcs-32", d, sourceFp(d)) {
+    FrameCache.value[(Seq[Long], Long)]("srcs-32", lineitem(d)) {
       val edges = coPurchase(s, d)
       val verts = edges.select(col("a").as("v"))
         .unionAll(edges.select(col("b").as("v"))).distinct()

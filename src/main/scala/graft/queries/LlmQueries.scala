@@ -96,30 +96,27 @@ object LlmQueries {
   val DsirSalt = "graft_dsir_"
   val DsirTau = -61.0
 
-  // trained-centroid cache (see sim_ivf_trained_topk), keyed by
-  // (dir, attribute fingerprint of embeddings.parquet) — regenerated
-  // source data at the same path must retrain, or the served lists
-  // would silently diverge from the oracle's replay (code-review r8)
-  private val trainedCentroids =
-    scala.collection.mutable.Map[(String, String), Seq[(Long, Seq[Double])]]()
-  // trained PQ codebooks, cached under the same key discipline
-  private val trainedPqBooks =
-    scala.collection.mutable.Map[(String, String), IndexedSeq[IndexedSeq[Array[Double]]]]()
-  // residual-PQ codebooks (round 15, IVFADC), same key discipline —
-  // keyed additionally by the sub-quantizer count m (r16: the 16-bit
-  // m=4 rung and the 32-bit m=8 rung train distinct books)
-  private val trainedResidBooks =
-    scala.collection.mutable.Map[(String, String, Int), IndexedSeq[IndexedSeq[Array[Double]]]]()
-  // — both via the UNIFIED fingerprint (load.IndexKeys, r13 order #9):
-  // raw parquet keys on mtime__size exactly as before; a graft-store
-  // source keys on the manifest seq, so every DML commit re-keys
-  private def embFingerprint(d: String): String =
-    graft.load.IndexKeys.fingerprint(s"$d/embeddings.parquet")
+  // trained centroids and PQ codebooks live in [[Qh.FrameCache]] as
+  // values keyed on the source `embeddings.parquet` — the UNIFIED
+  // fingerprint (load.IndexKeys, r13 order #9): regenerated source data
+  // at the same path must retrain, or the served lists would silently
+  // diverge from the oracle's replay (code-review r8), and a retrain
+  // releases the superseded models
+  private def embeddings(d: String): String = s"$d/embeddings.parquet"
+  private def trainedCentroids(emb: org.apache.spark.sql.DataFrame,
+      d: String): Seq[(Long, Seq[Double])] =
+    FrameCache.value("kmeans-16", embeddings(d))(
+      Similarity.trainKMeans(emb, "vec_id", "embedding", 16, 256))
+  private def trainedPqBooks(emb: org.apache.spark.sql.DataFrame,
+      d: String): IndexedSeq[IndexedSeq[Array[Double]]] =
+    FrameCache.value("pq-4x16", embeddings(d))(
+      Similarity.trainPqCodebooks(emb, "vec_id", "embedding", 4, 16, 256))
   // signature-index cache key (dedup_incremental) — same fingerprint
   // discipline (and the same documented staleness trade, BASELINE #14)
-  // as the trained-centroid cache above
+  // as the trained-model caches above
+  private def documents(d: String): String = s"$d/documents.parquet"
   private def docFingerprint(d: String): String =
-    graft.load.IndexKeys.fingerprint(s"$d/documents.parquet")
+    graft.load.IndexKeys.fingerprint(documents(d))
 
   // df-capped 3-gram shingle layout of `documents` — the jaccard AND
   // containment queries run the same kernel + distinct + df-cap stage
@@ -127,7 +124,7 @@ object LlmQueries {
   // query's pair join + sizes + its own filter still run per query
   private def docShingles3(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame("shingles-3", d, docFingerprint(d))(
+    FrameCache.frame("shingles-3", documents(d))(
       Dedup.shingleSet(t(s, d, "documents"), "doc_id", "text", 3,
         Dedup.JaccardMaxDf).localCheckpoint(true))
 
@@ -137,7 +134,7 @@ object LlmQueries {
   // re-checkpointed its output per query per bench pass (r18)
   private def docSpanWindows(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.frame(s"span-windows-$SpanWindow", d, docFingerprint(d))(
+    FrameCache.frame(s"span-windows-$SpanWindow", documents(d))(
       Dedup.spanWindows(t(s, d, "documents"), "doc_id", "text", SpanWindow)
         .localCheckpoint(true))
 
@@ -418,15 +415,12 @@ object LlmQueries {
   private def residualIvfPqQuery(m: Int, nCodes: Int = 16)(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val emb = t(s, d, "embeddings")
-    val cents = trainedCentroids.synchronized {
-      trainedCentroids.getOrElseUpdate((d, embFingerprint(d)),
-        Similarity.trainKMeans(emb, "vec_id", "embedding", 16, 256))
-    }
-    val books = trainedResidBooks.synchronized {
-      trainedResidBooks.getOrElseUpdate((d, embFingerprint(d), m * 1000 + nCodes),
-        Similarity.trainResidualPqCodebooks(
-          emb, "vec_id", "embedding", cents, m, nCodes, 256))
-    }
+    val cents = trainedCentroids(emb, d)
+    // per-m residual books (r16: the 16-bit m=4 rung and the 32-bit
+    // m=8 rung train distinct books)
+    val books = FrameCache.value(s"resid-pq-${m}x$nCodes", embeddings(d))(
+      Similarity.trainResidualPqCodebooks(
+        emb, "vec_id", "embedding", cents, m, nCodes, 256))
     Similarity.ivfPqResidualTopKWith(emb, "vec_id", "embedding", cents,
       books, 4, Seq(0L, 1L, 2L, 3L, 4L), 10, overfetch = 4)
       .select(col("qid"), col("nn"), col("rank"), round(col("cos"), 6).as("cos"))
@@ -1427,10 +1421,7 @@ object LlmQueries {
     Q("sim_pq_trained_topk",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val books = trainedPqBooks.synchronized {
-          trainedPqBooks.getOrElseUpdate((d, embFingerprint(d)),
-            Similarity.trainPqCodebooks(emb, "vec_id", "embedding", 4, 16, 256))
-        }
+        val books = trainedPqBooks(emb, d)
         Similarity.pqTopKWith(emb, "vec_id", "embedding", books,
           Seq(0L, 1L, 2L, 3L, 4L), 10)
           .select(col("qid"), col("nn"), col("rank"), round(col("cos"), 6).as("cos"))
@@ -1485,10 +1476,7 @@ object LlmQueries {
     Q("sim_ivf_trained_topk",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val cents = trainedCentroids.synchronized {
-          trainedCentroids.getOrElseUpdate((d, embFingerprint(d)),
-            Similarity.trainKMeans(emb, "vec_id", "embedding", 16, 256))
-        }
+        val cents = trainedCentroids(emb, d)
         Similarity.ivfTopKWith(emb, "vec_id", "embedding", cents,
           4, Seq(0L, 1L, 2L, 3L, 4L), 10)
           .select(col("qid"), col("nn"), col("rank"), round(col("cos"), 6).as("cos"))
@@ -1531,14 +1519,8 @@ object LlmQueries {
     Q("sim_ivfpq_topk",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val cents = trainedCentroids.synchronized {
-          trainedCentroids.getOrElseUpdate((d, embFingerprint(d)),
-            Similarity.trainKMeans(emb, "vec_id", "embedding", 16, 256))
-        }
-        val books = trainedPqBooks.synchronized {
-          trainedPqBooks.getOrElseUpdate((d, embFingerprint(d)),
-            Similarity.trainPqCodebooks(emb, "vec_id", "embedding", 4, 16, 256))
-        }
+        val cents = trainedCentroids(emb, d)
+        val books = trainedPqBooks(emb, d)
         Similarity.ivfPqTopKWith(emb, "vec_id", "embedding", cents, books,
           4, Seq(0L, 1L, 2L, 3L, 4L), 10, overfetch = 4)
           .select(col("qid"), col("nn"), col("rank"), round(col("cos"), 6).as("cos"))

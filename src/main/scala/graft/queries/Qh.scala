@@ -79,13 +79,16 @@ object Qh {
     * (co-purchase edge list, its triangle closures, the walk
     * adjacency, the df-capped shingle set), and each had re-derived it
     * per query per bench pass. Entries hold checkpointed LAYOUT frames
-    * keyed (kind, source dir, source fingerprint) — never query
-    * results; every query still computes its declared aggregate from
-    * the layout. A regenerated source re-keys (IndexKeys fingerprint
-    * doctrine) and every superseded-generation entry of that dir, of
-    * any kind, is dropped on insert with its checkpoint blocks
-    * released; dead-SparkContext entries evict on access
-    * (a checkpointed frame is bound to its context). */
+    * (or small driver-side values such as trained codebooks) keyed
+    * (kind, source path, source fingerprint) — never query results;
+    * every query still computes its declared aggregate from the
+    * layout. The fingerprint is the source's own
+    * ([[graft.load.IndexKeys.fingerprint]]), so a regenerated source
+    * re-keys, and every entry derived from an older generation of THAT
+    * source, of any kind, is dropped on insert with its checkpoint
+    * blocks released — entries of other sources in the same directory
+    * stay; dead-SparkContext entries evict on access (a checkpointed
+    * frame is bound to its context). */
   private[graft] object FrameCache {
     private val cache =
       scala.collection.mutable.Map[(String, String, String), Seq[DataFrame]]()
@@ -103,47 +106,50 @@ object Qh {
       }
 
     /** Build-or-reuse a group of checkpointed frames derived together
-      * (most kinds hold one; the walk layout holds adj + deg). */
-    def frames(kind: String, dir: String, fp: String)(
+      * from `source` (most kinds hold one; the walk layout holds
+      * adj + deg). */
+    def frames(kind: String, source: String)(
         build: => Seq[DataFrame]): Seq[DataFrame] = synchronized {
-      val key = (kind, dir, fp)
+      val fp = graft.load.IndexKeys.fingerprint(source)
+      val key = (kind, source, fp)
       cache.get(key)
         .filterNot(_.exists(_.sparkSession.sparkContext.isStopped)) match {
         case Some(dfs) => dfs
         case None =>
           val dfs = build
-          supersede(dir, fp)
+          supersede(source, fp)
           cache(key) = dfs
           dfs
       }
     }
 
-    /** A new fingerprint for `dir` means its source was regenerated:
-      * every entry derived from an older generation, of ANY kind, is
+    /** A new fingerprint for `source` means it was regenerated: every
+      * entry derived from an older generation of it, of ANY kind, is
       * dropped and its checkpoint blocks released — a kind that is not
       * requested again (every `bfs-wave` key is its own kind) would
       * otherwise stay pinned for the session. */
-    private def supersede(dir: String, fp: String): Unit = {
-      cache.filterInPlace { case ((_, d2, f2), old) =>
-        val keep = d2 != dir || f2 == fp
+    private def supersede(source: String, fp: String): Unit = {
+      cache.filterInPlace { case ((_, s2, f2), old) =>
+        val keep = s2 != source || f2 == fp
         if (!keep) release(old)
         keep
       }
-      vals.filterInPlace { case ((_, d2, f2), _) => d2 != dir || f2 == fp }
+      vals.filterInPlace { case ((_, s2, f2), _) => s2 != source || f2 == fp }
     }
 
-    def frame(kind: String, dir: String, fp: String)(
-        build: => DataFrame): DataFrame =
-      frames(kind, dir, fp)(Seq(build)).head
+    def frame(kind: String, source: String)(build: => DataFrame): DataFrame =
+      frames(kind, source)(Seq(build)).head
 
-    /** Driver-side small derived values (bounded source picks etc.) —
-      * fingerprint-keyed like the frames, context-independent. */
-    def value[T](kind: String, dir: String, fp: String)(build: => T): T =
+    /** Driver-side small derived values (bounded source picks, trained
+      * centroids and codebooks) — fingerprint-keyed like the frames,
+      * context-independent. */
+    def value[T](kind: String, source: String)(build: => T): T =
       synchronized {
-        vals.getOrElse((kind, dir, fp), {
+        val fp = graft.load.IndexKeys.fingerprint(source)
+        vals.getOrElse((kind, source, fp), {
           val v = build
-          supersede(dir, fp)
-          vals((kind, dir, fp)) = v
+          supersede(source, fp)
+          vals((kind, source, fp)) = v
           v
         }).asInstanceOf[T]
       }

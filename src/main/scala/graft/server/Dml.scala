@@ -2,40 +2,47 @@ package graft.server
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import graft.load.GraphLoader
+import graft.load.{GraphLoader, StoreTxn}
+import graft.model.GraphSchema
 
 /** DML command surface for the HTTP endpoint (the reference's
-  * `POST /api/v1/command/{db}` accepts record inserts in ArcadeDB SQL
-  * [dep]; SURVEY §2.B.1 DML row). Three statement forms, covering the
-  * dialect's insert shapes:
+  * `POST /api/v1/command/{db}` accepts record writes in ArcadeDB SQL
+  * [dep]; SURVEY §2.B.1 DML row). Two statement classes, split once
+  * by the dispatch ([[Dml.isBarrier]], [[Dml.isDml]] read the same
+  * split):
+  *
+  * RECORD statements write rows and always run inside a
+  * [[graft.load.StoreTxn]] — a single command autocommits as a
+  * transaction of one, a batch or HTTP session is one transaction:
   *
   *   INSERT INTO <Label> (c1, c2, …) VALUES (v1, …)[, (…)]…
+  *   INSERT INTO <Label> SET k1 = v1, …
   *   CREATE VERTEX <Label> SET k1 = v1, k2 = v2, …
   *   CREATE EDGE <Label> FROM <srcId> TO <dstId> [SET k = v, …]
-  *   UPDATE <Label> SET k = v, … [UPSERT] [WHERE <pred>]
-  *   UPDATE <Label> REMOVE k [, …] [WHERE <pred>]
-  *   UPDATE <Label> INCREMENT k = n [, …] [WHERE <pred>]
-  *   UPDATE <Label> CONTENT {json} [WHERE <pred>]
-  *   UPDATE <Label> MERGE {json} [WHERE <pred>]
-  *   DELETE FROM <Label> [WHERE <pred>]
+  *   UPDATE <Label> SET k = v, … [UPSERT] [RETURN …] [WHERE <pred>]
+  *   UPDATE <Label> REMOVE|ADD|PUT|INCREMENT … [WHERE <pred>]
+  *   UPDATE <Label> CONTENT|MERGE {json} [WHERE <pred>]
+  *   DELETE FROM|VERTEX|EDGE <Label> [WHERE <pred>]
+  *   TRUNCATE TYPE <Label>
   *
-  * plus the runtime schema DDL the reference issues before loading
-  * (`ArcadeDBService.java:149-154,232-238,275-277`):
-  *
-  *   CREATE VERTEX|EDGE TYPE <Label> [IF NOT EXISTS]
-  *   CREATE PROPERTY <Label>.<prop> <STRING|INTEGER|LONG|…|LIST>
-  *   CREATE INDEX ON <Label> (<prop>) UNIQUE|NOTUNIQUE
+  * BARRIER statements publish (or only read) on their own and are
+  * refused inside a transaction: the runtime schema DDL the reference
+  * issues before loading (`ArcadeDBService.java:149-154,232-238,275-277`)
+  * — CREATE VERTEX|EDGE TYPE, CREATE PROPERTY, CREATE INDEX, CREATE
+  * FUNCTION, ALTER TYPE|PROPERTY, DROP TYPE|PROPERTY|INDEX|FUNCTION —
+  * and the maintenance surface — COMPACT, BACKUP, REBUILD INDEX,
+  * CHECK DATABASE, EXPORT DATABASE, IMPORT DATABASE.
   *
   * Insert statements compile to a small typed batch routed through
   * [[GraphLoader.appendNodes]]/[[GraphLoader.appendEdges]] — so every
   * HTTP insert gets the same invariants as the bulk path (id collision,
   * UNIQUE indexes, endpoint resolution) and a rejected batch leaves the
   * store untouched. UPDATE/DELETE are copy-on-write rewrites of the
-  * label partition ([[GraphLoader.updateRecords]]/[[GraphLoader.deleteRecords]]):
-  * UNIQUE revalidation, immutable keys, and dangling-endpoint rejection
-  * on vertex delete. WHERE predicates use the ArcadeSql dialect grammar.
-  * Literals: numbers, 'single-quoted' strings ('' to escape),
-  * true/false, null.
+  * label partition ([[GraphLoader.updateColumnsReturning]]/
+  * [[GraphLoader.deleteRecords]]): UNIQUE revalidation, immutable keys,
+  * and dangling-endpoint rejection on vertex delete. WHERE predicates
+  * use the ArcadeSql dialect grammar. Literals: numbers,
+  * 'single-quoted' strings ('' to escape), true/false, null.
   */
 object Dml {
 
@@ -85,7 +92,7 @@ object Dml {
   // ConstraintDesc. MIN/MAX/REGEXP bound existing values, DEFAULT
   // fills absent ones at append, READONLY freezes a property against
   // UPDATE (creation-time writes only — enforced beside the
-  // key/topology immutables in updateColumns); `ALTER PROPERTY T.p
+  // key/topology immutables in updateColumnsReturning); `ALTER PROPERTY T.p
   // MIN null` retires an attribute. CUSTOM remains unsupported and
   // fails the dispatch loudly rather than parsing to a silent no-op.
   private val AlterPropertyRe =
@@ -100,41 +107,19 @@ object Dml {
   private val DropIndexRe = """(?is)\s*DROP\s+INDEX\s+ON\s+(\w+)\s*\(\s*(\w+)\s*\)\s*""".r
   private val DropFunctionRe = """(?is)\s*DROP\s+FUNCTION\s+(\w+)\s*""".r
 
-  def isDml(command: String): Boolean = {
-    val t = command.trim.toUpperCase
-    t.startsWith("INSERT") || t.startsWith("CREATE VERTEX") ||
-      t.startsWith("CREATE EDGE") || t.startsWith("CREATE PROPERTY") ||
-      t.startsWith("CREATE INDEX") || t.startsWith("UPDATE") ||
-      t.startsWith("DELETE") || t.startsWith("COMPACT") ||
-      t.startsWith("TRUNCATE") || t.startsWith("BACKUP") ||
-      t.startsWith("CREATE FUNCTION") || t.startsWith("DEFINE FUNCTION") ||
-      t.startsWith("ALTER") || t.startsWith("DROP") ||
-      t.startsWith("REBUILD INDEX") || t.startsWith("CHECK DATABASE") ||
-      t.startsWith("EXPORT DATABASE")
-  }
+  /** A command the command route accepts: a record or a barrier
+    * statement — the classification is the dispatch itself. */
+  def isDml(command: String): Boolean = isBarrier(command) || record.isDefinedAt(command)
 
-  /** Statements that refuse to run inside a transaction — the
-    * `noTxn` family in [[executeOne]]: schema DDL, COMPACT, BACKUP.
-    * [[executeScript]] treats them as autocommit BARRIERS between
-    * transactional DML runs (ArcadeDB's sqlscript rule: schema
-    * statements commit immediately and are not rolled back by a later
-    * failure [dep, SQL script semantics]). Must stay in lockstep with
-    * the `noTxn` call sites. */
-  def isBarrier(command: String): Boolean = {
-    val t = command.trim.toUpperCase.replaceAll("\\s+", " ")
-    t.startsWith("CREATE VERTEX TYPE") || t.startsWith("CREATE EDGE TYPE") ||
-      t.startsWith("CREATE PROPERTY") || t.startsWith("CREATE INDEX") ||
-      t.startsWith("CREATE FUNCTION") || t.startsWith("DEFINE FUNCTION") ||
-      t.startsWith("ALTER") || t.startsWith("DROP") ||
-      t.startsWith("COMPACT") || t.startsWith("BACKUP") ||
-      t.startsWith("REBUILD INDEX") || t.startsWith("CHECK DATABASE") ||
-      t.startsWith("EXPORT DATABASE")
-  }
+  /** A barrier statement (see [[Barrier]]): refused inside a
+    * transaction, autocommitted between record runs by
+    * [[executeScript]]. */
+  def isBarrier(command: String): Boolean = barrier.isDefinedAt(command)
 
-  /** Execute a `sqlscript` statement sequence: consecutive DML
+  /** Execute a `sqlscript` statement sequence: consecutive record
     * statements group into atomic transactional RUNS (one manifest
-    * swap per run, [[executeBatch]]); DDL/COMPACT/BACKUP — which
-    * refuse transactions — execute standalone between runs. A failure
+    * swap per run, [[executeBatch]]); barriers — which refuse
+    * transactions — execute standalone between runs. A failure
     * aborts the CURRENT run and stops the script; earlier runs and
     * barriers stay committed (the reference's sqlscript contract:
     * schema changes autocommit, only the active transaction rolls
@@ -160,8 +145,10 @@ object Dml {
   }
 
   /** Execute a DML command against the persisted store; returns the
-    * number of records written. Throws IllegalArgumentException on
-    * parse/validation errors (mapped to HTTP 400). */
+    * number of records written. A record statement autocommits as a
+    * transaction of one ([[GraphLoader.commit]]). Throws
+    * IllegalArgumentException on parse/validation errors (mapped to
+    * HTTP 400). */
   def execute(spark: SparkSession, storeDir: String, command: String): Long =
     executeOne(spark, storeDir, command, None)
 
@@ -196,407 +183,514 @@ object Dml {
   def executeReturning(spark: SparkSession, storeDir: String,
       command: String): DmlResult = {
     val sink = new ReturnSink
-    val n = executeOne(spark, storeDir, command, None, Some(sink))
+    val n = executeOne(spark, storeDir, command, Some(sink))
     DmlResult(n, sink.images.map(_.toSeq), sink.readOnly)
   }
 
-  /** Execute several DML statements as ONE atomic store commit (the
+  private def executeOne(spark: SparkSession, storeDir: String, command: String,
+      ret: Option[ReturnSink]): Long =
+    barrier.lift(command) match {
+      case Some(run) => run(spark, storeDir, ret)
+      case None =>
+        val run = recordOf(command)
+        GraphLoader.commit(spark, storeDir)(run(spark, _, ret))
+    }
+
+  /** One statement staged into an OPEN transaction — a batch's or an
+    * HTTP session's (the begin/commit/rollback routes' engine): it
+    * executes against the transaction's staged manifest — later
+    * statements see earlier ones — and nothing becomes visible until
+    * the transaction's single commit. Barriers are refused inside. */
+  def executeInTxn(spark: SparkSession, command: String, txn: StoreTxn): Long = {
+    require(!isBarrier(command),
+      "schema and maintenance statements are not allowed inside a transaction " +
+        s"(batch or session) — issue it as its own command (got: ${command.trim.take(40)})")
+    recordOf(command)(spark, txn, None)
+  }
+
+  /** Execute several record statements as ONE atomic store commit (the
     * HTTP batch form `{"commands": […]}` — the reference's session
     * transaction routes [dep] collapsed to a single-request batch).
-    * All statements run against a staged manifest ([[graft.load.StoreTxn]]):
+    * All statements run against a staged manifest ([[StoreTxn]]):
     * later statements see earlier ones (an edge may reference a vertex
     * inserted in the same batch), nothing is visible until the single
     * manifest swap at the end, and ANY failure leaves the manifest
-    * byte-untouched (staged gens become sweepable orphans). DDL and
-    * COMPACT are not record DML and must be issued as single commands. */
-  /** One statement staged into an OPEN session transaction (the HTTP
-    * begin/commit/rollback routes' engine): executes against the
-    * transaction's staged manifest — later statements see earlier
-    * ones — and nothing becomes visible until the session's single
-    * commit. DDL and COMPACT are refused inside, like the batch form. */
-  def executeInTxn(spark: SparkSession, storeDir: String, command: String,
-      txn: graft.load.StoreTxn): Long =
-    executeOne(spark, storeDir, command, Some(txn))
+    * byte-untouched (staged gens become sweepable orphans). Barriers
+    * must be issued as single commands. */
+  def executeBatch(spark: SparkSession, storeDir: String, commands: Seq[String]): Long = {
+    require(commands.nonEmpty, "empty command batch")
+    GraphLoader.commit(spark, storeDir)(txn =>
+      commands.map(c => executeInTxn(spark, c, txn)).sum)
+  }
 
-  def executeBatch(spark: SparkSession, storeDir: String, commands: Seq[String]): Long =
-    graft.load.StoreLock.withWriteLock(storeDir) {
-      require(commands.nonEmpty, "empty command batch")
-      val txn = GraphLoader.beginTxn(storeDir)
-      val n =
-        try commands.map(c => executeOne(spark, storeDir, c, Some(txn))).sum
-        catch { case e: Throwable => txn.abort(); throw e }
-      txn.commit()
-      graft.load.Store.sweep(storeDir, keepPerLabel = 1)
-      GraphLoader.autoCompactTouched(spark, storeDir, txn.touched)
-      n
-    }
+  private def recordOf(command: String): Record = record.applyOrElse(command,
+    (_: String) => throw new IllegalArgumentException(
+      "unsupported DML (expected INSERT INTO … VALUES, CREATE VERTEX … SET, " +
+        "CREATE EDGE … FROM … TO …; ALTER forms are ALTER PROPERTY T.p " +
+        "MANDATORY|NOTNULL|READONLY true|false and " +
+        "MIN|MAX|REGEXP|DEFAULT <literal>|null)"))
 
-  private def executeOne(spark: SparkSession, storeDir: String, command: String,
-      txn: Option[graft.load.StoreTxn],
-      ret: Option[ReturnSink] = None): Long = {
-    def noTxn(what: String): Unit = require(txn.isEmpty,
-      s"$what is not allowed inside a transaction (batch or session) — " +
-        "issue it as its own command")
-    val gs = graft.model.GraphSchema.fromJson(java.nio.file.Files.readString(
+  private def schemaOf(storeDir: String): GraphSchema =
+    GraphSchema.fromJson(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$storeDir/schema.json")))
-    def kindOf(label: String): String =
-      gs.labels.find(_.label == label).map(_.kind).getOrElse(
-        throw new IllegalArgumentException(s"unknown label: $label"))
 
-    command match {
-      // DDL first: `CREATE VERTEX TYPE T` must not fall into the
-      // instance form `CREATE VERTEX <label> SET …`
-      case CreateTypeRe(kind, label, ifNotExists) =>
-        noTxn("DDL")
-        ddl(storeDir) { cur =>
-          val k = if (kind.equalsIgnoreCase("VERTEX")) "vertex" else "edge"
-          cur.labels.find(_.label == label) match {
-            case Some(existing) =>
-              // IF NOT EXISTS never papers over a KIND conflict — the
-              // caller's model of the type would be silently wrong
-              require(existing.kind == k,
-                s"type $label already exists as a ${existing.kind} type")
-              require(ifNotExists != null, s"type $label already exists")
-              (cur, 0L)
-            case None =>
-              (cur.copy(labels = cur.labels :+
-                graft.model.LabelSchema(label, k, StructType(Nil))), 1L)
-          }
+  private def kindOf(gs: GraphSchema, label: String): String =
+    gs.labels.find(_.label == label).map(_.kind).getOrElse(
+      throw new IllegalArgumentException(s"unknown label: $label"))
+
+  private def kindOf(storeDir: String, label: String): String =
+    kindOf(schemaOf(storeDir), label)
+
+  /** Barrier statements — schema DDL, COMPACT, BACKUP, REBUILD INDEX,
+    * CHECK, EXPORT, IMPORT: each publishes (or only reads) on its own
+    * and never sees a transaction. [[executeScript]] runs them as
+    * autocommit BARRIERS between transactional record runs (ArcadeDB's
+    * sqlscript rule: schema statements commit immediately and are not
+    * rolled back by a later failure [dep, SQL script semantics]). */
+  private type Barrier = (SparkSession, String, Option[ReturnSink]) => Long
+  /** Record statements — INSERT, CREATE VERTEX/EDGE, every UPDATE form,
+    * DELETE, TRUNCATE: each stages into the [[StoreTxn]] it is handed,
+    * which [[GraphLoader.commit]] (one command, one batch) or the
+    * session's commit route publishes. */
+  private type Record = (SparkSession, StoreTxn, Option[ReturnSink]) => Long
+
+  // barriers match before the record forms everywhere: `CREATE VERTEX
+  // TYPE T` must not fall into the instance form `CREATE VERTEX <label> SET …`
+  private val barrier: PartialFunction[String, Barrier] = {
+    case CreateTypeRe(kind, label, ifNotExists) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val k = if (kind.equalsIgnoreCase("VERTEX")) "vertex" else "edge"
+        cur.labels.find(_.label == label) match {
+          case Some(existing) =>
+            // IF NOT EXISTS never papers over a KIND conflict — the
+            // caller's model of the type would be silently wrong
+            require(existing.kind == k,
+              s"type $label already exists as a ${existing.kind} type")
+            require(ifNotExists != null, s"type $label already exists")
+            (cur, 0L)
+          case None =>
+            (cur.copy(labels = cur.labels :+
+              graft.model.LabelSchema(label, k, StructType(Nil))), 1L)
         }
-      case CreatePropertyRe(label, prop, typeName) =>
-        noTxn("DDL")
-        ddl(storeDir) { cur =>
-          val ls = cur.labels.find(_.label == label).getOrElse(
-            throw new IllegalArgumentException(s"unknown type: $label"))
-          require(!Set("id", "label", "src", "dst").contains(prop),
-            s"$prop is a reserved key/topology column")
-          require(!ls.schema.fieldNames.contains(prop),
-            s"property $label.$prop already declared")
-          val updated = ls.copy(schema =
-            StructType(ls.schema.fields :+ StructField(prop, ddlType(typeName))))
-          (cur.copy(labels = cur.labels.map(l => if (l.label == label) updated else l)), 1L)
+      }
+    case CreatePropertyRe(label, prop, typeName) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val ls = cur.labels.find(_.label == label).getOrElse(
+          throw new IllegalArgumentException(s"unknown type: $label"))
+        require(!Set("id", "label", "src", "dst").contains(prop),
+          s"$prop is a reserved key/topology column")
+        require(!ls.schema.fieldNames.contains(prop),
+          s"property $label.$prop already declared")
+        val updated = ls.copy(schema =
+          StructType(ls.schema.fields :+ StructField(prop, ddlType(typeName))))
+        (cur.copy(labels = cur.labels.map(l => if (l.label == label) updated else l)), 1L)
+      }
+    case CreateIndexRe(label, prop, uniq) if uniq.toUpperCase.startsWith("FULL") =>
+      (spark, storeDir, _) => createFullTextIndex(spark, storeDir, label, prop)
+    case CreateIndexRe(label, prop, uniq) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val ls = cur.labels.find(_.label == label).getOrElse(
+          throw new IllegalArgumentException(s"unknown type: $label"))
+        val field = ls.schema.fields.find(_.name == prop).getOrElse(
+          throw new IllegalArgumentException(
+            s"property $label.$prop is not declared — CREATE PROPERTY first"))
+        val target = if (ls.kind == "vertex") "node" else "edge"
+        require(!cur.indexes.exists(i =>
+            i.target == target && i.label == label && i.property == prop),
+          s"index on $label.$prop already exists")
+        val ix = graft.model.IndexDesc(target, label, prop,
+          unique = uniq.equalsIgnoreCase("UNIQUE"),
+          isArray = field.dataType.isInstanceOf[ArrayType])
+        // a UNIQUE index over EXISTING data must hold before it is
+        // declared (A15 semantics — null-skip/array-skip built in)
+        if (ix.unique && ix.isBuildable) {
+          val probe = cur.copy(indexes = Seq(ix))
+          val viol = GraphLoader.validateUnique(
+            graft.load.Store.readEntity(spark, storeDir, "nodes"),
+            graft.load.Store.readEntity(spark, storeDir, "edges"), probe)
+          require(viol.isEmpty, {
+            val sample = viol.limit(3).collect().map(_.get(2)).mkString(", ")
+            s"CREATE INDEX rejected: existing duplicates of $label.$prop (e.g. $sample)"
+          })
         }
-      case CreateIndexRe(label, prop, uniq) if uniq.toUpperCase.startsWith("FULL") =>
-        noTxn("DDL")
-        createFullTextIndex(spark, storeDir, label, prop)
-      case CreateIndexRe(label, prop, uniq) =>
-        noTxn("DDL")
-        ddl(storeDir) { cur =>
-          val ls = cur.labels.find(_.label == label).getOrElse(
-            throw new IllegalArgumentException(s"unknown type: $label"))
-          val field = ls.schema.fields.find(_.name == prop).getOrElse(
-            throw new IllegalArgumentException(
-              s"property $label.$prop is not declared — CREATE PROPERTY first"))
-          val target = if (ls.kind == "vertex") "node" else "edge"
-          require(!cur.indexes.exists(i =>
-              i.target == target && i.label == label && i.property == prop),
-            s"index on $label.$prop already exists")
-          val ix = graft.model.IndexDesc(target, label, prop,
-            unique = uniq.equalsIgnoreCase("UNIQUE"),
-            isArray = field.dataType.isInstanceOf[ArrayType])
-          // a UNIQUE index over EXISTING data must hold before it is
-          // declared (A15 semantics — null-skip/array-skip built in)
-          if (ix.unique && ix.isBuildable) {
-            val probe = cur.copy(indexes = Seq(ix))
-            val viol = GraphLoader.validateUnique(
-              graft.load.Store.readEntity(spark, storeDir, "nodes"),
-              graft.load.Store.readEntity(spark, storeDir, "edges"), probe)
-            require(viol.isEmpty, {
-              val sample = viol.limit(3).collect().map(_.get(2)).mkString(", ")
-              s"CREATE INDEX rejected: existing duplicates of $label.$prop (e.g. $sample)"
-            })
-          }
-          (cur.copy(indexes = cur.indexes :+ ix), 1L)
+        (cur.copy(indexes = cur.indexes :+ ix), 1L)
+      }
+    case CreateFunctionRe(name, bodyRaw, paramsRaw) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val body = bodyRaw.replace("''", "'")
+        val params = Option(paramsRaw)
+          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+        params.foreach(p => require(p.matches("\\w+"),
+          s"PARAMETERS must be identifiers, got '$p'"))
+        require(!graft.query.ArcadeSql.BuiltinFunctionNames(name.toLowerCase),
+          s"cannot shadow builtin function $name")
+        require(!cur.functions.exists(_.name.equalsIgnoreCase(name)),
+          s"function $name already defined")
+        // a body that does not parse is rejected HERE, not at first call
+        try graft.query.ArcadeSql.parseExpression(body)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"function body does not parse: ${e.getMessage}")
         }
-      case CreateFunctionRe(name, bodyRaw, paramsRaw) =>
-        noTxn("DDL")
-        ddl(storeDir) { cur =>
-          val body = bodyRaw.replace("''", "'")
-          val params = Option(paramsRaw)
-            .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-          params.foreach(p => require(p.matches("\\w+"),
-            s"PARAMETERS must be identifiers, got '$p'"))
-          require(!graft.query.ArcadeSql.BuiltinFunctionNames(name.toLowerCase),
-            s"cannot shadow builtin function $name")
-          require(!cur.functions.exists(_.name.equalsIgnoreCase(name)),
-            s"function $name already defined")
-          // a body that does not parse is rejected HERE, not at first call
-          try graft.query.ArcadeSql.parseExpression(body)
-          catch { case e: IllegalArgumentException =>
-            throw new IllegalArgumentException(s"function body does not parse: ${e.getMessage}")
-          }
-          (cur.copy(functions = cur.functions :+
-            graft.model.FunctionDef(name, params, body)), 1L)
-        }
-      // DROP lifecycle — the CREATE forms' mirrors. DROP TYPE refuses
-      // while records exist (delete them first) and retires the label's
-      // manifest entry in the same locked section, so a dropped type's
-      // generation dirs become sweepable orphans.
-      case DropTypeRe(label, ifExists) =>
-        noTxn("DDL")
-        graft.load.StoreLock.withWriteLock(storeDir) {
-          gs.labels.find(_.label == label) match {
-            case None =>
-              require(ifExists != null, s"unknown type: $label")
-              0L
-            case Some(ls) =>
-              val entity = if (ls.kind == "vertex") "nodes" else "edges"
-              val m = graft.load.Store.readManifest(storeDir)
-              val rows = graft.load.Store.readLabel(spark, storeDir, entity, label, m)
-                .map(_.count()).getOrElse(0L)
-              require(rows == 0,
-                s"DROP TYPE rejected: $label still holds $rows record(s) — DELETE them first")
-              if (ls.kind == "vertex") {
-                val referenced = m.edgeEndpoints.exists { case (_, (srcs, dsts)) =>
-                  srcs.contains(label) || dsts.contains(label)
-                }
-                require(!referenced, s"DROP TYPE rejected: edge types have referenced " +
-                  s"$label — drop those edge types first")
-              }
-              // schema.json FIRST, manifest retirement LAST (ADVICE r7):
-              // the schema is the registry gating appends, so a crash
-              // between the two commits leaves at worst a zero-row
-              // manifest entry for an undeclared label (benign orphan,
-              // retired by any later DROP of a re-declared twin) —
-              // never a declared type whose manifest entry is gone
-              val n = ddl(storeDir) { cur =>
-                (cur.copy(labels = cur.labels.filterNot(_.label == label),
-                  indexes = cur.indexes.filterNot(_.label == label),
-                  constraints = cur.constraints.filterNot(_.label == label)), 1L)
-              }
-              if (m.gens(entity).contains(label))
-                graft.load.Store.writeManifest(storeDir, m.withoutLabel(entity, label))
-              n
-          }
-        }
-      case AlterTypeRe(label, attrRaw, valueRaw) =>
-        noTxn("DDL")
-        def unquote(s: String): String = {
-          val t = s.trim
-          if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-            t.substring(1, t.length - 1).replace("''", "'")
-          else t
-        }
-        attrRaw.toUpperCase match {
-          case "NAME" => // full re-key: data, indexes, constraints,
-            // settings, endpoints and rids all survive (copy-on-write)
-            val nn = valueRaw.trim
-            require(nn.matches("\\w+"),
-              s"ALTER TYPE NAME expects an identifier, got '$nn'")
-            GraphLoader.renameType(spark, storeDir, label, nn)
-          case attr @ ("BUCKETSELECTIONSTRATEGY" | "CUSTOM") =>
-            // placement knobs: recorded in the catalog (round-trip
-            // fidelity), declarative no-ops for a label-partitioned
-            // generation store — see LabelSchema.settings
-            ddl(storeDir) { cur =>
-              require(cur.labels.exists(_.label == label),
-                s"unknown type: $label")
-              val (k, v) =
-                if (attr == "CUSTOM") {
-                  val kv = valueRaw.split("=", 2)
-                  require(kv.length == 2, "ALTER TYPE CUSTOM expects key = value")
-                  (s"custom.${kv(0).trim}", unquote(kv(1)))
-                } else ("bucketselectionstrategy", unquote(valueRaw))
-              (cur.copy(labels = cur.labels.map(l =>
-                if (l.label == label) l.copy(settings = l.settings + (k -> v))
-                else l)), 1L)
-            }
-          case other => throw new IllegalArgumentException(
-            s"unsupported ALTER TYPE attribute $other (supported: NAME, " +
-              "BUCKETSELECTIONSTRATEGY, CUSTOM key = value)")
-        }
-      case AlterPropertyRe(label, prop, attrRaw, valueRaw) =>
-        noTxn("DDL")
-        ddl(storeDir) { cur =>
-          val ls = cur.labels.find(_.label == label).getOrElse(
-            throw new IllegalArgumentException(s"unknown type: $label"))
-          require(ls.schema.fieldNames.contains(prop),
-            s"property $label.$prop is not declared — CREATE PROPERTY first")
-          val target = if (ls.kind == "vertex") "node" else "edge"
-          val attr = attrRaw.toUpperCase
-          val kind = attr match {
-            case "MANDATORY" | "NOTNULL" => "mandatory"
-            case other => other.toLowerCase
-          }
-          // boolean-shaped attributes share the MANDATORY toggle
-          // discipline (declare-over-declared and retire-of-absent are
-          // both client errors); READONLY constrains CHANGES, not
-          // values, so existing data needs no validation pass
-          val boolAttr = kind == "mandatory" || kind == "readonly"
-          def same(x: graft.model.ConstraintDesc) =
-            x.target == target && x.label == label && x.property == prop &&
-              x.kind == kind
-          // existing data must satisfy a check-constraint BEFORE it is
-          // declared (the CREATE INDEX UNIQUE discipline): a store
-          // already violating it would turn every later append into a
-          // liar's contract
-          def validateExisting(c: graft.model.ConstraintDesc): Unit = {
-            val viol = GraphLoader.validateConstraints(
-              graft.load.Store.readEntity(spark, storeDir, "nodes"),
-              graft.load.Store.readEntity(spark, storeDir, "edges"),
-              cur.copy(constraints = Seq(c)))
-            require(viol.isEmpty, {
-              val n = viol.limit(1).collect().map(_.getLong(3)).headOption.getOrElse(0L)
-              s"ALTER PROPERTY rejected: $label.$prop has $n existing " +
-                s"row(s) violating $attr"
-            })
-          }
-          val value = valueRaw.trim
-          if (boolAttr) {
-            if (value.equalsIgnoreCase("true")) {
-              require(!cur.constraints.exists(same),
-                s"$label.$prop is already $attr")
-              val c = graft.model.ConstraintDesc(target, label, prop, kind)
-              if (kind == "mandatory") validateExisting(c)
-              (cur.copy(constraints = cur.constraints :+ c), 1L)
-            } else if (value.equalsIgnoreCase("false")) {
-              // retiring a constraint that does not exist is a client
-              // error, mirroring the double-declare above — a typo'd
-              // retire must not report success (ADVICE r10)
-              require(cur.constraints.exists(same),
-                s"$label.$prop is not $attr — nothing to retire")
-              (cur.copy(constraints = cur.constraints.filterNot(same)), 1L)
-            } else throw new IllegalArgumentException(
-              s"ALTER PROPERTY $attr takes true|false, got '$value'")
-          } else if (value.equalsIgnoreCase("null")) {
-            // the dialect's retire spelling: ALTER PROPERTY T.p MIN null
-            require(cur.constraints.exists(same),
-              s"$label.$prop has no $attr attribute — nothing to retire")
-            (cur.copy(constraints = cur.constraints.filterNot(same)), 1L)
-          } else {
-            val lx = new Lexer(value)
-            val parsed = lx.literal()
-            if (!lx.done) lx.fail(s"trailing input after $attr value")
-            val arg = parsed match {
-              case s: String => s
-              case other =>
-                require(attr != "REGEXP",
-                  s"ALTER PROPERTY REGEXP takes a quoted pattern, got '$value'")
-                String.valueOf(other)
-            }
-            if (attr == "REGEXP") {
-              // an uncompilable pattern is rejected HERE, not at the
-              // first append (the DEFINE FUNCTION parse discipline)
-              try java.util.regex.Pattern.compile(arg)
-              catch { case e: java.util.regex.PatternSyntaxException =>
-                throw new IllegalArgumentException(
-                  s"REGEXP pattern does not compile: ${e.getMessage}")
-              }
-            }
-            if (attr == "MIN" || attr == "MAX" || attr == "DEFAULT") {
-              // the literal must cast into the property's declared type
-              // (ANSI semantics — 'abc' into an INTEGER bound would
-              // otherwise become a silent never-firing null check)
-              val dt = ls.schema.fields.find(_.name == prop).get.dataType
-              val casted = clientCastErrors {
-                spark.range(1).select(
-                  org.apache.spark.sql.functions.lit(arg).cast(dt)).head.get(0)
-              }
-              require(casted != null,
-                s"$attr literal '$arg' does not cast to ${dt.simpleString}")
-            }
-            val c = graft.model.ConstraintDesc(target, label, prop, kind, Some(arg))
-            if (kind != "default") validateExisting(c)
-            // re-setting an attribute OVERWRITES it (ALTER semantics) —
-            // unlike the boolean MANDATORY toggle, a bound is a value
-            (cur.copy(constraints = cur.constraints.filterNot(same) :+ c), 1L)
-          }
-        }
-      case DropPropertyRe(label, prop) =>
-        noTxn("DDL")
-        ddl(storeDir) { cur =>
-          val ls = cur.labels.find(_.label == label).getOrElse(
-            throw new IllegalArgumentException(s"unknown type: $label"))
-          require(ls.schema.fieldNames.contains(prop),
-            s"property $label.$prop is not declared")
-          val target = if (ls.kind == "vertex") "node" else "edge"
-          require(!cur.indexes.exists(i =>
-              i.target == target && i.label == label && i.property == prop),
-            s"DROP PROPERTY rejected: an index on $label.$prop exists — DROP INDEX first")
-          val held = cur.constraints.filter(c =>
-            c.target == target && c.label == label && c.property == prop)
-          require(held.isEmpty,
-            s"DROP PROPERTY rejected: $label.$prop carries constraint(s) " +
-              s"(${held.map(_.kind.toUpperCase).mkString(", ")}) — retire them first")
-          val updated = ls.copy(schema =
-            StructType(ls.schema.fields.filterNot(_.name == prop)))
-          (cur.copy(labels = cur.labels.map(l => if (l.label == label) updated else l)), 1L)
-        }
-      case DropIndexRe(label, prop) =>
-        noTxn("DDL")
-        graft.load.StoreLock.withWriteLock(storeDir) {
-          var wasFt = false
-          ddl(storeDir) { cur =>
-            val dropped = cur.indexes.filter(i => i.label == label && i.property == prop)
-            require(dropped.nonEmpty, s"no index on $label.$prop")
-            wasFt = dropped.exists(_.fulltext)
-            (cur.copy(indexes =
-              cur.indexes.filterNot(i => i.label == label && i.property == prop)), 1L)
-          }
-          // FULL_TEXT: retire the postings entry AFTER the schema
-          // removal (mirroring DROP TYPE's ordering — the schema is
-          // what gates routing and maintenance, so a crash between the
-          // two commits leaves at worst an unrouted, unmaintained
-          // postings entry; the next label rewrite retires it)
-          if (wasFt) {
+        (cur.copy(functions = cur.functions :+
+          graft.model.FunctionDef(name, params, body)), 1L)
+      }
+    // DROP lifecycle — the CREATE forms' mirrors. DROP TYPE refuses
+    // while records exist (delete them first) and retires the label's
+    // manifest entry in the same locked section, so a dropped type's
+    // generation dirs become sweepable orphans.
+    case DropTypeRe(label, ifExists) => (spark, storeDir, _) =>
+      graft.load.StoreLock.withWriteLock(storeDir) {
+        schemaOf(storeDir).labels.find(_.label == label) match {
+          case None =>
+            require(ifExists != null, s"unknown type: $label")
+            0L
+          case Some(ls) =>
+            val entity = if (ls.kind == "vertex") "nodes" else "edges"
             val m = graft.load.Store.readManifest(storeDir)
-            if (m.ft.contains(("nodes", label, prop)))
-              graft.load.Store.writeManifest(storeDir, m.withoutFt("nodes", label, prop))
-            graft.load.Store.sweep(storeDir, keepPerLabel = 1)
+            val rows = graft.load.Store.readLabel(spark, storeDir, entity, label, m)
+              .map(_.count()).getOrElse(0L)
+            require(rows == 0,
+              s"DROP TYPE rejected: $label still holds $rows record(s) — DELETE them first")
+            if (ls.kind == "vertex") {
+              val referenced = m.edgeEndpoints.exists { case (_, (srcs, dsts)) =>
+                srcs.contains(label) || dsts.contains(label)
+              }
+              require(!referenced, s"DROP TYPE rejected: edge types have referenced " +
+                s"$label — drop those edge types first")
+            }
+            // schema.json FIRST, manifest retirement LAST (ADVICE r7):
+            // the schema is the registry gating appends, so a crash
+            // between the two commits leaves at worst a zero-row
+            // manifest entry for an undeclared label (benign orphan,
+            // retired by any later DROP of a re-declared twin) —
+            // never a declared type whose manifest entry is gone
+            val n = ddl(storeDir) { cur =>
+              (cur.copy(labels = cur.labels.filterNot(_.label == label),
+                indexes = cur.indexes.filterNot(_.label == label),
+                constraints = cur.constraints.filterNot(_.label == label)), 1L)
+            }
+            if (m.gens(entity).contains(label))
+              graft.load.Store.writeManifest(storeDir, m.withoutLabel(entity, label))
+            n
+        }
+      }
+    case AlterTypeRe(label, attrRaw, valueRaw) => (spark, storeDir, _) =>
+      def unquote(s: String): String = {
+        val t = s.trim
+        if (t.length >= 2 && t.head == '\'' && t.last == '\'')
+          t.substring(1, t.length - 1).replace("''", "'")
+        else t
+      }
+      attrRaw.toUpperCase match {
+        case "NAME" => // full re-key: data, indexes, constraints,
+          // settings, endpoints and rids all survive (copy-on-write)
+          val nn = valueRaw.trim
+          require(nn.matches("\\w+"),
+            s"ALTER TYPE NAME expects an identifier, got '$nn'")
+          GraphLoader.renameType(spark, storeDir, label, nn)
+        case attr @ ("BUCKETSELECTIONSTRATEGY" | "CUSTOM") =>
+          // placement knobs: recorded in the catalog (round-trip
+          // fidelity), declarative no-ops for a label-partitioned
+          // generation store — see LabelSchema.settings
+          ddl(storeDir) { cur =>
+            require(cur.labels.exists(_.label == label),
+              s"unknown type: $label")
+            val (k, v) =
+              if (attr == "CUSTOM") {
+                val kv = valueRaw.split("=", 2)
+                require(kv.length == 2, "ALTER TYPE CUSTOM expects key = value")
+                (s"custom.${kv(0).trim}", unquote(kv(1)))
+              } else ("bucketselectionstrategy", unquote(valueRaw))
+            (cur.copy(labels = cur.labels.map(l =>
+              if (l.label == label) l.copy(settings = l.settings + (k -> v))
+              else l)), 1L)
           }
-          1L
+        case other => throw new IllegalArgumentException(
+          s"unsupported ALTER TYPE attribute $other (supported: NAME, " +
+            "BUCKETSELECTIONSTRATEGY, CUSTOM key = value)")
+      }
+    case AlterPropertyRe(label, prop, attrRaw, valueRaw) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val ls = cur.labels.find(_.label == label).getOrElse(
+          throw new IllegalArgumentException(s"unknown type: $label"))
+        require(ls.schema.fieldNames.contains(prop),
+          s"property $label.$prop is not declared — CREATE PROPERTY first")
+        val target = if (ls.kind == "vertex") "node" else "edge"
+        val attr = attrRaw.toUpperCase
+        val kind = attr match {
+          case "MANDATORY" | "NOTNULL" => "mandatory"
+          case other => other.toLowerCase
         }
-      case DropFunctionRe(name) =>
-        noTxn("DDL")
+        // boolean-shaped attributes share the MANDATORY toggle
+        // discipline (declare-over-declared and retire-of-absent are
+        // both client errors); READONLY constrains CHANGES, not
+        // values, so existing data needs no validation pass
+        val boolAttr = kind == "mandatory" || kind == "readonly"
+        def same(x: graft.model.ConstraintDesc) =
+          x.target == target && x.label == label && x.property == prop &&
+            x.kind == kind
+        // existing data must satisfy a check-constraint BEFORE it is
+        // declared (the CREATE INDEX UNIQUE discipline): a store
+        // already violating it would turn every later append into a
+        // liar's contract
+        def validateExisting(c: graft.model.ConstraintDesc): Unit = {
+          val viol = GraphLoader.validateConstraints(
+            graft.load.Store.readEntity(spark, storeDir, "nodes"),
+            graft.load.Store.readEntity(spark, storeDir, "edges"),
+            cur.copy(constraints = Seq(c)))
+          require(viol.isEmpty, {
+            val n = viol.limit(1).collect().map(_.getLong(3)).headOption.getOrElse(0L)
+            s"ALTER PROPERTY rejected: $label.$prop has $n existing " +
+              s"row(s) violating $attr"
+          })
+        }
+        val value = valueRaw.trim
+        if (boolAttr) {
+          if (value.equalsIgnoreCase("true")) {
+            require(!cur.constraints.exists(same),
+              s"$label.$prop is already $attr")
+            val c = graft.model.ConstraintDesc(target, label, prop, kind)
+            if (kind == "mandatory") validateExisting(c)
+            (cur.copy(constraints = cur.constraints :+ c), 1L)
+          } else if (value.equalsIgnoreCase("false")) {
+            // retiring a constraint that does not exist is a client
+            // error, mirroring the double-declare above — a typo'd
+            // retire must not report success (ADVICE r10)
+            require(cur.constraints.exists(same),
+              s"$label.$prop is not $attr — nothing to retire")
+            (cur.copy(constraints = cur.constraints.filterNot(same)), 1L)
+          } else throw new IllegalArgumentException(
+            s"ALTER PROPERTY $attr takes true|false, got '$value'")
+        } else if (value.equalsIgnoreCase("null")) {
+          // the dialect's retire spelling: ALTER PROPERTY T.p MIN null
+          require(cur.constraints.exists(same),
+            s"$label.$prop has no $attr attribute — nothing to retire")
+          (cur.copy(constraints = cur.constraints.filterNot(same)), 1L)
+        } else {
+          val lx = new Lexer(value)
+          val parsed = lx.literal()
+          if (!lx.done) lx.fail(s"trailing input after $attr value")
+          val arg = parsed match {
+            case s: String => s
+            case other =>
+              require(attr != "REGEXP",
+                s"ALTER PROPERTY REGEXP takes a quoted pattern, got '$value'")
+              String.valueOf(other)
+          }
+          if (attr == "REGEXP") {
+            // an uncompilable pattern is rejected HERE, not at the
+            // first append (the DEFINE FUNCTION parse discipline)
+            try java.util.regex.Pattern.compile(arg)
+            catch { case e: java.util.regex.PatternSyntaxException =>
+              throw new IllegalArgumentException(
+                s"REGEXP pattern does not compile: ${e.getMessage}")
+            }
+          }
+          if (attr == "MIN" || attr == "MAX" || attr == "DEFAULT") {
+            // the literal must cast into the property's declared type
+            // (ANSI semantics — 'abc' into an INTEGER bound would
+            // otherwise become a silent never-firing null check)
+            val dt = ls.schema.fields.find(_.name == prop).get.dataType
+            val casted = clientCastErrors {
+              spark.range(1).select(
+                org.apache.spark.sql.functions.lit(arg).cast(dt)).head.get(0)
+            }
+            require(casted != null,
+              s"$attr literal '$arg' does not cast to ${dt.simpleString}")
+          }
+          val c = graft.model.ConstraintDesc(target, label, prop, kind, Some(arg))
+          if (kind != "default") validateExisting(c)
+          // re-setting an attribute OVERWRITES it (ALTER semantics) —
+          // unlike the boolean MANDATORY toggle, a bound is a value
+          (cur.copy(constraints = cur.constraints.filterNot(same) :+ c), 1L)
+        }
+      }
+    case DropPropertyRe(label, prop) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val ls = cur.labels.find(_.label == label).getOrElse(
+          throw new IllegalArgumentException(s"unknown type: $label"))
+        require(ls.schema.fieldNames.contains(prop),
+          s"property $label.$prop is not declared")
+        val target = if (ls.kind == "vertex") "node" else "edge"
+        require(!cur.indexes.exists(i =>
+            i.target == target && i.label == label && i.property == prop),
+          s"DROP PROPERTY rejected: an index on $label.$prop exists — DROP INDEX first")
+        val held = cur.constraints.filter(c =>
+          c.target == target && c.label == label && c.property == prop)
+        require(held.isEmpty,
+          s"DROP PROPERTY rejected: $label.$prop carries constraint(s) " +
+            s"(${held.map(_.kind.toUpperCase).mkString(", ")}) — retire them first")
+        val updated = ls.copy(schema =
+          StructType(ls.schema.fields.filterNot(_.name == prop)))
+        (cur.copy(labels = cur.labels.map(l => if (l.label == label) updated else l)), 1L)
+      }
+    case DropIndexRe(label, prop) => (spark, storeDir, _) =>
+      graft.load.StoreLock.withWriteLock(storeDir) {
+        var wasFt = false
         ddl(storeDir) { cur =>
-          val after = cur.functions.filterNot(_.name.equalsIgnoreCase(name))
-          require(after.size < cur.functions.size, s"unknown function: $name")
-          (cur.copy(functions = after), 1L)
+          val dropped = cur.indexes.filter(i => i.label == label && i.property == prop)
+          require(dropped.nonEmpty, s"no index on $label.$prop")
+          wasFt = dropped.exists(_.fulltext)
+          (cur.copy(indexes =
+            cur.indexes.filterNot(i => i.label == label && i.property == prop)), 1L)
         }
-      case InsertRe(label, cols, values) =>
-        val names = cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        require(names.nonEmpty, "INSERT needs a column list")
-        val tuples = parseTuples(values)
-        tuples.foreach(t => require(t.size == names.size,
-          s"VALUES arity ${t.size} != column list arity ${names.size}"))
-        append(spark, storeDir, label, kindOf(label),
-          tuples.map(t => names.zip(t).toMap), txn)
-      // the dialect's second insert shape: INSERT INTO <T> SET k = v, …
-      case InsertSetRe(label, setClause) =>
-        append(spark, storeDir, label, kindOf(label), Seq(parseSet(setClause)), txn)
-      case CreateVertexRe(label, setClause) =>
-        require(kindOf(label) == "vertex", s"$label is not a vertex type")
-        append(spark, storeDir, label, "vertex", Seq(parseSet(setClause)), txn)
-      case CreateEdgeRe(label, src, dst, setClause) =>
-        require(kindOf(label) == "edge", s"$label is not an edge type")
-        val props = Option(setClause).map(parseSet).getOrElse(Map.empty)
-        append(spark, storeDir, label, "edge",
-          Seq(props + ("src" -> src.toLong) + ("dst" -> dst.toLong)), txn)
-      // UPDATE/DELETE: copy-on-write rewrites of the label partition with
-      // the same invariants as the bulk path (UNIQUE revalidation, no
-      // dangling endpoints). The WHERE grammar is the ArcadeSql dialect's.
-      // UPDATE/DELETE parse character-level (the dialect's own lexer
-      // semantics): a string literal holding a keyword — `SET comment =
-      // 'WHERE x'` — can never mis-split the statement the way the old
-      // regex capture did
-      case c if c.trim.toUpperCase.startsWith("UPDATE") =>
-        // UPDATE <Label> SET|REMOVE|INCREMENT|CONTENT|MERGE <tail>
-        // (ArcadeDB's update content forms [dep, ArcadeDB 22.8 SQL
-        // update grammar, `src/pom.xml:104-108`]), all compiling onto
-        // the SAME copy-on-write rewrite: REMOVE nulls properties
-        // (A7: absent key ≡ null — MANDATORY re-validation fires),
-        // INCREMENT adds a numeric delta, CONTENT replaces the whole
-        // declared property content (unmentioned props null out, keys/
-        // topology survive — ArcadeDB keeps the @rid), MERGE sets just
-        // the mentioned props. The SET tail is the dialect grammar —
-        // values are full expressions over the row, and a string
-        // literal holding a keyword can never mis-split the statement.
-        val lx = new Lexer(c)
-        lx.keyword("UPDATE")
-        val label = lx.ident()
-        val op = lx.ident().toUpperCase
-        if (op != "SET") return executeUpdateForm(
-          spark, storeDir, label, kindOf(label), op, lx.rest(), gs, txn, ret)
+        // FULL_TEXT: retire the postings entry AFTER the schema
+        // removal (mirroring DROP TYPE's ordering — the schema is
+        // what gates routing and maintenance, so a crash between the
+        // two commits leaves at worst an unrouted, unmaintained
+        // postings entry; the next label rewrite retires it)
+        if (wasFt) {
+          val m = graft.load.Store.readManifest(storeDir)
+          if (m.ft.contains(("nodes", label, prop)))
+            graft.load.Store.writeManifest(storeDir, m.withoutFt("nodes", label, prop))
+          graft.load.Store.sweep(storeDir, keepPerLabel = 1)
+        }
+        1L
+      }
+    case DropFunctionRe(name) => (spark, storeDir, _) =>
+      ddl(storeDir) { cur =>
+        val after = cur.functions.filterNot(_.name.equalsIgnoreCase(name))
+        require(after.size < cur.functions.size, s"unknown function: $name")
+        (cur.copy(functions = after), 1L)
+      }
+    // maintenance: rewrite fragmented label partitions (the N small
+    // files N single-row commands leave behind) into scan-sized files
+    case CompactRe() => (spark, storeDir, _) =>
+      GraphLoader.compactStore(spark, storeDir).toLong
+    // BACKUP DATABASE '<dest>': pinned consistent snapshot copy;
+    // writers never blocked (generations are write-once). Takes the
+    // serving lease for the copy's duration, so a backup from a
+    // SECOND process against a live server is refused loudly — run
+    // it through the serving process (this route), whose lease nests
+    case BackupRe(dest) => (spark, storeDir, ret) =>
+      ret.foreach(_.readOnly = true) // fenced read, writes OUTSIDE the store
+      graft.load.Store.backup(storeDir, dest)
+    // REBUILD INDEX ON <T>(<p>) | * — re-derive persisted postings
+    // from the current rows / re-prove UNIQUE invariants; returns
+    // the number of indexes rebuilt
+    case RebuildIndexRe(label, prop) => (spark, storeDir, _) =>
+      rebuildIndexes(spark, storeDir, Option(label), Option(prop))
+    // CHECK DATABASE [FIX] — integrity report (per-type counts,
+    // UNIQUE violations, dangling endpoints, index routing,
+    // generation presence) as result rows; returns the number of
+    // ISSUES (0 = healthy). FIX (r16, the dialect's repair-in-place
+    // option [dep arcadedb SQL]) first routes the repairable issues
+    // into repairs — salvage lost generations, drop dangling edges,
+    // rebuild damaged postings — all-or-nothing under ONE manifest
+    // commit (GraphLoader.fixStore), then reports the post-fix
+    // state: the fix rows ride first, the fresh CHECK report after,
+    // and the returned count is the REMAINING issues.
+    case CheckRe(tpe, bucket, fix) => (spark, storeDir, ret) =>
+      // TYPE <t,…> / BUCKET <b,…> scope the REPORT to a label list
+      // (r16 single, r17 comma lists — the dialect's full grammar
+      // [dep arcadedb SQL]; buckets ARE label partitions here —
+      // bucket b = the b-th declared label, the RidSource numbering,
+      // and a bucket NAME is the label itself, so BUCKET resolves to
+      // the same scoped path). FIX stays whole-store — the salvage
+      // commit is ONE atomic manifest swap and a partial repair
+      // would leave cross-label damage (dangling edges into an
+      // unfixed label) half-addressed, so the combination is
+      // refused loudly (documented divergence from the reference,
+      // which accepts scoped FIX)
+      val bucketTypes = Option(bucket).map { bs =>
+        val gs = schemaOf(storeDir)
+        bs.split(",").iterator.map(_.trim).map { b =>
+          if (b.forall(_.isDigit)) {
+            val i = b.toInt
+            require(i >= 0 && i < gs.labels.size,
+              s"unknown bucket #$i: buckets are label partitions and " +
+                s"${gs.labels.size} label(s) are declared")
+            gs.labels(i).label
+          } else {
+            require(gs.labels.exists(_.label == b),
+              s"unknown bucket '$b': buckets are label partitions — name " +
+                "a declared type or its ordinal")
+            b
+          }
+        }.toSeq
+      }
+      val typeList = Option(tpe).map(_.split(",").map(_.trim).toSeq)
+      require(typeList.isEmpty || bucketTypes.isEmpty,
+        "CHECK DATABASE takes TYPE or BUCKET, not both (buckets are " +
+          "label partitions — the two spellings scope the same way)")
+      val scope = typeList.orElse(bucketTypes).map(_.distinct)
+      require(scope.isEmpty || fix == null,
+        "CHECK DATABASE TYPE/BUCKET … FIX is not supported: FIX repairs the " +
+          "whole store under one manifest commit — run CHECK DATABASE FIX")
+      if (fix == null) {
+        ret.foreach(_.readOnly = true) // pure report, manifest untouched
+        checkDatabase(spark, storeDir, ret, scope)
+      } else {
+        val fixed = graft.load.GraphLoader.fixStore(spark, storeDir)
+        val issues = checkDatabase(spark, storeDir, ret)
+        ret.foreach(r => r.images =
+          Some(fixed.toArray ++ r.images.getOrElse(Array.empty[String])))
+        issues
+      }
+    // EXPORT DATABASE '<dest>' — JSONL interchange export + schema,
+    // BACKUP's fencing; returns the number of records exported
+    case ExportRe(dest) => (spark, storeDir, ret) =>
+      ret.foreach(_.readOnly = true) // fenced read, writes OUTSIDE the store
+      graft.load.Store.exportJson(spark, storeDir, dest)
+    // IMPORT DATABASE '<src>' — the inverse (r15, VERDICT r14 missing
+    // #1): re-ingest an EXPORT's JSONL tree + schema.json through the
+    // validated bulk-load path into THIS store, which must be fresh
+    // or record-empty (ArcadeDB's empty-database requirement [dep]);
+    // returns the number of records imported. The commit moves the
+    // manifest seq, so a serving snapshot refreshes like any DML.
+    case ImportRe(src) => (spark, storeDir, _) =>
+      graft.load.GraphLoader.importJson(spark, src, storeDir)
+
+  }
+
+  private val record: PartialFunction[String, Record] = {
+    case InsertRe(label, cols, values) => (spark, txn, _) =>
+      val names = cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      require(names.nonEmpty, "INSERT needs a column list")
+      val tuples = parseTuples(values)
+      tuples.foreach(t => require(t.size == names.size,
+        s"VALUES arity ${t.size} != column list arity ${names.size}"))
+      append(spark, txn, label, kindOf(txn.outDir, label),
+        tuples.map(t => names.zip(t).toMap))
+    // the dialect's second insert shape: INSERT INTO <T> SET k = v, …
+    case InsertSetRe(label, setClause) => (spark, txn, _) =>
+      append(spark, txn, label, kindOf(txn.outDir, label), Seq(parseSet(setClause)))
+    case CreateVertexRe(label, setClause) => (spark, txn, _) =>
+      require(kindOf(txn.outDir, label) == "vertex", s"$label is not a vertex type")
+      append(spark, txn, label, "vertex", Seq(parseSet(setClause)))
+    case CreateEdgeRe(label, src, dst, setClause) => (spark, txn, _) =>
+      require(kindOf(txn.outDir, label) == "edge", s"$label is not an edge type")
+      val props = Option(setClause).map(parseSet).getOrElse(Map.empty)
+      append(spark, txn, label, "edge",
+        Seq(props + ("src" -> src.toLong) + ("dst" -> dst.toLong)))
+    // UPDATE/DELETE: copy-on-write rewrites of the label partition with
+    // the same invariants as the bulk path (UNIQUE revalidation, no
+    // dangling endpoints). The WHERE grammar is the ArcadeSql dialect's.
+    // UPDATE/DELETE parse character-level (the dialect's own lexer
+    // semantics): a string literal holding a keyword — `SET comment =
+    // 'WHERE x'` — can never mis-split the statement the way the old
+    // regex capture did
+    case c if c.trim.toUpperCase.startsWith("UPDATE") => (spark, txn, ret) =>
+      // UPDATE <Label> SET|REMOVE|INCREMENT|CONTENT|MERGE <tail>
+      // (ArcadeDB's update content forms [dep, ArcadeDB 22.8 SQL
+      // update grammar, `src/pom.xml:104-108`]), all compiling onto
+      // the SAME copy-on-write rewrite: REMOVE nulls properties
+      // (A7: absent key ≡ null — MANDATORY re-validation fires),
+      // INCREMENT adds a numeric delta, CONTENT replaces the whole
+      // declared property content (unmentioned props null out, keys/
+      // topology survive — ArcadeDB keeps the @rid), MERGE sets just
+      // the mentioned props. The SET tail is the dialect grammar —
+      // values are full expressions over the row, and a string
+      // literal holding a keyword can never mis-split the statement.
+      val lx = new Lexer(c)
+      lx.keyword("UPDATE")
+      val label = lx.ident()
+      val gs = schemaOf(txn.outDir)
+      val kind = kindOf(gs, label)
+      val op = lx.ident().toUpperCase
+      if (op != "SET")
+        executeUpdateForm(spark, txn, label, kind, op, lx.rest(), gs, ret)
+      else {
         val spec = graft.query.ArcadeSql.updateSpec(lx.rest())
         val wantImages = spec.returning.exists(r => r == "BEFORE" || r == "AFTER")
         if (wantImages) {
@@ -608,9 +702,9 @@ object Dml {
               "row has no before image) — use RETURN COUNT")
         }
         clientCastErrors {
-          val (n, imgs) = GraphLoader.updateColumnsReturning(spark, storeDir,
-            label, kindOf(label), spec.sets.toMap,
-            spec.where.getOrElse(org.apache.spark.sql.functions.lit(true)), txn,
+          val (n, imgs) = GraphLoader.updateColumnsReturning(spark, txn,
+            label, kind, spec.sets.toMap,
+            spec.where.getOrElse(org.apache.spark.sql.functions.lit(true)),
             if (wantImages) spec.returning else None,
             spec.retSkip, spec.retLimit)
           ret.foreach(_.images = imgs)
@@ -622,144 +716,35 @@ object Dml {
             val rec = spec.insertRecord.getOrElse(throw new IllegalArgumentException(
               "UPSERT insert needs literal SET values and a WHERE of `field = literal` " +
                 "conjuncts only (the inserted row must satisfy its own predicate)"))
-            append(spark, storeDir, label, kindOf(label), Seq(rec), txn)
-          } else {
-            // GC with a one-generation grace window (an in-process
-            // server additionally sweeps with exact pin knowledge
-            // post-reload); in a batch, GC waits for the single commit
-            if (txn.isEmpty) graft.load.Store.sweep(storeDir, keepPerLabel = 1)
-            n
-          }
+            append(spark, txn, label, kind, Seq(rec))
+          } else n
         }
-      case c if c.trim.toUpperCase.startsWith("DELETE") =>
-        val (label, where, requiredKind) = parseDelete(c)
-        val kind = kindOf(label)
-        requiredKind.foreach(k => require(k == kind,
-          s"DELETE ${k.toUpperCase}: $label is a $kind type"))
-        clientCastErrors {
-          val n = GraphLoader.deleteRecords(spark, storeDir, label, kind,
-            where.map(graft.query.ArcadeSql.predicate), txn)
-          if (txn.isEmpty) graft.load.Store.sweep(storeDir, keepPerLabel = 1)
-          n
-        }
-      // maintenance: rewrite fragmented label partitions (the N small
-      // files N single-row commands leave behind) into scan-sized files
-      case CompactRe() =>
-        noTxn("COMPACT")
-        GraphLoader.compactStore(spark, storeDir).toLong
-      // TRUNCATE TYPE <T>: empty the type, keep its declaration. The
-      // vertex path keeps the store's no-dangling-edge invariant (the
-      // DELETE probe); the reference's UNSAFE escape hatch would leave
-      // dangling endpoints, which this store refuses BY DESIGN — fail
-      // loudly rather than corrupt referential integrity
-      case TruncateRe(label, unsafe) => // plain DML (a whole-label DELETE): txn-safe
-        require(unsafe == null,
-          "TRUNCATE TYPE ... UNSAFE is not supported: it would leave dangling " +
-            "edge endpoints, which this store never holds — delete or truncate " +
-            "the referencing edge types first, then TRUNCATE without UNSAFE")
-        val n = GraphLoader.deleteRecords(spark, storeDir, label, kindOf(label), None, txn)
-        if (txn.isEmpty) graft.load.Store.sweep(storeDir, keepPerLabel = 1)
-        n
-      // BACKUP DATABASE '<dest>': pinned consistent snapshot copy;
-      // writers never blocked (generations are write-once). Takes the
-      // serving lease for the copy's duration, so a backup from a
-      // SECOND process against a live server is refused loudly — run
-      // it through the serving process (this route), whose lease nests
-      case BackupRe(dest) =>
-        noTxn("BACKUP")
-        ret.foreach(_.readOnly = true) // fenced read, writes OUTSIDE the store
-        graft.load.Store.backup(storeDir, dest)
-      // REBUILD INDEX ON <T>(<p>) | * — re-derive persisted postings
-      // from the current rows / re-prove UNIQUE invariants; returns
-      // the number of indexes rebuilt
-      case RebuildIndexRe(label, prop) =>
-        noTxn("REBUILD INDEX")
-        rebuildIndexes(spark, storeDir, Option(label), Option(prop))
-      // CHECK DATABASE [FIX] — integrity report (per-type counts,
-      // UNIQUE violations, dangling endpoints, index routing,
-      // generation presence) as result rows; returns the number of
-      // ISSUES (0 = healthy). FIX (r16, the dialect's repair-in-place
-      // option [dep arcadedb SQL]) first routes the repairable issues
-      // into repairs — salvage lost generations, drop dangling edges,
-      // rebuild damaged postings — all-or-nothing under ONE manifest
-      // commit (GraphLoader.fixStore), then reports the post-fix
-      // state: the fix rows ride first, the fresh CHECK report after,
-      // and the returned count is the REMAINING issues.
-      case CheckRe(tpe, bucket, fix) =>
-        noTxn("CHECK DATABASE")
-        // TYPE <t,…> / BUCKET <b,…> scope the REPORT to a label list
-        // (r16 single, r17 comma lists — the dialect's full grammar
-        // [dep arcadedb SQL]; buckets ARE label partitions here —
-        // bucket b = the b-th declared label, the RidSource numbering,
-        // and a bucket NAME is the label itself, so BUCKET resolves to
-        // the same scoped path). FIX stays whole-store — the salvage
-        // commit is ONE atomic manifest swap and a partial repair
-        // would leave cross-label damage (dangling edges into an
-        // unfixed label) half-addressed, so the combination is
-        // refused loudly (documented divergence from the reference,
-        // which accepts scoped FIX)
-        val bucketTypes = Option(bucket).map { bs =>
-          val gs = graft.model.GraphSchema.fromJson(java.nio.file.Files.readString(
-            java.nio.file.Paths.get(s"$storeDir/schema.json")))
-          bs.split(",").iterator.map(_.trim).map { b =>
-            if (b.forall(_.isDigit)) {
-              val i = b.toInt
-              require(i >= 0 && i < gs.labels.size,
-                s"unknown bucket #$i: buckets are label partitions and " +
-                  s"${gs.labels.size} label(s) are declared")
-              gs.labels(i).label
-            } else {
-              require(gs.labels.exists(_.label == b),
-                s"unknown bucket '$b': buckets are label partitions — name " +
-                  "a declared type or its ordinal")
-              b
-            }
-          }.toSeq
-        }
-        val typeList = Option(tpe).map(_.split(",").map(_.trim).toSeq)
-        require(typeList.isEmpty || bucketTypes.isEmpty,
-          "CHECK DATABASE takes TYPE or BUCKET, not both (buckets are " +
-            "label partitions — the two spellings scope the same way)")
-        val scope = typeList.orElse(bucketTypes).map(_.distinct)
-        require(scope.isEmpty || fix == null,
-          "CHECK DATABASE TYPE/BUCKET … FIX is not supported: FIX repairs the " +
-            "whole store under one manifest commit — run CHECK DATABASE FIX")
-        if (fix == null) {
-          ret.foreach(_.readOnly = true) // pure report, manifest untouched
-          checkDatabase(spark, storeDir, ret, scope)
-        } else {
-          val fixed = graft.load.GraphLoader.fixStore(spark, storeDir)
-          val issues = checkDatabase(spark, storeDir, ret)
-          ret.foreach(r => r.images =
-            Some(fixed.toArray ++ r.images.getOrElse(Array.empty[String])))
-          issues
-        }
-      // EXPORT DATABASE '<dest>' — JSONL interchange export + schema,
-      // BACKUP's fencing; returns the number of records exported
-      case ExportRe(dest) =>
-        noTxn("EXPORT DATABASE")
-        ret.foreach(_.readOnly = true) // fenced read, writes OUTSIDE the store
-        graft.load.Store.exportJson(spark, storeDir, dest)
-      // IMPORT DATABASE '<src>' — the inverse (r15, VERDICT r14 missing
-      // #1): re-ingest an EXPORT's JSONL tree + schema.json through the
-      // validated bulk-load path into THIS store, which must be fresh
-      // or record-empty (ArcadeDB's empty-database requirement [dep]);
-      // returns the number of records imported. The commit moves the
-      // manifest seq, so a serving snapshot refreshes like any DML.
-      case ImportRe(src) =>
-        noTxn("IMPORT DATABASE")
-        graft.load.GraphLoader.importJson(spark, src, storeDir)
-      case _ =>
-        throw new IllegalArgumentException(
-          "unsupported DML (expected INSERT INTO … VALUES, CREATE VERTEX … SET, " +
-            "CREATE EDGE … FROM … TO …; ALTER forms are ALTER PROPERTY T.p " +
-            "MANDATORY|NOTNULL|READONLY true|false and " +
-            "MIN|MAX|REGEXP|DEFAULT <literal>|null)")
-    }
+      }
+    case c if c.trim.toUpperCase.startsWith("DELETE") => (spark, txn, _) =>
+      val (label, where, requiredKind) = parseDelete(c)
+      val kind = kindOf(txn.outDir, label)
+      requiredKind.foreach(k => require(k == kind,
+        s"DELETE ${k.toUpperCase}: $label is a $kind type"))
+      clientCastErrors {
+        GraphLoader.deleteRecords(spark, txn, label, kind,
+          where.map(graft.query.ArcadeSql.predicate))
+      }
+    // TRUNCATE TYPE <T>: empty the type, keep its declaration — a
+    // whole-label DELETE. The vertex path keeps the store's
+    // no-dangling-edge invariant (the DELETE probe); the reference's
+    // UNSAFE escape hatch would leave dangling endpoints, which this
+    // store refuses BY DESIGN — fail loudly rather than corrupt
+    // referential integrity
+    case TruncateRe(label, unsafe) => (spark, txn, _) =>
+      require(unsafe == null,
+        "TRUNCATE TYPE ... UNSAFE is not supported: it would leave dangling " +
+          "edge endpoints, which this store never holds — delete or truncate " +
+          "the referencing edge types first, then TRUNCATE without UNSAFE")
+      GraphLoader.deleteRecords(spark, txn, label, kindOf(txn.outDir, label), None)
   }
 
   /** The non-SET update content forms, compiled onto
-    * [[GraphLoader.updateColumns]]'s rewrite (so READONLY/immutable/
+    * [[GraphLoader.updateColumnsReturning]]'s rewrite (so READONLY/immutable/
     * UNIQUE/constraint invariants hold identically):
     *
     *   UPDATE T REMOVE f [, g]      [WHERE p]   → f, g ← null
@@ -782,10 +767,8 @@ object Dml {
     * model. ADD/REMOVE-element/PUT literals cast to the DECLARED
     * element/value type (the lattice cast, loud on mismatch). UPSERT
     * applies to the SET form only. */
-  private def executeUpdateForm(spark: SparkSession, storeDir: String,
-      label: String, kind: String, op: String, tail: String,
-      gs: graft.model.GraphSchema,
-      txn: Option[graft.load.StoreTxn],
+  private def executeUpdateForm(spark: SparkSession, txn: StoreTxn,
+      label: String, kind: String, op: String, tail: String, gs: GraphSchema,
       ret: Option[ReturnSink]): Long = {
     import org.apache.spark.sql.functions.{array, array_append, array_remove,
       coalesce, col, lit, map_concat, map_filter, when, map => mapOf}
@@ -835,7 +818,7 @@ object Dml {
           if (lx.peek == ',') lx.i += 1 else more = false
         }
         val sets = items.map {
-          // untyped NullType lit: updateColumns casts it to the field's
+          // untyped NullType lit: the rewrite casts it to the field's
           // declared type, and NullType→array/map casts are legal where
           // string→array is not (code-review r12 #2)
           case (f, None) => f -> lit(null)
@@ -944,10 +927,9 @@ object Dml {
       "RETURN BEFORE/AFTER is a single-command response form — inside a " +
         "batch or session transaction use RETURN COUNT")
     clientCastErrors {
-      val (n, imgs) = GraphLoader.updateColumnsReturning(spark, storeDir, label,
-        kind, sets, where, txn, if (wantImages) formReturn else None)
+      val (n, imgs) = GraphLoader.updateColumnsReturning(spark, txn, label,
+        kind, sets, where, if (wantImages) formReturn else None)
       ret.foreach(_.images = imgs)
-      if (txn.isEmpty) graft.load.Store.sweep(storeDir, keepPerLabel = 1)
       n
     }
   }
@@ -1053,8 +1035,7 @@ object Dml {
   private def rebuildIndexes(spark: SparkSession, storeDir: String,
       label: Option[String], prop: Option[String]): Long =
     graft.load.StoreLock.withWriteLock(storeDir) {
-      val gs = graft.model.GraphSchema.fromJson(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$storeDir/schema.json")))
+      val gs = schemaOf(storeDir)
       val targets = gs.indexes.filter(i =>
         label.forall(_.equalsIgnoreCase(i.label)) &&
           prop.forall(_.equalsIgnoreCase(i.property)))
@@ -1125,8 +1106,7 @@ object Dml {
       case '"' => "\\\""; case '\\' => "\\\\"
       case c if c < ' ' => ""; case c => c.toString
     } + "\""
-    val gsAll = graft.model.GraphSchema.fromJson(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$storeDir/schema.json")))
+    val gsAll = schemaOf(storeDir)
     typeFilter.toSeq.flatten.foreach(t => require(gsAll.labels.exists(_.label == t),
       s"unknown type: $t"))
     def inScope(l: String): Boolean = typeFilter.forall(_.contains(l))
@@ -1299,8 +1279,7 @@ object Dml {
   private def createFullTextIndex(spark: SparkSession, storeDir: String,
       label: String, prop: String): Long =
     graft.load.StoreLock.withWriteLock(storeDir) {
-      val cur = graft.model.GraphSchema.fromJson(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$storeDir/schema.json")))
+      val cur = schemaOf(storeDir)
       val ls = cur.labels.find(_.label == label).getOrElse(
         throw new IllegalArgumentException(s"unknown type: $label"))
       require(ls.kind == "vertex",
@@ -1338,7 +1317,7 @@ object Dml {
     }
 
   private def ddl(storeDir: String)(
-      f: graft.model.GraphSchema => (graft.model.GraphSchema, Long)): Long =
+      f: GraphSchema => (GraphSchema, Long)): Long =
     graft.load.StoreLock.withWriteLock(storeDir) {
       val path = java.nio.file.Paths.get(s"$storeDir/schema.json")
       val (updated, n) =
@@ -1375,9 +1354,8 @@ object Dml {
     case other => throw new IllegalArgumentException(s"unsupported property type: $other")
   }
 
-  private def append(spark: SparkSession, storeDir: String, label: String,
-      kind: String, records: Seq[Map[String, Any]],
-      txn: Option[graft.load.StoreTxn]): Long = {
+  private def append(spark: SparkSession, txn: StoreTxn, label: String,
+      kind: String, records: Seq[Map[String, Any]]): Long = {
     val isNode = kind == "vertex"
     if (isNode) records.foreach(r => require(r.contains("id"),
       "node insert needs an explicit id (ids are the graph's join keys)"))
@@ -1399,8 +1377,8 @@ object Dml {
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       schema)
     clientCastErrors {
-      if (isNode) GraphLoader.appendNodes(spark, storeDir, batch, txn)
-      else GraphLoader.appendEdges(spark, storeDir, batch, txn)
+      if (isNode) GraphLoader.appendNodes(spark, txn, batch)
+      else GraphLoader.appendEdges(spark, txn, batch)
     }
     records.size.toLong
   }

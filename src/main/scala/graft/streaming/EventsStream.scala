@@ -71,8 +71,9 @@ object EventsStream {
   /** Streaming → persisted-store ingest bridge (VERDICT r8 wrong #2:
     * this composition lived only in test code). Each microbatch of
     * node rows (`id`, `label`, + properties) lands through the SAME
-    * validated append sink DML uses
-    * ([[graft.load.GraphLoader.appendNodes]]), so every store
+    * validated append sink and commit path DML uses
+    * ([[graft.load.GraphLoader.appendNodes]] in one
+    * [[graft.load.GraphLoader.commit]]), so every store
     * invariant — one atomic manifest swap per batch, id-collision and
     * UNIQUE re-validation, one full-text postings segment per appended
     * data segment, auto-compaction past the segment threshold — holds
@@ -95,8 +96,8 @@ object EventsStream {
     val w = rows.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // an empty microbatch must not commit an empty generation
-        if (!batch.isEmpty)
-          graft.load.GraphLoader.appendNodes(spark, storeDir, batch)
+        if (!batch.isEmpty) graft.load.GraphLoader.commit(spark, storeDir)(
+          graft.load.GraphLoader.appendNodes(spark, _, batch))
       }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
     w.start()

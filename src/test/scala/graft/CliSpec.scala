@@ -961,6 +961,18 @@ class CliSpec extends SparkSpec {
       assert(xc == 200, xb)
       assert(Files.exists(java.nio.file.Paths.get(s"$dest/schema.json")))
       assert(spark.read.json(s"$dest/nodes/Part").count() == 200)
+      // IMPORT DATABASE reaches the importer over HTTP — as a command
+      // and as a sqlscript barrier — which refuses the served,
+      // non-empty store
+      Seq(
+        s"""{"language":"sql","command":"IMPORT DATABASE '$dest'"}""",
+        s"""{"language":"sqlscript","command":"IMPORT DATABASE '$dest'; """ +
+          """INSERT INTO Part (id, name) VALUES (3999001, 'gizmo')"}""").foreach { body =>
+        val (ic, ib) = post("command", body)
+        assert(ic == 400 && ib.contains("already holds records"), ib)
+        assert(!ib.contains("only DML here") &&
+          !ib.contains("not allowed inside a transaction"), ib)
+      }
       // maintenance refuses to run inside a session transaction
       val (bc, bb) = post("begin", "{}")
       assert(bc == 200, bb)

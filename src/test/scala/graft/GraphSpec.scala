@@ -1056,22 +1056,47 @@ class GraphSpec extends SparkSpec {
   test("FrameCache: a regenerated source releases the superseded checkpoint of every kind") {
     import graft.queries.Qh.FrameCache
     import org.apache.spark.sql.execution.LogicalRDD
-    val dir = "frame-cache-spec"
+    // sources are fingerprinted files (mtime__size): regenerating one
+    // with a different size re-keys it
+    val dir = java.nio.file.Files.createTempDirectory("frame-cache-spec")
+    def write(name: String, bytes: Int): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p, Array.fill[Byte](bytes)(1))
+      p.toString
+    }
+    val src = write("lineitem.parquet", 10)
+    val twin = write("documents.parquet", 10) // a second source, same dir
+    val elsewhere = java.nio.file.Files.createTempDirectory("frame-cache-other")
+      .resolve("lineitem.parquet")
+    java.nio.file.Files.write(elsewhere, Array.fill[Byte](10)(1))
     def cp(n: Int) = spark.range(n).toDF("x").localCheckpoint(true)
     def pinned(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
         .forall(spark.sparkContext.getPersistentRDDs.contains)
-    val a = FrameCache.frame("kind-a", dir, "fp1")(cp(10))
-    val waves = FrameCache.frames("bfs-wave:40:1,2", dir, "fp1")(Seq(cp(5), cp(6)))
-    val other = FrameCache.frame("kind-a", dir + "-other", "fp1")(cp(7))
-    assert(FrameCache.value("srcs", dir, "fp1")(1) == 1)
-    assert((a +: other +: waves).forall(pinned))
+    val a = FrameCache.frame("kind-a", src)(cp(10))
+    val waves = FrameCache.frames("bfs-wave:40:1,2", src)(Seq(cp(5), cp(6)))
+    val other = FrameCache.frame("kind-a", elsewhere.toString)(cp(7))
+    val sibling = FrameCache.frame("kind-t", twin)(cp(8))
+    assert(FrameCache.value("srcs", src)(1) == 1)
+    assert(FrameCache.value("model", twin)("m1") == "m1")
+    assert((a +: other +: sibling +: waves).forall(pinned))
     // same fingerprint: reused, never rebuilt
-    assert(FrameCache.frame("kind-a", dir, "fp1")(fail("rebuilt")) eq a)
-    // a new fingerprint for the dir, under a kind no old entry has
-    val fresh = FrameCache.frame("kind-b", dir, "fp2")(cp(3))
+    assert(FrameCache.frame("kind-a", src)(fail("rebuilt")) eq a)
+    // the source regenerates; a kind no old entry has is requested
+    write("lineitem.parquet", 20)
+    val fresh = FrameCache.frame("kind-b", src)(cp(3))
     assert(pinned(fresh) && pinned(other))
     assert(!pinned(a) && !waves.exists(pinned))
-    assert(FrameCache.value("srcs", dir, "fp2")(2) == 2)
+    assert(FrameCache.value("srcs", src)(2) == 2)
+    // a second source in the same directory keeps its entries…
+    assert(pinned(sibling))
+    assert(FrameCache.frame("kind-t", twin)(fail("rebuilt")) eq sibling)
+    assert(FrameCache.value[String]("model", twin)(fail("retrained")) == "m1")
+    // …until IT regenerates, which drops only its own
+    write("documents.parquet", 20)
+    val sibling2 = FrameCache.frame("kind-t", twin)(cp(9))
+    assert(!pinned(sibling) && pinned(sibling2) && pinned(fresh))
+    assert(FrameCache.value("model", twin)("m2") == "m2")
+    assert(FrameCache.frame("kind-b", src)(fail("rebuilt")) eq fresh)
   }
 }

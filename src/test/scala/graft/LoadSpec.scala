@@ -116,7 +116,7 @@ class LoadSpec extends SparkSpec {
     // valid node append: aligned to store schema, fresh id, unique name
     val newNode = Seq((1999999L, "Customer", "Customer#fresh", 12.5, "BUILDING"))
       .toDF("id", "label", "name", "acctbal", "mktsegment")
-    GraphLoader.appendNodes(spark, out, newNode)
+    GraphLoader.commit(spark, out)(GraphLoader.appendNodes(spark, _, newNode))
     val nodes = storeNodes(out)
     assert(nodes.count() == n0 + 1)
 
@@ -132,49 +132,58 @@ class LoadSpec extends SparkSpec {
       storeEdges(out), GraphLoader.schema).isEmpty)
 
     // valid edge append: both endpoints resolve (new customer → nation 107)
-    GraphLoader.appendEdges(spark, out,
-      Seq((1999999L, 107L, "IN_NATION")).toDF("src", "dst", "label"))
+    GraphLoader.commit(spark, out)(GraphLoader.appendEdges(spark, _,
+      Seq((1999999L, 107L, "IN_NATION")).toDF("src", "dst", "label")))
     assert(storeEdges(out).count() == e0 + 1)
 
     // rejected: id collision with the row just appended
-    intercept[IllegalArgumentException](GraphLoader.appendNodes(spark, out, newNode))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendNodes(spark, _, newNode)))
     // rejected: UNIQUE(Customer.name) violation against existing data
     val existingName = nodes.filter(col("label") === "Customer")
       .orderBy("id").select("name").head.getString(0)
-    intercept[IllegalArgumentException](GraphLoader.appendNodes(spark, out,
-      Seq((1999998L, "Customer", existingName, 0.0, "AUTOMOBILE"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendNodes(spark, _,
+        Seq((1999998L, "Customer", existingName, 0.0, "AUTOMOBILE"))
+          .toDF("id", "label", "name", "acctbal", "mktsegment"))))
     // rejected: dangling edge endpoint
-    intercept[IllegalArgumentException](GraphLoader.appendEdges(spark, out,
-      Seq((777L, 107L, "IN_NATION")).toDF("src", "dst", "label")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendEdges(spark, _,
+        Seq((777L, 107L, "IN_NATION")).toDF("src", "dst", "label"))))
     // rejected: column not in the declared store schema
-    intercept[IllegalArgumentException](GraphLoader.appendNodes(spark, out,
-      Seq((1999997L, "Customer", "x")).toDF("id", "label", "no_such_prop")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendNodes(spark, _,
+        Seq((1999997L, "Customer", "x")).toDF("id", "label", "no_such_prop"))))
     // rejected: undeclared label (the registry governs, not the batch)
-    intercept[IllegalArgumentException](GraphLoader.appendNodes(spark, out,
-      Seq((1999995L, "Phantom", "x", 0.0, "B"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendNodes(spark, _,
+        Seq((1999995L, "Phantom", "x", 0.0, "B"))
+          .toDF("id", "label", "name", "acctbal", "mktsegment"))))
     // rejected: node id inside the edge record-id keyspace — bare-rid
     // dispatch routes ids >= EidFloor to edges, so such a node would be
     // silently unreachable (code-review r9)
-    intercept[IllegalArgumentException](GraphLoader.appendNodes(spark, out,
-      Seq((GraphLoader.EidFloor + 42L, "Customer", "Customer#eidspace", 0.0, "B"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendNodes(spark, _,
+        Seq((GraphLoader.EidFloor + 42L, "Customer", "Customer#eidspace", 0.0, "B"))
+          .toDF("id", "label", "name", "acctbal", "mktsegment"))))
     // rejected: edge record id below the keyspace floor (would dispatch
     // to the NODE path and be unreachable as an edge rid)
-    intercept[IllegalArgumentException](GraphLoader.appendEdges(spark, out,
-      Seq((1999999L, 107L, "IN_NATION", 42L)).toDF("src", "dst", "label", "eid")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendEdges(spark, _,
+        Seq((1999999L, 107L, "IN_NATION", 42L)).toDF("src", "dst", "label", "eid"))))
     // rejected: eid already taken by an existing edge record — one rid
     // must never address two records (code-review r9 #2)
     val takenEid = storeEdges(out).filter(col("eid").isNotNull)
       .select("eid").head.getLong(0)
-    intercept[IllegalArgumentException](GraphLoader.appendEdges(spark, out,
-      Seq((1999999L, 107L, "IN_NATION", takenEid)).toDF("src", "dst", "label", "eid")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendEdges(spark, _,
+        Seq((1999999L, 107L, "IN_NATION", takenEid)).toDF("src", "dst", "label", "eid"))))
     // rejected: duplicate eids within one batch
-    intercept[IllegalArgumentException](GraphLoader.appendEdges(spark, out,
-      Seq((1999999L, 107L, "IN_NATION", GraphLoader.EidFloor + 777777L),
-          (1999996L, 107L, "IN_NATION", GraphLoader.EidFloor + 777777L))
-        .toDF("src", "dst", "label", "eid")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendEdges(spark, _,
+        Seq((1999999L, 107L, "IN_NATION", GraphLoader.EidFloor + 777777L),
+            (1999996L, 107L, "IN_NATION", GraphLoader.EidFloor + 777777L))
+          .toDF("src", "dst", "label", "eid"))))
 
     // every rejection left the store untouched (+2 = the two inserts)
     assert(storeNodes(out).count() == n0 + 2)
@@ -806,8 +815,8 @@ class LoadSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val n = GraphLoader.updateRecords(spark, out, "Order", "vertex",
-        Map("priority" -> "9-TEST"), col("status") === "F")
+      val n = GraphLoader.commit(spark, out)(GraphLoader.updateColumnsReturning(spark, _,
+        "Order", "vertex", Map("priority" -> lit("9-TEST")), col("status") === "F")._1)
       assert(n > 0)
       // listener events drain asynchronously: wait for quiescence
       var last = -1L
@@ -820,19 +829,24 @@ class LoadSpec extends SparkSpec {
       assert(read.get() <= (orderRows * 1.3).toLong,
         s"UPDATE read ${read.get()} records for a $orderRows-row label — more than one scan")
     } finally spark.sparkContext.removeSparkListener(listener)
-    // zero-affected UPDATE leaves no new generation behind
+    // zero-affected UPDATE leaves no new generation behind, and its
+    // transaction staged nothing, so it writes no manifest at all
     val segsBefore = graft.load.Store.readManifest(out).nodes("Order")
-    assert(GraphLoader.updateRecords(spark, out, "Order", "vertex",
-      Map("priority" -> "x"), col("status") === "NOPE") == 0)
+    val manifestBefore = Files.readAllBytes(graft.load.Store.manifestPath(out))
+    assert(GraphLoader.commit(spark, out)(GraphLoader.updateColumnsReturning(spark, _,
+      "Order", "vertex", Map("priority" -> lit("x")), col("status") === "NOPE")._1) == 0)
     assert(graft.load.Store.readManifest(out).nodes("Order") == segsBefore)
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(graft.load.Store.manifestPath(out)), manifestBefore),
+      "a zero-affected UPDATE rewrote manifest.json")
   }
 
   test("a foreign serving lease fences generation GC (cross-process sweep race)") {
     val out = Files.createTempDirectory("graftlease").toString
     GraphLoader.writeGraph(spark, sfDir, out)
     // supersede Order's generation so a sweep has something to collect
-    GraphLoader.updateRecords(spark, out, "Order", "vertex",
-      Map("priority" -> "5-LOW"), col("status") === "F")
+    GraphLoader.commit(spark, out)(GraphLoader.updateColumnsReturning(spark, _,
+      "Order", "vertex", Map("priority" -> lit("5-LOW")), col("status") === "F"))
     import scala.jdk.CollectionConverters._
     def orderGens(): Set[String] = {
       val s = Files.list(Path.of(out, "nodes", "Order"))
@@ -1377,12 +1391,12 @@ class LoadSpec extends SparkSpec {
     // interleaved sweep (zero-affected UPDATE, snapshot retirement)
     // must not GC the staged gens the in-memory manifest references
     val txn = GraphLoader.beginTxn(out)
-    GraphLoader.appendNodes(spark, out,
+    GraphLoader.appendNodes(spark, txn,
       Seq((1994001L, "Customer", "Customer#staged1", 1.0, "BUILDING"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment"), Some(txn))
-    GraphLoader.appendNodes(spark, out,
+        .toDF("id", "label", "name", "acctbal", "mktsegment"))
+    GraphLoader.appendNodes(spark, txn,
       Seq((1994002L, "Customer", "Customer#staged2", 2.0, "BUILDING"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment"), Some(txn))
+        .toDF("id", "label", "name", "acctbal", "mktsegment"))
     // the hostile interleavings: an aggressive full sweep AND the
     // keep-1 sweep a zero-affected DML runs
     graft.load.Store.sweep(out, keepPerLabel = 0)
@@ -1397,9 +1411,9 @@ class LoadSpec extends SparkSpec {
     assert(storeNodes(out).count() == n0 + 2)
     // abort releases pins too (fresh txn, staged gen, abort, sweep)
     val txn2 = GraphLoader.beginTxn(out)
-    GraphLoader.appendNodes(spark, out,
+    GraphLoader.appendNodes(spark, txn2,
       Seq((1994003L, "Customer", "Customer#staged3", 3.0, "BUILDING"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment"), Some(txn2))
+        .toDF("id", "label", "name", "acctbal", "mktsegment"))
     txn2.abort()
     graft.load.Store.sweep(out, keepPerLabel = 0)
     assert(storeNodes(out).filter(col("id") === 1994003L).isEmpty)
@@ -1415,9 +1429,9 @@ class LoadSpec extends SparkSpec {
       "UPDATE Customer SET acctbal = acctbal WHERE id = 1000001") == 1)
     // …and stage a PINNED session gen on the same label (sorts newest)
     val txn = GraphLoader.beginTxn(out)
-    GraphLoader.appendNodes(spark, out,
+    GraphLoader.appendNodes(spark, txn,
       Seq((1993001L, "Customer", "Customer#grace", 1.0, "BUILDING"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment"), Some(txn))
+        .toDF("id", "label", "name", "acctbal", "mktsegment"))
     // keep-1 sweep: the grace slot must go to the REAL newest
     // superseded gen (g0), not be eaten by the undeletable pinned gen
     graft.load.Store.sweep(out, keepPerLabel = 1)
@@ -1699,9 +1713,9 @@ class LoadSpec extends SparkSpec {
       .toSeq == Seq((1000001L, 107L, "IN_NATION")))
     // a batch without eids gets consecutive ids; the mark advances by
     // exactly the batch size
-    GraphLoader.appendEdges(spark, out,
+    GraphLoader.commit(spark, out)(GraphLoader.appendEdges(spark, _,
       Seq((1000002L, 107L, "IN_NATION"), (1000003L, 107L, "IN_NATION"))
-        .toDF("src", "dst", "label"))
+        .toDF("src", "dst", "label")))
     assert(graft.load.Store.readManifest(out).eidNext == base + 3)
     // eids stay unique across bulk + DML append + compaction
     def assertUniqueEids(): Unit = {
@@ -1721,9 +1735,10 @@ class LoadSpec extends SparkSpec {
       hit.head.getLong(1) == 107L)
     // an EXPLICIT eid inside the allocator-owned keyspace is refused —
     // it could silently collide with a future allocation
-    intercept[IllegalArgumentException](GraphLoader.appendEdges(spark, out,
-      Seq((1000004L, 107L, "IN_NATION", GraphLoader.EidDmlBase + 500L))
-        .toDF("src", "dst", "label", "eid")))
+    intercept[IllegalArgumentException](GraphLoader.commit(spark, out)(
+      GraphLoader.appendEdges(spark, _,
+        Seq((1000004L, 107L, "IN_NATION", GraphLoader.EidDmlBase + 500L))
+          .toDF("src", "dst", "label", "eid"))))
     // …and the session-transaction path allocates through the staged
     // manifest: two statements in one batch see consecutive ids, one
     // atomic commit publishes both
@@ -1768,9 +1783,9 @@ class LoadSpec extends SparkSpec {
     IndexKeys.stamp(ivfDir, out)
     IndexKeys.requireFresh(ivfDir, out) // no throw
     // ONE DML append bumps the manifest seq → EVERY fingerprint moves
-    GraphLoader.appendNodes(spark, out,
+    GraphLoader.commit(spark, out)(GraphLoader.appendNodes(spark, _,
       Seq((2999999L, "Customer", "Customer#idxkeys", 1.0, "BUILDING"))
-        .toDF("id", "label", "name", "acctbal", "mktsegment"))
+        .toDF("id", "label", "name", "acctbal", "mktsegment")))
     val fp1 = IndexKeys.fingerprint(out)
     assert(fp1 != fp0 && fp1 == s"seq${graft.load.Store.readManifest(out).seq}")
     // stale probes refuse LOUDLY, naming the stale generation on disk
@@ -1798,5 +1813,35 @@ class LoadSpec extends SparkSpec {
     val want = if (Files.isDirectory(raw)) Checksum.pseudoHashDir(raw)
                else Checksum.pseudoHash(raw)
     assert(IndexKeys.fingerprint(raw.toString) == want)
+  }
+
+  test("one commit path for record writes") {
+    import scala.jdk.CollectionConverters._
+    // no optional transaction and no per-statement refusal anywhere:
+    // every record sink takes the StoreTxn it stages into
+    val walk = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if Seq("Option[StoreTxn]", "Option[graft.load.StoreTxn]", "noTxn(")
+            .exists(line.contains) => s"$p:${i + 1}"
+      })
+      .toList
+    finally walk.close()
+    assert(hits.isEmpty, hits.mkString(", "))
+    // no record sink publishes on its own: StoreTxn.commit is the only
+    // way a record write reaches manifest.json
+    val loader = Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/load/GraphLoader.scala"))
+    val topLevelDef = """\n  (?:private(?:\[\w+\])? )?def """.r
+    Seq("appendBatch", "appendNodes", "appendEdges", "updateColumnsReturning",
+        "deleteRecords", "rewriteLabelPartition").foreach { sink =>
+      val start = loader.indexOf(s"def $sink(")
+      assert(start >= 0, s"record sink $sink not found")
+      val end = topLevelDef.findFirstMatchIn(loader.substring(start))
+        .map(start + _.start).getOrElse(loader.length)
+      assert(!loader.substring(start, end).contains("writeManifest"),
+        s"record sink $sink writes manifest.json itself")
+    }
   }
 }
