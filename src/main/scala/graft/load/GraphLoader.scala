@@ -207,17 +207,14 @@ object GraphLoader {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     // source fixtures are immutable per dir — route through the
-    // session-scoped handle cache (r17: every nodes()/edges() call
+    // session-scoped handle memo (r17: every nodes()/edges() call
     // re-listed and re-footer-read up to 6 parquet tables of pure
-    // driver-side construction cost). Store generations are mutable
-    // and read through Store.readParquet, never here.
+    // driver-side construction cost). Store generations go through
+    // the same memo via Store.readLabel / Store.readFt.
     graft.queries.Qh.t(spark, dir, name)
 
-  /** All node sets, unioned by name with per-label sparse columns —
-    * mirrors the reference's per-label insert loops
-    * (`ArcadeDBService.java:141-164`) as one declarative plan. */
   /** Session-scoped handle memo for the nodes/edges union frames —
-    * same discipline as [[graft.queries.Qh.t]]'s table-handle cache
+    * same discipline as [[Store.readGen]]'s table-handle memo
     * (r17): Dataset construction runs Catalyst ANALYSIS eagerly, and
     * the 6-branch unions below are rebuilt and re-analyzed by every
     * graph-surface query; the memoized value is the resolved handle,
@@ -230,6 +227,9 @@ object GraphLoader {
     frameCache.getOrElseUpdate((spark, dir, kind), build)
   }
 
+  /** All node sets, unioned by name with per-label sparse columns —
+    * mirrors the reference's per-label insert loops
+    * (`ArcadeDBService.java:141-164`) as one declarative plan. */
   def nodes(spark: SparkSession, dir: String): DataFrame =
     memoFrame(spark, dir, "nodes") { nodesUncached(spark, dir) }
 
@@ -586,7 +586,7 @@ object GraphLoader {
       .filter(ix => !append || m0.ft.contains((entity, label, ix.property)))
     if (applicable.isEmpty) return (m, Nil)
     val dirs = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-    val written = spark.read.parquet(dataGen.toString)
+    val written = Store.readGen(spark, dataGen.toString)
     applicable.foreach { ix =>
       // declared properties always reach written gens (append aligns
       // to the widened schema; rewrites read the widened frame) — a
@@ -934,7 +934,7 @@ object GraphLoader {
     // would otherwise occupy a later sweep's grace slot
     try {
       val target = if (kind == "vertex") "node" else "edge"
-      val written = spark.read.parquet(genPath.toString)
+      val written = Store.readGen(spark, genPath.toString)
       gs.indexes.filter(ix => ix.unique && ix.isBuildable &&
           ix.label == label && ix.target == target &&
           written.columns.contains(ix.property)).foreach { ix =>

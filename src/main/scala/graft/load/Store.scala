@@ -38,6 +38,16 @@ import scala.jdk.CollectionConverters._
   * 100 TB deployment — no data renames at all, just one small-file
   * atomic swap per commit.
   *
+  * Because a generation directory never changes after its write, the
+  * DataFrame that reads it never goes stale either: [[readGen]] opens
+  * each one once per session and hands the same resolved handle (file
+  * listing and parquet schema, never data) to every later reader. A
+  * served snapshot swap therefore opens only the generations its
+  * commit created, and those the commit's own read-back has usually
+  * opened already. The handle is dropped when [[deleteRecursively]]
+  * removes its directory, and is not served once the directory is gone
+  * by any other route, so a lost generation still fails its reader.
+  *
   * Superseded generations are garbage-collected by [[sweep]]:
   * in-process readers pin their generations via [[GenerationPins]]
   * (the HTTP server pins per served snapshot and sweeps once a retired
@@ -401,12 +411,50 @@ object Store {
     readEntityAt(spark, outDir, entity, m)
   }
 
+  /** Session-scoped handles of write-once parquet paths, keyed on the
+    * canonical path. */
+  private val genHandles =
+    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
+
+  /** The parquet frame of one write-once path: a data or postings
+    * generation directory, or a source fixture file
+    * ([[graft.queries.Qh.t]]). This is the one place such a path turns
+    * into a DataFrame. Opening one lists its files and runs a
+    * schema-inference job, so the resolved handle is memoized per
+    * (session, canonical path); every execution still scans the files.
+    * A handle is served only while its path exists: a path lost outside
+    * this object is opened afresh and fails with `PATH_NOT_FOUND`.
+    * [[deleteRecursively]] drops the handles under the tree it removes,
+    * a miss drops those of every vanished path, and any access drops
+    * those of stopped sessions. The handle is built outside the lock;
+    * a racing builder's handle wins. */
+  def readGen(spark: SparkSession, dir: String): DataFrame = {
+    val key = (spark, canon(Paths.get(dir)))
+    def exists(p: String) = Files.exists(Paths.get(p))
+    genHandles.synchronized {
+      genHandles.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      genHandles.get(key).filter(_ => exists(key._2))
+    }.getOrElse {
+      val df = spark.read.parquet(dir)
+      genHandles.synchronized {
+        genHandles.filterInPlace { case ((_, p), _) => exists(p) }
+        genHandles.getOrElseUpdate(key, df)
+      }
+    }
+  }
+
+  /** Whether [[readGen]] holds a handle for `dir` in any session. */
+  private[graft] def genMemoized(dir: String): Boolean = {
+    val c = canon(Paths.get(dir))
+    genHandles.synchronized(genHandles.keys.exists(_._2 == c))
+  }
+
   /** All segments of ONE label, label column elided — the rewrite /
     * probe-side reader. */
   def readLabel(spark: SparkSession, outDir: String, entity: String,
       label: String, m: Manifest): Option[DataFrame] =
     m.gens(entity).get(label).filter(_.nonEmpty).map { segs =>
-      segs.map(g => spark.read.parquet(genDir(outDir, entity, label, g).toString))
+      segs.map(g => readGen(spark, genDir(outDir, entity, label, g).toString))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
 
@@ -453,13 +501,23 @@ object Store {
   def readFt(spark: SparkSession, outDir: String, entity: String, label: String,
       prop: String, m: Manifest): Option[DataFrame] =
     m.ft.get((entity, label, prop)).filter(_.nonEmpty).map { segs =>
-      segs.map(g => spark.read.parquet(ftDir(outDir, entity, label, prop, g).toString))
+      segs.map(g => readGen(spark, ftDir(outDir, entity, label, prop, g).toString))
         .reduce(_.unionByName(_))
     }
 
+  /** Delete the tree at `p` and drop every [[readGen]] handle under it. */
   def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    try {
+      if (Files.exists(p)) {
+        val walk = Files.walk(p)
+        try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+        finally walk.close()
+      }
+    } finally {
+      val c = canon(p)
+      genHandles.synchronized {
+        genHandles.filterInPlace { case ((_, k), _) => k != c && !k.startsWith(c + "/") }
+      }
     }
 
   /** Best-effort recursive delete for GC/cleanup paths. `Files.walk`'s

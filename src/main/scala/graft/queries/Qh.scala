@@ -32,30 +32,20 @@ final case class Q(
   */
 object Qh {
 
-  /** Session-scoped TABLE-HANDLE cache (r17, guide §6: file listing is
-    * per-relation driver work): `spark.read.parquet` builds a fresh
-    * relation per call — re-listing the directory and re-reading
-    * parquet footers for the schema — and every declared query rebuilds
-    * its inputs through this helper, so the suite paid that
-    * driver-side catalog cost per query per pass (BASELINE.md #101:
-    * 0.3–0.8 s of pure CONSTRUCTION time on multi-table queries). The cached
-    * value is the RESOLVED HANDLE (logical plan + schema), never data:
-    * every execution still scans the parquet files, so nothing is
-    * precomputed across runs — this is what a real engine's catalog
-    * does. Keyed on the session (a handle is bound to its
-    * SparkContext); dead-session entries evict on access (the
-    * coPurchase-cache discipline). Source fixtures are immutable per
-    * dir; mutable store layouts read through [[graft.load.Store]], not
-    * here. */
-  private val tableCache =
-    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
+  /** One source fixture table, through the session-scoped handle memo
+    * of [[graft.load.Store.readGen]] (r17, guide §6: file listing is
+    * per-relation driver work). Reading parquet builds a fresh relation
+    * per call — re-listing the path and re-reading parquet footers for
+    * the schema — and every declared query rebuilds its inputs through
+    * this helper, so the suite paid that driver-side catalog cost per
+    * query per pass (BASELINE.md #101: 0.3–0.8 s of pure CONSTRUCTION
+    * time on multi-table queries). The memoized value is the RESOLVED
+    * HANDLE (logical plan + schema), never data: every execution still
+    * scans the parquet files, so nothing is precomputed across runs —
+    * this is what a real engine's catalog does. Source fixtures are
+    * write-once per dir, like store generations. */
   def t(s: SparkSession, dir: String, n: String): DataFrame =
-    tableCache.synchronized {
-      tableCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      tableCache.getOrElseUpdate((s, s"$dir/$n.parquet"),
-        s.read.parquet(s"$dir/$n.parquet"))
-    }
+    graft.load.Store.readGen(s, s"$dir/$n.parquet")
 
   /** events with `ts` restored to a (microsecond) timestamp: the parquet
     * carries TIMESTAMP(NANOS), which Spark reads as long ns under

@@ -415,6 +415,80 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("a served commit opens only the generations it wrote: reopen and UPDATE swap run no Spark job") {
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graftreopen").toString
+    Main.create(spark, sfDir, out)
+    val sc = spark.sparkContext
+    // every job start in bus order, tagged with this thread-local
+    // property when the submitting thread set it; marker jobs bracket a
+    // step, so the jobs between two markers are the step's, on any thread
+    val tag = "graft.test.step"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(j.properties).flatMap(p => Option(p.getProperty(tag))).getOrElse(""))
+        ()
+      }
+    }
+    def tagged[T](t: String)(f: => T): T = {
+      sc.setLocalProperty(tag, t)
+      try f finally sc.setLocalProperty(tag, null)
+    }
+    val marks = new java.util.concurrent.atomic.AtomicInteger
+    def mark(): String = {
+      val m = s"mark-${marks.incrementAndGet()}"
+      tagged(m)(sc.parallelize(1 to 2, 1).count())
+      m
+    }
+    def jobsOf(f: => Unit): Seq[String] = {
+      val a = mark(); f; val b = mark()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains(b) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val all = seen.asScala.toSeq
+      all.slice(all.indexOf(a) + 1, all.indexOf(b))
+    }
+    sc.addSparkListener(listener)
+    // the served snapshot's reload tags its jobs, so a command's swap
+    // cost reads apart from the command's own jobs
+    val g = Main.serve(spark, out, None)
+    val srv = graft.server.QueryServer.start(spark, 0, Some(g),
+      Some(graft.server.QueryServer.StoreContext(out,
+        () => tagged("swap")(Main.serve(spark, out, None)))))
+    try {
+      // every generation of an unchanged manifest is already open
+      assert(jobsOf(Main.serve(spark, out, None)).isEmpty)
+      def command(cmd: String): Unit = {
+        val conn = new java.net.URL(s"http://127.0.0.1:${srv.port}/api/v1/command/graft")
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST"); conn.setDoOutput(true)
+        conn.getOutputStream.write(
+          s"""{"language":"sql","command":"$cmd"}""".getBytes("UTF-8"))
+        val code = conn.getResponseCode
+        val is = if (code < 400) conn.getInputStream else conn.getErrorStream
+        val body = new String(is.readAllBytes(), "UTF-8")
+        assert(code == 200 && body.contains("\"count\":1"), s"$cmd: $body")
+      }
+      // the UPDATE's UNIQUE read-back opened the generation it wrote, so
+      // the snapshot swap opens nothing
+      command("UPDATE Customer SET mktsegment = 'X' WHERE id = 1000042") // warm-up
+      val upd = jobsOf(command("UPDATE Customer SET mktsegment = 'Y' WHERE id = 1000043"))
+      // the rewrite and its UNIQUE(Customer.name) re-check run 4 jobs;
+      // before the handle memo the commit ran 17, 12 of them the swap
+      // re-inferring every generation's parquet schema
+      assert(upd.count(_ == "swap") == 0, upd)
+      assert(upd.size == 4, upd)
+      // a label with no UNIQUE index but a full-text one: the read-back
+      // still opens the rewritten data generation, so the swap opens at
+      // most the new postings generation
+      val part = jobsOf(command("UPDATE Part SET brand = 'Brand#X' WHERE id = 3000001"))
+      assert(part.count(_ == "swap") <= 1, part)
+    } finally {
+      sc.removeSparkListener(listener)
+      srv.stop()
+    }
+  }
+
   test("HTTP auth: query and command routes require the token; probes stay open") {
     val out = Files.createTempDirectory("graftauth").toString
     Main.create(spark, sfDir, out)

@@ -15,6 +15,20 @@ class LoadSpec extends SparkSpec {
   private def storeNodes(out: String) = graft.load.Store.readEntity(spark, out, "nodes")
   private def storeEdges(out: String) = graft.load.Store.readEntity(spark, out, "edges")
 
+  /** The store opened through this session's generation handles holds
+    * exactly the rows of an open with none: a new session starts with
+    * an empty handle memo, as a fresh JVM does. */
+  private def assertOpensFresh(out: String): Unit = {
+    def rows(g: graft.query.PropertyGraph) =
+      (g.nodes.collect().map(_.toString).sorted.toSeq,
+        g.edges.collect().map(_.toString).sorted.toSeq)
+    val fresh = spark.newSession()
+    val (memoNodes, memoEdges) = rows(GraphLoader.openGraph(spark, out))
+    val (freshNodes, freshEdges) = rows(GraphLoader.openGraph(fresh, out))
+    assert(memoNodes == freshNodes)
+    assert(memoEdges == freshEdges)
+  }
+
   test("A17: pseudo-hash is md5(mtime + \"__\" + size) — HashUtils.java:23 format") {
     val f = Files.createTempFile("graft", ".bin")
     Files.write(f, Array[Byte](1, 2, 3))
@@ -130,6 +144,7 @@ class LoadSpec extends SparkSpec {
     // unique_validation still green after the append (the verdict's gate)
     assert(GraphLoader.validateUnique(nodes,
       storeEdges(out), GraphLoader.schema).isEmpty)
+    assertOpensFresh(out)
 
     // valid edge append: both endpoints resolve (new customer → nation 107)
     GraphLoader.commit(spark, out)(GraphLoader.appendEdges(spark, _,
@@ -211,6 +226,7 @@ class LoadSpec extends SparkSpec {
       Dml.execute(spark, out, "UPDATE Customer SET name = 'CLONE'"))
     assert(storeNodes(out)
       .filter(col("name") === "CLONE").count() == 0)
+    assertOpensFresh(out)
 
     // DELETE of a referenced vertex is rejected (A13 dangling mirror);
     // deleting its edges first makes the vertex delete land
@@ -220,6 +236,7 @@ class LoadSpec extends SparkSpec {
     Dml.execute(spark, out, "DELETE FROM PLACED WHERE src = 1000042")
     assert(Dml.execute(spark, out, "DELETE FROM Customer WHERE id = 1000042") == 1)
     assert(storeNodes(out).count() == n0 - 1)
+    assertOpensFresh(out)
 
     // edge-property update through the dialect predicate grammar
     val eUpd = Dml.execute(spark, out,
@@ -548,6 +565,7 @@ class LoadSpec extends SparkSpec {
     import graft.server.Dml
     val before = storeNodes(out).filter(col("label") === "Customer").count()
     val genBefore = Store.readManifest(out).nodes("Customer").head
+    assert(Store.genMemoized(s"$out/nodes/Customer/$genBefore"))
 
     // simulate a writer that died after writing its new generation but
     // BEFORE the manifest commit: an orphan gen dir plus a manifest
@@ -569,10 +587,17 @@ class LoadSpec extends SparkSpec {
     assert(after.count() == before)
     assert(after.filter(col("id") === 1000042L).select("mktsegment")
       .head.getString(0) == "RECOVERED")
-    // the superseded generation is gone, the live one remains
+    // the superseded generation is gone, the live one remains, and the
+    // handle memo forgot the swept one
     assert(!Files.exists(Path.of(s"$out/nodes/Customer/$genBefore")))
-    assert(Files.isDirectory(Path.of(
-      s"$out/nodes/Customer/${Store.readManifest(out).nodes("Customer").head}")))
+    assert(!Store.genMemoized(s"$out/nodes/Customer/$genBefore"))
+    val live = s"$out/nodes/Customer/${Store.readManifest(out).nodes("Customer").head}"
+    assert(Files.isDirectory(Path.of(live)))
+    // handles are per session: a new session never gets another's
+    assert(Store.readGen(spark, live) eq Store.readGen(spark, live))
+    val other = spark.newSession()
+    assert(Store.readGen(other, live).sparkSession eq other)
+    assert(GraphLoader.openGraph(other, out).nodes.sparkSession eq other)
   }
 
   test("pinned generations survive sweeps and stay readable through a rewrite") {
@@ -717,6 +742,7 @@ class LoadSpec extends SparkSpec {
       .filter(col("label") === "Customer").count()
     assert(GraphLoader.compactStore(spark, out) >= 1)
     assert(files() <= 4, s"still ${files()} files after compaction")
+    assertOpensFresh(out)
     assert(storeNodes(out)
       .filter(col("label") === "Customer").count() == before)
     // idempotent: a second pass finds nothing fragmented
@@ -762,6 +788,7 @@ class LoadSpec extends SparkSpec {
       val got = storeNodes(out).filter(col("label") === "Customer")
         .filter(col("id") >= 1998100 && col("id") < 1998110).count()
       assert(got == 10) // compaction lost nothing
+      assertOpensFresh(out)
     } finally sys.props.remove("graft.autoCompactSegments")
   }
 
@@ -1202,11 +1229,20 @@ class LoadSpec extends SparkSpec {
       graft.server.Dml.execute(spark, out, s"EXPORT DATABASE '$dest'"))
     assert(e2.getMessage.contains("not empty"))
     // CHECK flags damage: delete a referenced generation directory
-    // out from under the manifest → missing_generation issues
+    // out from under the manifest → missing_generation issues. Plain
+    // Files calls bypass the Store's handle memo: the open handle must
+    // not outlive the directory, so openGraph fails on the lost path
+    // exactly as a first open would
     val genPath = graft.load.Store.genPathsOf(out,
       graft.load.Store.readManifest(out))
       .find(_.contains("/nodes/Region/")).get
-    graft.load.Store.tryDeleteRecursively(Paths.get(genPath))
+    assert(graft.load.Store.genMemoized(genPath))
+    val walk = Files.walk(Paths.get(genPath))
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally walk.close()
+    val lost = intercept[org.apache.spark.sql.AnalysisException](
+      GraphLoader.openGraph(spark, out))
+    assert(lost.getCondition == "PATH_NOT_FOUND", lost.getMessage)
     val r1 = graft.server.Dml.executeReturning(spark, out, "CHECK DATABASE")
     assert(r1.count >= 1)
     assert(r1.returned.get.exists(_.contains("\"check\":\"missing_generation\"")))
@@ -1843,5 +1879,31 @@ class LoadSpec extends SparkSpec {
       assert(!loader.substring(start, end).contains("writeManifest"),
         s"record sink $sink writes manifest.json itself")
     }
+  }
+
+  test("store generations become DataFrames in one place") {
+    import scala.jdk.CollectionConverters._
+    // under load/ and server/, parquet is read only by Store.readGen
+    // (the write-once handle memo) and by IndexKeys, whose artifacts
+    // are fingerprint-gated and rewritten in place
+    val hits = Seq("src/main/scala/graft/load", "src/main/scala/graft/server").flatMap { d =>
+      val walk = Files.walk(java.nio.file.Paths.get(d))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.filterNot(_.getFileName.toString == "IndexKeys.scala").flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("read.parquet(") => (p, i)
+      }
+    }
+    val store = Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/load/Store.scala")).asScala
+    val start = store.indexWhere(_.contains("def readGen("))
+    assert(start >= 0, "Store.readGen not found")
+    val end = store.indexWhere(_.startsWith("  def "), start + 1)
+    val stray = hits.filterNot { case (p, i) =>
+      p.getFileName.toString == "Store.scala" && i > start && i < end
+    }
+    assert(hits.nonEmpty && stray.isEmpty,
+      stray.map { case (p, i) => s"$p:${i + 1}" }.mkString(", "))
   }
 }
